@@ -6,8 +6,11 @@ map-side combine is built explicitly (SURVEY.md §3.4):
     phase 1 (mapInArrow):  per-partition, per-group vectorized sketch build —
                            one output row per (partition, group), each a
                            BinaryType sketch (16 KB dense / smaller sparse)
-    phase 2 (shuffle):     groupBy(group_cols).applyInPandas — associative
-                           merge of the tiny partials, then finalize
+    phase 2 (shuffle):     repartition(group_cols).sortWithinPartitions
+                           (group_cols).mapInArrow — one streamed pass per
+                           shuffle partition cuts the sorted partials into
+                           groups, merges each group in ONE merge_many call,
+                           then finalizes (global: repartition(1), no sort)
 
 The shuffle therefore moves #partitions x #groups sketch rows, never data
 rows — this is what makes the pipeline scan-bound and embarrassingly parallel
@@ -28,6 +31,7 @@ from typing import Any
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -64,13 +68,26 @@ class SketchAggregator:
     finalize_fields: list[T.StructField] = []
 
 
-def _isna(v) -> bool:
-    import pandas as pd
+_NAN = float("nan")
+# groups per output RecordBatch of the phase-2 merge
+_FLUSH_GROUPS = 4096
 
-    try:
-        return v is None or bool(pd.isna(v))
-    except (TypeError, ValueError):
-        return False
+
+def _canon(v):
+    """Python group-key value with every NaN mapped to ONE float object:
+    Spark groups all NaNs together, and a shared object makes NaN keys
+    compare and hash equal inside tuples (NaN != NaN otherwise)."""
+    return _NAN if isinstance(v, float) and v != v else v
+
+
+def _key_codes(cols: list[pa.Array]) -> tuple[list[np.ndarray], list[list]]:
+    """Per-column int64 codes and code -> key value lists. NULL is a key
+    of its own, distinct from NaN; all NaNs share one code."""
+    encs = [pc.dictionary_encode(c, null_encoding="encode") for c in cols]
+    return (
+        [e.indices.to_numpy().astype(np.int64) for e in encs],
+        [[_canon(v) for v in e.dictionary.to_pylist()] for e in encs],
+    )
 
 
 def _group_field(df: DataFrame, name: str) -> T.StructField:
@@ -78,6 +95,17 @@ def _group_field(df: DataFrame, name: str) -> T.StructField:
         if f.name == name:
             return f
     raise ValueError(f"group column {name!r} not in schema {df.schema.simpleString()}")
+
+
+def _group_col(df: DataFrame, name: str) -> Column:
+    """Group column with -0.0 folded into 0.0 for float keys, as Spark's
+    groupBy normalizes them (NaNs need no fold: every NaN encodes to one
+    code in ``_key_codes``)."""
+    c = F.col(name)
+    dt = _group_field(df, name).dataType
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        return F.when(c == 0, F.lit(0.0).cast(dt)).otherwise(c).alias(name)
+    return c
 
 
 def sketch_partials(
@@ -95,7 +123,7 @@ def sketch_partials(
     prepared = agg.prepare_columns(df, value_cols)
     value_names = [f"__v{i}" for i in range(len(prepared))]
     proj = df.select(
-        *[F.col(c) for c in group_cols],
+        *[_group_col(df, c) for c in group_cols],
         *[c.alias(n) for c, n in zip(prepared, value_names)],
     )
 
@@ -127,23 +155,18 @@ def sketch_partials(
                 codes = np.zeros(batch.num_rows, dtype=np.int64)
                 uniques: list[tuple] = [(_GLOBAL_KEY,)]
             else:
-                import pandas as pd
-
-                key_cols = [
-                    batch.column(i).to_pandas() for i in range(n_groups_cols)
-                ]
+                col_codes, col_uniqs = _key_codes(
+                    [batch.column(i) for i in range(n_groups_cols)]
+                )
                 if n_groups_cols == 1:
-                    codes_arr, uniq = pd.factorize(key_cols[0], use_na_sentinel=False)
-                    uniques = [(u,) for u in uniq]
+                    codes = col_codes[0]
+                    uniques = [(u,) for u in col_uniqs[0]]
                 else:
+                    import pandas as pd
+
                     # radix-combine per-column codes, then factorize the
                     # int64 keys — O(n) hash path; MultiIndex.factorize
                     # materializes python tuples and is ~10x slower
-                    col_codes, col_uniqs = [], []
-                    for kc in key_cols:
-                        c, u = pd.factorize(kc, use_na_sentinel=False)
-                        col_codes.append(c.astype(np.int64))
-                        col_uniqs.append(u)
                     combined = col_codes[0]
                     for c, u in zip(col_codes[1:], col_uniqs[1:]):
                         combined = combined * np.int64(len(u)) + c
@@ -156,7 +179,7 @@ def sketch_partials(
                               for j in range(n_groups_cols))
                         for fp in first_pos
                     ]
-                codes = codes_arr.astype(np.int64)
+                    codes = codes_arr.astype(np.int64)
             sketches = build_grouped(codes, values, len(uniques))
             counts = np.bincount(codes, minlength=len(uniques))
             for gi, (key, sk) in enumerate(zip(uniques, sketches)):
@@ -168,8 +191,9 @@ def sketch_partials(
         keys = list(acc.keys())
         arrays = []
         for i in range(n_groups_cols):
-            col_vals = [None if _isna(k[i]) else k[i] for k in keys]
-            arrays.append(pa.array(col_vals, type=out_arrow.field(i).type))
+            arrays.append(
+                pa.array([k[i] for k in keys], type=out_arrow.field(i).type)
+            )
         arrays.append(
             pa.array([acc[k] for k in keys], type=pa.binary())
         )
@@ -188,45 +212,88 @@ def sketch_agg(
     finalize: bool = True,
 ) -> DataFrame:
     """Full two-phase aggregation. Returns group_cols + finalized fields
-    (or group_cols + the merged sketch when finalize=False)."""
+    (or group_cols + the merged sketch when finalize=False).
+
+    Phase 2 hash-partitions the partials on the group keys and sorts each
+    shuffle partition by them (global: one partition, no sort); ONE
+    mapInArrow pass per partition then streams the sorted batches, cuts
+    groups at key changes (a group may span batches) and merges each
+    group's partials in a single ``merge_many`` call — the same multiset
+    in one call as a per-group merge, so the bytes do not depend on the
+    batching. Python holds one group's partials at a time."""
     group_cols = list(group_cols or [])
     partials = sketch_partials(df, value_cols, agg, group_cols)
-
-    dummy = not group_cols
-    if dummy:
-        partials = partials.withColumn("__g", F.lit(1))
-        key_cols = ["__g"]
-    else:
-        key_cols = group_cols
 
     if finalize:
         tail_fields = list(agg.finalize_fields)
     else:
         tail_fields = [T.StructField(SKETCH_COL, T.BinaryType(), False)]
-    out_schema = T.StructType(
-        [_group_field(partials, c) for c in key_cols] + tail_fields
+    out_fields = [_group_field(partials, c) for c in group_cols] + tail_fields
+    out_arrow = pa.schema(
+        [pa.field(f.name, _to_arrow(f.dataType)) for f in out_fields]
     )
     merge_many = agg.merge_many
     fin = agg.finalize
     tail_names = [f.name for f in tail_fields]
+    n_keys = len(group_cols)
 
-    def merge_group(pdf):
-        import pandas as pd
+    def merge_sorted(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        rows: list[tuple] = []
+        key: tuple | None = None  # key of the open group
+        pending: list[bytes] = []  # its partials so far
 
-        merged = merge_many(list(pdf[SKETCH_COL]))
-        row = {c: [pdf[c].iloc[0]] for c in key_cols}
-        if finalize:
-            vals = fin(merged)
-            for n in tail_names:
-                row[n] = [vals[n]]
-        else:
-            row[SKETCH_COL] = [merged]
-        return pd.DataFrame(row)
+        def close_group() -> None:
+            merged = merge_many(pending)
+            if finalize:
+                vals = fin(merged)
+                rows.append(key + tuple(vals[n] for n in tail_names))
+            else:
+                rows.append(key + (merged,))
 
-    out = partials.groupBy(*key_cols).applyInPandas(merge_group, out_schema)
-    if dummy:
-        out = out.drop("__g")
-    return out
+        def flush() -> pa.RecordBatch:
+            cols = list(zip(*rows))
+            rows.clear()
+            return pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, out_arrow)],
+                schema=out_arrow,
+            )
+
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            sketches = batch.column(n_keys).to_pylist()
+            col_codes, col_uniqs = _key_codes(
+                [batch.column(i) for i in range(n_keys)]
+            )
+            # the input is sorted by key: a group starts where any key
+            # column's code changes (row 0 may continue the open group)
+            new = np.zeros(n, dtype=bool)
+            new[0] = True
+            for c in col_codes:
+                new[1:] |= c[1:] != c[:-1]
+            starts = np.flatnonzero(new).tolist()
+            for s, e in zip(starts, starts[1:] + [n]):
+                k = tuple(u[c[s]] for c, u in zip(col_codes, col_uniqs))
+                if k != key:
+                    if pending:
+                        close_group()
+                        if len(rows) >= _FLUSH_GROUPS:
+                            yield flush()
+                    key, pending = k, []
+                pending.extend(sketches[s:e])
+        if pending:
+            close_group()
+        if rows:
+            yield flush()
+
+    if group_cols:
+        shuffled = partials.repartition(*group_cols).sortWithinPartitions(
+            *group_cols
+        )
+    else:
+        shuffled = partials.repartition(1)
+    return shuffled.mapInArrow(merge_sorted, T.StructType(out_fields))
 
 
 def _to_arrow(dt: T.DataType) -> pa.DataType:

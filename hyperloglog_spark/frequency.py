@@ -105,7 +105,7 @@ class CmsAggregator(SketchAggregator):
     def prepare_columns(self, df: DataFrame, cols: list[str]):
         prepared = [_hash_expr(cols, self.hashing)]
         if self.weight_col is not None:
-            prepared.append(F.col(self.weight_col).cast("long"))
+            prepared.append(_int_weight_expr(self.weight_col))
         return prepared
 
     def build_grouped(self, codes, values, n_groups) -> list[bytes]:
@@ -402,7 +402,7 @@ def cms_topk_shards(
     src = _drop_null_rows(df, [col])
     col_field = next(f for f in src.schema.fields if f.name == col)
     weighted = weight_col is not None
-    wcol = (F.col(weight_col).cast("long") if weighted
+    wcol = (_int_weight_expr(weight_col) if weighted
             else F.lit(1).cast("long"))
     proj = src.select(
         *[F.col(c) for c in shard_by],

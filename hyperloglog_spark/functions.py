@@ -613,9 +613,11 @@ def _jvm_multi_register_rows(
         for i, c in enumerate(cols)
     ]
     arr = F.array(*entries)
+    # explode_outer: a row with every column NULL still emits one entry
+    # (NULL tag) so its group survives with n_c = 0 for every column
     exploded = df.select(
         *[F.col(g) for g in group_cols],
-        F.explode(F.filter(arr, lambda e: e.isNotNull())).alias("__e"),
+        F.explode_outer(F.filter(arr, lambda e: e.isNotNull())).alias("__e"),
     )
     return (
         exploded.select(
@@ -644,9 +646,12 @@ def _jvm_multi_estimates(
     def fin(pdf, keep_groups: bool):
         import pandas as pd
 
-        tags = pdf["__col"].to_numpy()
-        idxs = pdf["__idx"].to_numpy()
-        ranks = pdf["__rank"].to_numpy()
+        # rows of all-NULL input carry a NULL tag: they keep the group
+        # alive but set no register
+        real = pdf["__col"].notna().to_numpy()
+        tags = pdf["__col"].to_numpy()[real].astype(np.int64)
+        idxs = pdf["__idx"].to_numpy()[real].astype(np.int64)
+        ranks = pdf["__rank"].to_numpy()[real]
         row = (
             {c: [pdf[c].iloc[0]] for c in group_cols} if keep_groups else {}
         )
@@ -691,6 +696,8 @@ def approx_distinct_multi(
     the Arrow boundary per data row, which at wide scans is worth ~3-4x
     over the arrow path (same trade as ``approx_distinct``; grouped use
     requires ``expected_groups``, budget-checked per column)."""
+    if not 4 <= p <= 16:  # both engines, before dispatch
+        raise ValueError(f"precision p must be in [4, 16], got {p}")
     group_by = (
         [group_by] if isinstance(group_by, str) else list(group_by or [])
     )

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .engine.aggregate import SKETCH_COL, _group_field, _isna, _to_arrow
+from .engine.aggregate import SKETCH_COL, _group_field, _to_arrow
 from .sketch import (
     bloom,
     cbf,
@@ -61,6 +61,15 @@ _MERGERS = {
     codec.KIND_CBF: cbf.merge_many,
     codec.KIND_FD: fd.merge_many,
 }
+
+
+def _isna(v) -> bool:
+    import pandas as pd
+
+    try:
+        return v is None or bool(pd.isna(v))
+    except (TypeError, ValueError):
+        return False
 
 
 def _merge_cells(sketches: list[bytes], fold_to: int | None = None) -> bytes:

@@ -273,6 +273,24 @@ class TestWeightedCms:
         with pytest.raises(Exception, match="non-negative"):
             cms_agg(df, "key", weight_col="w").collect()
 
+    def test_fractional_weight_rejected_not_truncated(self, spark):
+        """A fractional weight raises (as cms_topk does) instead of being
+        floor-truncated; integral-valued doubles count exactly."""
+        from hyperloglog_spark.frequency import cms_agg, cms_topk_shards
+        from hyperloglog_spark.sketch import cms as cms_kernel
+
+        frac = spark.createDataFrame([("a", 2.7), ("b", 1.0)], ["key", "w"])
+        with pytest.raises(Exception, match="non-negative integers"):
+            cms_agg(frac, "key", weight_col="w").collect()
+        with pytest.raises(Exception, match="non-negative integers"):
+            cms_topk_shards(frac, "key", "key", weight_col="w").collect()
+        whole = spark.createDataFrame([("a", 3.0), ("b", 1.0)], ["key", "w"])
+        sk = bytes(cms_agg(whole, "key", weight_col="w").first()["sketch"])
+        assert cms_kernel.params(sk)[2] == 4
+        shards = cms_topk_shards(whole, "key", "key", weight_col="w")
+        assert sum(cms_kernel.params(bytes(r["sketch"]))[2]
+                   for r in shards.collect()) == 4
+
     def test_point_query_sums_weights(self, spark):
         import numpy as np
         from hyperloglog_spark.frequency import cms_agg

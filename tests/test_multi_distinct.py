@@ -127,3 +127,32 @@ class TestMultiDistinctJvmEngine:
                 events, ["user_id", "value"], group_by="event_type",
                 engine="jvm", expected_groups=1 << 24,
             )
+
+    def test_all_null_groups_match_arrow(self, spark):
+        """A group (or the whole input) whose rows are NULL in every
+        column is kept with n_c = 0 by both engines."""
+        df = spark.createDataFrame(
+            [("g1", "a", 1), ("g1", None, 2), ("g2", None, None),
+             ("g2", None, None), (None, None, None)],
+            "g string, s string, i int",
+        )
+        kw = dict(group_by="g")
+        a = approx_distinct_multi(df, ["s", "i"], **kw).orderBy("g").collect()
+        j = (approx_distinct_multi(df, ["s", "i"], engine="jvm",
+                                   expected_groups=3, **kw)
+             .orderBy("g").collect())
+        assert a == j
+        assert [(r["g"], r["n_s"], r["n_i"]) for r in j] == [
+            (None, 0, 0), ("g1", 1, 2), ("g2", 0, 0)
+        ]
+        nulls = df.filter(F.col("s").isNull() & F.col("i").isNull())
+        a = approx_distinct_multi(nulls, ["s", "i"]).collect()
+        j = approx_distinct_multi(nulls, ["s", "i"], engine="jvm").collect()
+        assert a == j
+        assert [(r["n_s"], r["n_i"]) for r in j] == [(0, 0)]
+
+    @pytest.mark.parametrize("engine", ["arrow", "jvm"])
+    @pytest.mark.parametrize("p", [3, 17])
+    def test_precision_checked_before_dispatch(self, events, engine, p):
+        with pytest.raises(ValueError, match="precision p"):
+            approx_distinct_multi(events, ["user_id"], p=p, engine=engine)
