@@ -21,6 +21,14 @@ def plan_string(df: DataFrame, mode: str = "formatted") -> str:
     )
 
 
+def codegen_count(df: DataFrame, pattern: str) -> int:
+    """Occurrences of the regex ``pattern`` in the generated Java source of
+    ``df``'s whole-stage-codegen subtrees (e.g. ``XXH64\\.hash`` = hash
+    calls per row). Call it after an action on ``df``: before execution
+    the adaptive plan has no final stages and shows no codegen subtree."""
+    return len(re.findall(pattern, plan_string(df, "codegen")))
+
+
 def scan_read_schemas(df: DataFrame) -> list[str]:
     """ReadSchema of every file scan in the plan (column-pruning witness)."""
     return re.findall(r"ReadSchema: struct<([^>]*)>", plan_string(df))

@@ -30,7 +30,8 @@ __all__ = ["session_window_stats"]
 
 
 def _needs_aqe_session_pin(spark) -> bool:
-    """Whether the batch-mode repartition pin (below) is required.
+    """Whether the batch-mode repartition pin (below) is required: whenever
+    AQE is enabled, on every Spark version.
 
     Round 3 observed (first-hand, Spark 4.1.2 local mode) AQE's coalesced
     shuffle read feeding MergingSessions ZERO rows — every session lost,
@@ -39,19 +40,13 @@ def _needs_aqe_session_pin(spark) -> bool:
     parquet scan, cached, coalesce(1), NTZ, shuffle partitions 4/32/200),
     so the trigger is narrower than first diagnosed; the pin is retained
     because its cost is one explicit fixed-count shuffle and the failure
-    mode is silent total data loss. Scope: AQE enabled on Spark <= 4.1.x.
+    mode is silent total data loss. No Spark release is known to fix the
+    bug, so no version retires the pin until one is.
     ``tests/test_io_streaming.py::test_session_window_aqe_upstream_repro``
     is the canary on the raw (unpinned) plan."""
-    enabled = str(
+    return str(
         spark.conf.get("spark.sql.adaptive.enabled", "true")
     ).lower() == "true"
-    if not enabled:
-        return False
-    try:
-        major, minor = (int(x) for x in spark.version.split(".")[:2])
-    except ValueError:                            # pragma: no cover
-        return True                               # unknown version: stay safe
-    return (major, minor) <= (4, 1)
 
 
 def session_window_stats(
@@ -87,8 +82,7 @@ def session_window_stats(
         # fixed-count repartition pins the exchange so AQE leaves it
         # alone; plan-local, no session config mutated. Streaming plans
         # disable AQE themselves, so only batch needs this. Guarded by
-        # _needs_aqe_session_pin (AQE on + Spark <= 4.1.x) so the pin
-        # self-retires on a fixed Spark.
+        # _needs_aqe_session_pin (AQE on, any Spark version).
         try:
             n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         except (TypeError, ValueError):

@@ -3,6 +3,7 @@
 import os
 import shutil
 import time
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -380,7 +381,7 @@ def test_session_window_aqe_upstream_repro(spark):
 
     from hyperloglog_spark.streaming.sessions import _needs_aqe_session_pin
 
-    assert _needs_aqe_session_pin(spark)           # AQE on, Spark <= 4.1.x
+    assert _needs_aqe_session_pin(spark)           # AQE on
     base = dt.datetime(2024, 1, 1)
     df = spark.createDataFrame(
         [(1, base), (1, base + dt.timedelta(seconds=10)),
@@ -417,6 +418,22 @@ def test_session_window_pin_skipped_when_aqe_off(spark):
         assert "Repartition" not in got._jdf.queryExecution().logical().toString()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+def _stub_session(version: str, aqe: str):
+    conf = SimpleNamespace(get=lambda key, default=None: aqe)
+    return SimpleNamespace(version=version, conf=conf)
+
+
+@pytest.mark.parametrize("version", ["4.1.2", "4.2.0", "5.0.0", "custom-build"])
+def test_session_pin_kept_on_every_version_with_aqe_on(version):
+    """No Spark release is known to fix the AQE/MergingSessions bug, so
+    the pin fails safe: a newer or unparsable version keeps it."""
+    from hyperloglog_spark.streaming.sessions import _needs_aqe_session_pin
+
+    assert _needs_aqe_session_pin(_stub_session(version, "true"))
+    assert _needs_aqe_session_pin(_stub_session(version, "TRUE"))
+    assert not _needs_aqe_session_pin(_stub_session(version, "false"))
 
 
 def test_session_window_streaming_append(spark, tmp_path):

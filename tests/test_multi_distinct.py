@@ -156,3 +156,65 @@ class TestMultiDistinctJvmEngine:
     def test_precision_checked_before_dispatch(self, events, engine, p):
         with pytest.raises(ValueError, match="precision p"):
             approx_distinct_multi(events, ["user_id"], p=p, engine=engine)
+
+
+class TestMultiEnvelopeBytes:
+    """Each component of the merged multi-sketch envelope is byte-for-byte
+    the single-column ``hll_sketch_agg`` sketch of that column's non-NULL
+    rows; a group with no non-NULL value in a column holds the empty
+    sketch there."""
+
+    COLS = ["s", "n"]
+
+    @pytest.fixture(scope="class")
+    def frame(self, spark):
+        rows = [
+            (f"g{i % 3}",
+             None if i % 5 == 0 else f"s{i % 97}",
+             None if i % 7 == 0 else (i * 7919) % 4001)
+            for i in range(3000)
+        ]
+        rows += [("all_null", None, None)] * 4
+        return spark.createDataFrame(rows, "g string, s string, n int")
+
+    @pytest.mark.parametrize("p", [4, 16])
+    @pytest.mark.parametrize("group_by", [[], ["g"]], ids=["global", "grouped"])
+    def test_components_equal_single_column_sketches(
+        self, frame, p, group_by
+    ):
+        from hyperloglog_spark import hll_sketch_agg
+        from hyperloglog_spark.engine.aggregate import SKETCH_COL, sketch_agg
+        from hyperloglog_spark.functions import (
+            MultiHllAggregator,
+            _unpack_multi,
+        )
+        from hyperloglog_spark.sketch import hll
+
+        merged = sketch_agg(frame, self.COLS,
+                            MultiHllAggregator(self.COLS, p=p), group_by,
+                            finalize=False).collect()
+        got = {
+            tuple(r[g] for g in group_by): _unpack_multi(bytes(r[SKETCH_COL]))
+            for r in merged
+        }
+        assert len(got) == (4 if group_by else 1)
+        for i, c in enumerate(self.COLS):
+            want = {
+                tuple(r[g] for g in group_by): bytes(r[SKETCH_COL])
+                for r in hll_sketch_agg(frame.filter(F.col(c).isNotNull()),
+                                        c, group_by=group_by, p=p).collect()
+            }
+            assert set(want) <= set(got)
+            for key, comps in got.items():
+                assert comps[i] == want.get(key, hll.empty(p)), (c, key)
+
+    @pytest.mark.parametrize("p", [4, 16])
+    def test_engines_equal_rows(self, frame, p):
+        kw = dict(group_by="g", p=p)
+        a = approx_distinct_multi(frame, self.COLS, **kw).orderBy("g")
+        j = approx_distinct_multi(frame, self.COLS, engine="jvm",
+                                  expected_groups=4, **kw).orderBy("g")
+        assert a.collect() == j.collect()
+        assert (approx_distinct_multi(frame, self.COLS, p=p).collect()
+                == approx_distinct_multi(frame, self.COLS, p=p,
+                                         engine="jvm").collect())

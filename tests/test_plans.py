@@ -12,6 +12,7 @@ from hyperloglog_spark import approx_distinct, approx_quantiles, cms_topk
 from hyperloglog_spark.engine.plans import (
     assert_max_exchanges,
     assert_pruned_scan,
+    codegen_count,
     n_exchanges,
     pushed_filters,
     scan_columns,
@@ -43,6 +44,52 @@ def test_hll_grouped_single_shuffle(events):
     assert_pruned_scan(q, {"user_id", "event_type"})
     # one Exchange: partials -> grouped merge. Raw rows shuffle zero times.
     assert_max_exchanges(q, 1)
+
+
+def _hll_cases():
+    from hyperloglog_spark import approx_distinct_multi, hll_sketch_agg
+
+    # (label, query builder, number of hashed columns); user_id is a long
+    # and event_type a string, each one XXH64 call in generated code (a
+    # double column would read two: Spark's -0.0 branch)
+    multi = ["user_id", "event_type"]
+    for engine in ("arrow", "jvm"):
+        yield (f"approx_distinct.{engine}",
+               lambda ev, e=engine: approx_distinct(ev, "user_id", engine=e),
+               1)
+        # a composite key is ONE xxhash64(a, b); its code chains one call
+        # per field, so it reads once per hashed column
+        yield (f"approx_distinct.composite.{engine}",
+               lambda ev, e=engine: approx_distinct(ev, multi, engine=e),
+               2)
+        yield (f"hll_sketch_agg.{engine}",
+               lambda ev, e=engine: hll_sketch_agg(ev, "user_id", engine=e),
+               1)
+        yield (f"approx_distinct_multi.{engine}",
+               lambda ev, e=engine: approx_distinct_multi(ev, multi,
+                                                          engine=e),
+               2)
+        yield (f"approx_distinct_multi.grouped.{engine}",
+               lambda ev, e=engine: approx_distinct_multi(
+                   ev, ["user_id", "event_id"], group_by="event_type",
+                   engine=e, expected_groups=8),
+               2)
+
+
+@pytest.mark.parametrize(
+    "build,n_hashed",
+    [pytest.param(b, n, id=label) for label, b, n in _hll_cases()],
+)
+def test_hll_kernel_hashes_each_column_once(spark, sf01_dir, build, n_hashed):
+    """The σ/idx smear doubles the expression tree six times; it is cheap
+    only while subexpression elimination shares the hash. A kernel inside
+    a ``when`` branch or built inside a Generate re-hashes ~65 times per
+    row (or leaves codegen); the generated code must call XXH64 exactly
+    once per hashed column."""
+    spark.catalog.clearCache()
+    q = build(spark.read.parquet(f"{sf01_dir}/events.parquet"))
+    q.collect()                     # the final AQE plan holds the codegen
+    assert codegen_count(q, r"XXH64\.hash") == n_hashed
 
 
 def test_hll_filter_pushdown_reaches_scan(events):
