@@ -10,7 +10,10 @@ map-side combine is built explicitly (SURVEY.md §3.4):
                            (group_cols).mapInArrow — one streamed pass per
                            shuffle partition cuts the sorted partials into
                            groups, merges each group in ONE merge_many call,
-                           then finalizes (global: repartition(1), no sort)
+                           then finalizes (global: repartition(1), no sort).
+                           ``reduce_sorted_groups`` is this pass; the JVM
+                           HLL engines and the stored-sketch rollup ride it
+                           too
 
 The shuffle therefore moves #partitions x #groups sketch rows, never data
 rows — this is what makes the pipeline scan-bound and embarrassingly parallel
@@ -214,45 +217,63 @@ def sketch_agg(
     """Full two-phase aggregation. Returns group_cols + finalized fields
     (or group_cols + the merged sketch when finalize=False).
 
-    Phase 2 hash-partitions the partials on the group keys and sorts each
-    shuffle partition by them (global: one partition, no sort); ONE
-    mapInArrow pass per partition then streams the sorted batches, cuts
-    groups at key changes (a group may span batches) and merges each
-    group's partials in a single ``merge_many`` call — the same multiset
-    in one call as a per-group merge, so the bytes do not depend on the
-    batching. Python holds one group's partials at a time."""
+    Phase 2 (``reduce_sorted_groups``) merges each group's partials in a
+    single ``merge_many`` call — the same multiset in one call as a
+    per-group merge, so the bytes do not depend on the batching."""
     group_cols = list(group_cols or [])
     partials = sketch_partials(df, value_cols, agg, group_cols)
-
     if finalize:
         tail_fields = list(agg.finalize_fields)
     else:
         tail_fields = [T.StructField(SKETCH_COL, T.BinaryType(), False)]
-    out_fields = [_group_field(partials, c) for c in group_cols] + tail_fields
+    names = [f.name for f in tail_fields]
+    merge_many, fin = agg.merge_many, agg.finalize
+
+    def reduce(group: pa.Table) -> tuple:
+        merged = merge_many(group.column(SKETCH_COL).to_pylist())
+        if not finalize:
+            return (merged,)
+        vals = fin(merged)
+        return tuple(vals[n] for n in names)
+
+    return reduce_sorted_groups(partials, group_cols, tail_fields, reduce)
+
+
+def reduce_sorted_groups(
+    rows: DataFrame,
+    group_cols: list[str],
+    tail_fields: list[T.StructField],
+    reduce: Callable[[pa.Table], tuple],
+) -> DataFrame:
+    """Phase 2 of every two-phase aggregation: one output row per group,
+    group_cols + ``tail_fields``, the tail computed by ``reduce`` from the
+    group's rows (all columns of ``rows``, as one Arrow table).
+
+    ``rows`` is hash-partitioned on the group keys and each shuffle
+    partition sorted by them (global: one partition, no sort); ONE
+    mapInArrow pass per partition then streams the sorted batches and cuts
+    groups at key changes (a group may span batches). Keys stay Arrow
+    values end to end, so NULL, NaN and ±0.0 keys come out as Spark's
+    ``groupBy`` forms them. Python holds one group's rows at a time."""
+    out_fields = [_group_field(rows, c) for c in group_cols] + tail_fields
     out_arrow = pa.schema(
         [pa.field(f.name, _to_arrow(f.dataType)) for f in out_fields]
     )
-    merge_many = agg.merge_many
-    fin = agg.finalize
-    tail_names = [f.name for f in tail_fields]
     n_keys = len(group_cols)
 
-    def merge_sorted(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        rows: list[tuple] = []
+    def reduce_partition(
+        batches: Iterator[pa.RecordBatch],
+    ) -> Iterator[pa.RecordBatch]:
+        out: list[tuple] = []
         key: tuple | None = None  # key of the open group
-        pending: list[bytes] = []  # its partials so far
+        pending: list[pa.RecordBatch] = []  # its rows so far
 
         def close_group() -> None:
-            merged = merge_many(pending)
-            if finalize:
-                vals = fin(merged)
-                rows.append(key + tuple(vals[n] for n in tail_names))
-            else:
-                rows.append(key + (merged,))
+            out.append(key + reduce(pa.Table.from_batches(pending)))
 
         def flush() -> pa.RecordBatch:
-            cols = list(zip(*rows))
-            rows.clear()
+            cols = list(zip(*out))
+            out.clear()
             return pa.RecordBatch.from_arrays(
                 [pa.array(c, type=f.type) for c, f in zip(cols, out_arrow)],
                 schema=out_arrow,
@@ -262,7 +283,6 @@ def sketch_agg(
             n = batch.num_rows
             if n == 0:
                 continue
-            sketches = batch.column(n_keys).to_pylist()
             col_codes, col_uniqs = _key_codes(
                 [batch.column(i) for i in range(n_keys)]
             )
@@ -278,22 +298,22 @@ def sketch_agg(
                 if k != key:
                     if pending:
                         close_group()
-                        if len(rows) >= _FLUSH_GROUPS:
+                        if len(out) >= _FLUSH_GROUPS:
                             yield flush()
                     key, pending = k, []
-                pending.extend(sketches[s:e])
+                pending.append(batch.slice(s, e - s))
         if pending:
             close_group()
-        if rows:
+        if out:
             yield flush()
 
     if group_cols:
-        shuffled = partials.repartition(*group_cols).sortWithinPartitions(
+        shuffled = rows.repartition(*group_cols).sortWithinPartitions(
             *group_cols
         )
     else:
-        shuffled = partials.repartition(1)
-    return shuffled.mapInArrow(merge_sorted, T.StructType(out_fields))
+        shuffled = rows.repartition(1)
+    return shuffled.mapInArrow(reduce_partition, T.StructType(out_fields))
 
 
 def _to_arrow(dt: T.DataType) -> pa.DataType:

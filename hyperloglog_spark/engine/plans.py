@@ -29,6 +29,41 @@ def codegen_count(df: DataFrame, pattern: str) -> int:
     return len(re.findall(pattern, plan_string(df, "codegen")))
 
 
+#: node names of the operators that run Python workers
+PYTHON_OPERATORS = (
+    "MapInArrow", "FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython",
+)
+
+
+def _children(node) -> list:
+    """Plan children, descending through AQE wrappers and query stages."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if name.endswith("QueryStageExec"):
+        return [node.plan()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def python_operators(df: DataFrame) -> list[tuple[str, str]]:
+    """The Python operators of ``df``'s executed plan, top-down, each as
+    ``(node name, its input plan as a tree string)``: how many Python
+    stages a query runs, and over which rows (e.g. a ``__idx`` aggregate
+    in the input means only register rows reach Python)."""
+    out: list[tuple[str, str]] = []
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        kids = _children(node)
+        if node.nodeName() in PYTHON_OPERATORS:
+            out.append(
+                (node.nodeName(), "\n".join(k.treeString() for k in kids))
+            )
+        stack.extend(reversed(kids))
+    return out
+
+
 def scan_read_schemas(df: DataFrame) -> list[str]:
     """ReadSchema of every file scan in the plan (column-pruning witness)."""
     return re.findall(r"ReadSchema: struct<([^>]*)>", plan_string(df))

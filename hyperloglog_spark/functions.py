@@ -11,6 +11,7 @@ Usage:
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from typing import Any
 
 import numpy as np
@@ -23,6 +24,7 @@ from .engine.aggregate import (
     SKETCH_COL,
     SketchAggregator,
     collect_merged,
+    reduce_sorted_groups,
     sketch_agg,
 )
 from .sketch import hll
@@ -150,12 +152,13 @@ def _jvm_register_rows(
     """JVM-side HLL register reduction: idx/σ via codegen bit ops, then
     ``groupBy(keys, idx).max(σ)`` — Catalyst's map-side partial aggregation
     collapses each partition to ≤ m rows before the shuffle, so the network
-    moves register rows, never data rows."""
+    moves register rows, never data rows. Every row carries tag 0: the
+    one-column case of ``_jvm_multi_register_rows``."""
     packed = _hll_register_expr(F.xxhash64(*[F.col(c) for c in cols]), p)
     return _max_registers(
         df.select(*[F.col(c) for c in group_cols], packed.alias("__packed")),
         group_cols,
-    )
+    ).withColumn("__col", F.lit(0))
 
 
 def _max_registers(packed_rows: DataFrame, keys: list[str]) -> DataFrame:
@@ -166,72 +169,30 @@ def _max_registers(packed_rows: DataFrame, keys: list[str]) -> DataFrame:
     ).agg(F.max(packed.bitwiseAND(F.lit(127))).alias("__rank"))
 
 
-def _jvm_estimate(
-    reg_rows: DataFrame, p: int, group_cols: list[str], alias: str
+def _jvm_finalize(
+    reg_rows: DataFrame,
+    group_cols: list[str],
+    p: int,
+    tail_fields: list[T.StructField],
+    emit: Callable[[np.ndarray, int], Any] = hll.estimate_registers,
 ) -> DataFrame:
-    """Per-group register assembly + HLL++ estimate (tiny applyInPandas:
-    ≤ m register rows per group reach Python, not data rows)."""
-    group_fields = [
-        f for f in reg_rows.schema.fields if f.name in group_cols
-    ]
-    out_schema = T.StructType(
-        group_fields + [T.StructField(alias, T.LongType(), False)]
-    )
+    """The one finalize of the JVM HLL engines: per group, tag i's
+    registers are assembled from its ``(__col, __idx, __rank)`` rows and
+    ``emit(regs, p)`` gives the i-th tail field (an estimate, or with
+    ``hll._serialize_dense`` the sketch bytes). A NULL tag (a row NULL in
+    every column) keeps its group alive and sets no register. Only
+    ≤ #tags · 2^p register rows per group reach Python, never data rows."""
+    n_tags = len(tail_fields)
 
-    def fin(pdf):
-        import pandas as pd
+    def reduce(group: pa.Table) -> tuple:
+        regs = np.zeros((n_tags, 1 << p), dtype=np.uint8)
+        real = group.select(["__col", "__idx", "__rank"]).drop_null()
+        regs[real["__col"].to_numpy(), real["__idx"].to_numpy()] = (
+            real["__rank"].to_numpy()
+        )
+        return tuple(emit(r, p) for r in regs)
 
-        regs = np.zeros(1 << p, dtype=np.uint8)
-        regs[pdf["__idx"].to_numpy()] = pdf["__rank"].to_numpy()
-        row = {c: [pdf[c].iloc[0]] for c in group_cols}
-        row[alias] = [hll.estimate_registers(regs, p)]
-        return pd.DataFrame(row)
-
-    if group_cols:
-        return reg_rows.groupBy(*group_cols).applyInPandas(fin, out_schema)
-    tmp = reg_rows.withColumn("__g", F.lit(1))
-
-    def fin_global(pdf):
-        import pandas as pd
-
-        regs = np.zeros(1 << p, dtype=np.uint8)
-        regs[pdf["__idx"].to_numpy()] = pdf["__rank"].to_numpy()
-        return pd.DataFrame({alias: [hll.estimate_registers(regs, p)]})
-
-    return tmp.groupBy("__g").applyInPandas(
-        fin_global, T.StructType([T.StructField(alias, T.LongType(), False)])
-    )
-
-
-def _jvm_sketch_rows(
-    reg_rows: DataFrame, p: int, group_cols: list[str]
-) -> DataFrame:
-    """Assemble BinaryType sketches from JVM register rows. Byte-identical
-    to the arrow path's merged sketches (same registers → the codec picks
-    the same sparse/dense envelope deterministically)."""
-    group_fields = [f for f in reg_rows.schema.fields if f.name in group_cols]
-    out_schema = T.StructType(
-        group_fields + [T.StructField(SKETCH_COL, T.BinaryType(), False)]
-    )
-
-    def build(pdf):
-        import pandas as pd
-
-        idx = pdf["__idx"].to_numpy().astype(np.int64)
-        rank = pdf["__rank"].to_numpy().astype(np.uint8)
-        order = np.argsort(idx)
-        sk = hll._serialize(p, idx[order], rank[order])
-        row = {c: [pdf[c].iloc[0]] for c in group_cols}
-        row[SKETCH_COL] = [sk]
-        return pd.DataFrame(row)
-
-    if group_cols:
-        return reg_rows.groupBy(*group_cols).applyInPandas(build, out_schema)
-    tmp = reg_rows.withColumn("__g", F.lit(1))
-    return tmp.groupBy("__g").applyInPandas(
-        lambda pdf: build(pdf).assign(__g=1)[[SKETCH_COL]],
-        T.StructType([T.StructField(SKETCH_COL, T.BinaryType(), False)]),
-    )
+    return reduce_sorted_groups(reg_rows, group_cols, tail_fields, reduce)
 
 
 #: grouped jvm-engine state budget: pre-merge register rows are bounded by
@@ -308,20 +269,14 @@ def approx_distinct(
         if hashing != "spark":
             raise ValueError("engine='jvm' supports hashing='spark' only")
         reg_rows = _jvm_register_rows(clean, cols, p, group_by)
-        return _jvm_estimate(reg_rows, p, group_by, alias)
+        return _jvm_finalize(
+            reg_rows, group_by, p, [T.StructField(alias, T.LongType(), False)]
+        )
     if engine != "arrow":
         raise ValueError(f"engine must be 'arrow' or 'jvm': {engine!r}")
     agg = HllAggregator(p=p, hashing=hashing)
-    agg.finalize_fields = [T.StructField(alias, T.LongType(), False)]
-    base_finalize = agg.finalize
-
-    if alias != "approx_distinct":
-        def renamed(sketch: bytes) -> dict:
-            return {alias: base_finalize(sketch)["approx_distinct"]}
-
-        agg.finalize = renamed  # type: ignore[method-assign]
     out = sketch_agg(clean, cols, agg, group_by)
-    return out
+    return out.withColumnRenamed("approx_distinct", alias)
 
 
 def hll_sketch_agg(
@@ -351,7 +306,11 @@ def hll_sketch_agg(
         if hashing != "spark":
             raise ValueError("engine='jvm' supports hashing='spark' only")
         reg_rows = _jvm_register_rows(clean, cols, p, group_by)
-        return _jvm_sketch_rows(reg_rows, p, group_by)
+        return _jvm_finalize(
+            reg_rows, group_by, p,
+            [T.StructField(SKETCH_COL, T.BinaryType(), False)],
+            emit=lambda regs, p: hll._serialize_dense(p, regs),
+        )
     if engine != "arrow":
         raise ValueError(f"engine must be 'arrow' or 'jvm': {engine!r}")
     agg = HllAggregator(p=p, hashing=hashing)
@@ -626,49 +585,6 @@ def _jvm_multi_register_rows(
     )
 
 
-def _jvm_multi_estimates(
-    reg_rows: DataFrame, cols: list[str], p: int, group_cols: list[str]
-) -> DataFrame:
-    """Per-group register assembly + estimate for the multi-column jvm
-    engine (tiny applyInPandas: <= n_cols * 2^p register rows per group
-    reach Python, never data rows)."""
-    n_fields = [
-        T.StructField(f"n_{c}", T.LongType(), False) for c in cols
-    ]
-
-    def fin(pdf, keep_groups: bool):
-        import pandas as pd
-
-        # rows of all-NULL input carry a NULL tag: they keep the group
-        # alive but set no register
-        real = pdf["__col"].notna().to_numpy()
-        tags = pdf["__col"].to_numpy()[real].astype(np.int64)
-        idxs = pdf["__idx"].to_numpy()[real].astype(np.int64)
-        ranks = pdf["__rank"].to_numpy()[real]
-        row = (
-            {c: [pdf[c].iloc[0]] for c in group_cols} if keep_groups else {}
-        )
-        for i, c in enumerate(cols):
-            regs = np.zeros(1 << p, dtype=np.uint8)
-            m = tags == i
-            regs[idxs[m]] = ranks[m]
-            row[f"n_{c}"] = [hll.estimate_registers(regs, p)]
-        return pd.DataFrame(row)
-
-    if group_cols:
-        group_fields = [
-            f for f in reg_rows.schema.fields if f.name in group_cols
-        ]
-        return reg_rows.groupBy(*group_cols).applyInPandas(
-            lambda pdf: fin(pdf, True),
-            T.StructType(group_fields + n_fields),
-        )
-    tmp = reg_rows.withColumn("__g", F.lit(1))
-    return tmp.groupBy("__g").applyInPandas(
-        lambda pdf: fin(pdf, False), T.StructType(n_fields)
-    )
-
-
 def approx_distinct_multi(
     df: DataFrame,
     cols: list[str],
@@ -690,8 +606,9 @@ def approx_distinct_multi(
     both engines take about 1 s. Grouped use requires
     ``expected_groups``, budget-checked per column (same trade as
     ``approx_distinct``)."""
-    if not 4 <= p <= 16:  # both engines, before dispatch
-        raise ValueError(f"precision p must be in [4, 16], got {p}")
+    agg = MultiHllAggregator(cols, p=p)  # checks p and cols, both engines
+    if engine not in ("arrow", "jvm"):
+        raise ValueError(f"engine must be 'arrow' or 'jvm': {engine!r}")
     group_by = (
         [group_by] if isinstance(group_by, str) else list(group_by or [])
     )
@@ -701,8 +618,7 @@ def approx_distinct_multi(
     )
     if engine == "jvm":
         reg_rows = _jvm_multi_register_rows(df, cols, p, group_by)
-        return _jvm_multi_estimates(reg_rows, cols, p, group_by)
-    agg = MultiHllAggregator(cols, p=p)
+        return _jvm_finalize(reg_rows, group_by, p, agg.finalize_fields)
     return sketch_agg(df, cols, agg, group_by)
 
 
@@ -815,12 +731,6 @@ def approx_distinct_packed(
         [group_by] if isinstance(group_by, str) else list(group_by or [])
     )
     agg = PackedBinaryHllAggregator(value_type=value_type, p=p)
-    agg.finalize_fields = [T.StructField(alias, T.LongType(), False)]
-    base = agg.finalize
-    if alias != "approx_distinct":
-        agg.finalize = (  # type: ignore[method-assign]
-            lambda sk: {alias: base(sk)["approx_distinct"]}
-        )
     return sketch_agg(
         df.filter(F.col(binary_col).isNotNull()), [binary_col], agg, group_by
-    )
+    ).withColumnRenamed("approx_distinct", alias)

@@ -4,6 +4,8 @@ semantics, single FileScan + single Exchange in the plan."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -11,6 +13,7 @@ from hyperloglog_spark import approx_distinct, approx_distinct_multi
 from hyperloglog_spark.engine.plans import (
     assert_max_exchanges,
     assert_pruned_scan,
+    python_operators,
 )
 
 
@@ -107,11 +110,11 @@ class TestMultiDistinctJvmEngine:
         )
         plan = q._jdf.queryExecution().executedPlan().toString()
         assert plan.count("FileScan") == 1
-        # the per-row reduction is JVM hash aggregation; the only Python
-        # stage is the per-group register assembly (<= n_cols * 2^p rows)
-        assert "__idx" in plan
-        assert plan.count("FlatMapGroupsInPandas") == 1
-        assert "MapInArrow" not in plan
+        # the per-row reduction is JVM hash aggregation; the one Python
+        # stage (the per-group register assembly, <= n_cols * 2^p rows)
+        # sits above that aggregate, so no data row reaches Python
+        [(_, below)] = python_operators(q)
+        assert re.search(r"HashAggregate\(.*__idx", below)
         assert_pruned_scan(q, {"user_id", "event_type"})
 
     def test_grouped_budget_guard(self, events):
@@ -121,7 +124,9 @@ class TestMultiDistinctJvmEngine:
             events, ["user_id", "value"], group_by="event_type",
             engine="jvm",
         )
-        assert "MapInArrow" in q._jdf.queryExecution().executedPlan().toString()
+        plan = q._sc._jvm.PythonSQLUtils.explainString(
+            q._jdf.queryExecution(), "formatted")
+        assert "__idx" not in plan
         with pytest.raises(ValueError, match="budget"):
             approx_distinct_multi(
                 events, ["user_id", "value"], group_by="event_type",
@@ -156,6 +161,15 @@ class TestMultiDistinctJvmEngine:
     def test_precision_checked_before_dispatch(self, events, engine, p):
         with pytest.raises(ValueError, match="precision p"):
             approx_distinct_multi(events, ["user_id"], p=p, engine=engine)
+
+    @pytest.mark.parametrize("engine", ["arrow", "jvm"])
+    def test_empty_cols_rejected_before_dispatch(self, events, engine):
+        with pytest.raises(ValueError, match="at least one column"):
+            approx_distinct_multi(events, [], engine=engine)
+
+    def test_unknown_engine_rejected(self, events):
+        with pytest.raises(ValueError, match="engine must be"):
+            approx_distinct_multi(events, ["user_id"], engine="jvmm")
 
 
 class TestMultiEnvelopeBytes:

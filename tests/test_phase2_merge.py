@@ -2,7 +2,9 @@
 to a driver-side reference that collects the phase-1 partials, groups them
 in Python and calls ``merge_many`` once per group — for every sketch kind,
 every key shape (NULL, NaN, ±0.0, multi-column), groups whose partials span
-Arrow batches, empty input and global input."""
+Arrow batches, empty input and global input. The other users of the shared
+sorted phase 2 — the ``engine="jvm"`` HLL finalize and the stored-sketch
+rollup — must form the same groups on the same keys."""
 
 from __future__ import annotations
 
@@ -11,7 +13,13 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from hyperloglog_spark import hll_sketch_agg
+from hyperloglog_spark import (
+    approx_distinct,
+    approx_distinct_multi,
+    hll_rollup,
+    hll_sketch_agg,
+    merge_sketches,
+)
 from hyperloglog_spark.engine.aggregate import (
     SKETCH_COL, sketch_agg, sketch_partials,
 )
@@ -62,14 +70,16 @@ def _actual(out, group_cols):
 @pytest.fixture(scope="module")
 def data(spark):
     """k: double key over NULL/NaN/±0.0; s: string key; dense group
-    k=1.5 (thousands of distinct values), sparse others; 4 input
+    k=1.5 (thousands of distinct values), sparse others; n: NULL in every
+    row of the k=NaN groups and in a third of the rest; 4 input
     partitions so every group has several partials."""
     rows = []
     for i in range(6000):
         k = KEYS[(i // 2) % len(KEYS)] if i % 2 else 1.5
-        rows.append((k, f"s{i % 3}", f"v{i}", float(i % 997) * 0.5))
+        n = None if (k is not None and k != k) or i % 3 == 0 else f"n{i % 50}"
+        rows.append((k, f"s{i % 3}", f"v{i}", float(i % 997) * 0.5, n))
     return spark.createDataFrame(
-        rows, "k double, s string, v string, x double"
+        rows, "k double, s string, v string, x double, n string"
     ).repartition(4)
 
 
@@ -136,3 +146,43 @@ def test_groups_spanning_arrow_batches(spark, data):
 def test_empty_input_gives_zero_rows(data, group_cols):
     empty = data.filter(F.lit(False))
     assert sketch_agg(empty, ["v"], HllAggregator(), group_cols).count() == 0
+
+
+@pytest.mark.parametrize("group_cols", [["k"], ["k", "s"], []])
+def test_jvm_engines_match_arrow(data, group_cols):
+    """The three ``engine="jvm"`` entry points return the arrow engine's
+    groups and values: estimates, sketch bytes, multi-column estimates
+    (column n is NULL in every row of the NaN groups: NULL-tag rows)."""
+    kw = dict(group_by=group_cols, expected_groups=32)
+    for run in (
+        lambda e: approx_distinct(data, "v", alias="d", engine=e, **kw),
+        lambda e: hll_sketch_agg(data, "v", p=12, engine=e, **kw),
+        lambda e: approx_distinct_multi(data, ["v", "n"], engine=e, **kw),
+        lambda e: approx_distinct_multi(data, ["n"], engine=e, **kw),
+    ):
+        want = _actual(run("arrow"), group_cols)
+        assert _actual(run("jvm"), group_cols) == want
+        if group_cols:
+            assert {k[0] for k in want} == {None, "nan", "0.0", "1.5", "-2.0"}
+
+
+@pytest.mark.parametrize("group_cols", [["k"], ["k", "s"]])
+def test_rollup_matches_direct_build(data, group_cols):
+    """Grouped ``merge_sketches`` and ``hll_rollup`` over finer stored
+    cells equal the direct grouped build: NULL and NaN keys stay apart,
+    and a stored -0.0 key rolls into the 0.0 group."""
+    sharded = data.withColumn("shard", F.crc32("v") % 4)
+    stored = hll_sketch_agg(sharded, "v", group_by=group_cols + ["shard"],
+                            p=12)
+    stored = stored.withColumn(
+        "k", F.when((F.col("k") == 0) & (F.col("shard") == 1), F.lit(-0.0))
+        .otherwise(F.col("k")))
+    direct = hll_sketch_agg(data, "v", group_by=group_cols, p=12)
+    want = _actual(direct, group_cols)
+    assert {k[0] for k in want} == {None, "nan", "0.0", "1.5", "-2.0"}
+    assert _actual(merge_sketches(stored, group_by=group_cols),
+                   group_cols) == want
+    assert _actual(hll_rollup(stored, group_by=group_cols, alias="d"),
+                   group_cols) == _actual(
+        approx_distinct(data, "v", group_by=group_cols, p=12, alias="d"),
+        group_cols)

@@ -14,6 +14,7 @@ from hyperloglog_spark import (
     register_sql_functions,
     with_error_bounds,
 )
+from hyperloglog_spark.engine.plans import python_operators
 from hyperloglog_spark.sketch import hll
 
 
@@ -100,11 +101,12 @@ class TestErrorBounds:
         bounded = with_error_bounds(
             approx_distinct(events, "user_id", engine="jvm")
         )
-        plan = bounded._jdf.queryExecution().executedPlan().toString()
         # the bound columns themselves must be JVM arithmetic: exactly the
-        # engine's existing python stages, no extra Eval for the bounds
-        assert plan.count("BatchEvalPython") + plan.count("ArrowEvalPython") \
-            <= 1  # the jvm engine's single applyInPandas estimate stage
+        # jvm engine's one Python stage (its sorted register finalize), no
+        # extra Eval for the bounds
+        assert [name for name, _ in python_operators(bounded)] == [
+            "MapInArrow"
+        ]
 
 
 class TestSqlFold:
