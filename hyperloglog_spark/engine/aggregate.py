@@ -11,9 +11,11 @@ map-side combine is built explicitly (SURVEY.md §3.4):
                            shuffle partition cuts the sorted partials into
                            groups, merges each group in ONE merge_many call,
                            then finalizes (global: repartition(1), no sort).
-                           ``reduce_sorted_groups`` is this pass; the JVM
-                           HLL engines and the stored-sketch rollup ride it
-                           too
+                           ``reduce_sorted_groups`` is this pass, and the
+                           only phase 2 here: the JVM HLL engines, the
+                           stored-sketch rollup, the count-min heavy-hitter
+                           rank step and each level of ``tree_merge_rows``
+                           ride it too
 
 The shuffle therefore moves #partitions x #groups sketch rows, never data
 rows — this is what makes the pipeline scan-bound and embarrassingly parallel
@@ -330,16 +332,18 @@ def tree_merge_rows(
 ) -> DataFrame:
     """Tree-reduce a one-sketch-row-per-partition DataFrame to ONE row.
 
-    The rows are reduced on the cluster in ``ceil(log_fan_in(P))`` grouped
-    levels: each level buckets CONTIGUOUS runs of ``fan_in`` partials
-    (``bucket = origin // fan_in``) and merges each bucket sorted by origin,
-    so the whole tree is a pure RE-BRACKETING of the sequential left-to-right
-    merge — byte-identical for every sketch kind with the re-bracketing law
-    (HLL/CMS/Bloom/CBF/Count-Sketch/theta/KMV: exact monoids; KLL/t-digest:
-    shuffled-merge byte-identity is tested; FD: identical in the exact regime,
-    certificate-lawful otherwise). No level's task ever holds more than
-    ``fan_in`` partials. Returns a DataFrame with the single SKETCH_COL
-    column and at most one row (zero when ``partials`` is empty)."""
+    The rows are reduced on the cluster in ``ceil(log_fan_in(P))`` levels,
+    each one ``reduce_sorted_groups`` pass: a level groups CONTIGUOUS runs
+    of ``fan_in`` partials (key ``floor(origin / fan_in)``) and merges each
+    group sorted by origin; the last level is the global (keyless) form.
+    The whole tree is therefore a pure RE-BRACKETING of the sequential
+    left-to-right merge — byte-identical for every sketch kind with the
+    re-bracketing law (HLL/CMS/Bloom/CBF/Count-Sketch/theta/KMV: exact
+    monoids; KLL/t-digest: shuffled-merge byte-identity is tested; FD:
+    identical in the exact regime, certificate-lawful otherwise). No
+    level's task ever holds more than ``fan_in`` partials. Returns a
+    DataFrame with the single SKETCH_COL column and at most one row (zero
+    when ``partials`` is empty)."""
     if fan_in < 2:
         raise ValueError(f"fan_in must be >= 2 (got {fan_in})")
     # upper bound on partial rows (empty partitions emit no row); callers
@@ -347,44 +351,25 @@ def tree_merge_rows(
     # DataFrame->RDD conversion
     n = (partials.rdd.getNumPartitions()
          if n_partials is None else n_partials)
-    schema = T.StructType(
-        [
-            T.StructField("__b", T.LongType(), False),
-            T.StructField(SKETCH_COL, T.BinaryType(), False),
-        ]
-    )
+    tail = [T.StructField(SKETCH_COL, T.BinaryType(), False)]
 
-    def merge_bucket(pdf):
-        import pandas as pd
-
-        # sort by origin index -> the bucket merge replays left-to-right
-        # order; the emitted row takes the (dense, order-preserving) bucket
-        # index as its new origin so the next level buckets contiguously
-        ordered = pdf.sort_values("__b")
-        return pd.DataFrame(
-            {
-                "__b": [int(ordered["__g"].iloc[0])],
-                SKETCH_COL: [merge_many(list(ordered[SKETCH_COL]))],
-            }
-        )
+    def merge_bucket(group: pa.Table) -> tuple:
+        # sorted by origin, the bucket merge replays left-to-right order
+        ordered = group.sort_by("__b").column(SKETCH_COL).to_pylist()
+        return (merge_many(ordered),)
 
     level = partials.select(
         F.spark_partition_id().cast("long").alias("__b"), F.col(SKETCH_COL)
     )
     while n > fan_in:
-        # contiguous runs of fan_in origins -> one bucket
-        level = (
-            level.withColumn("__g", F.floor(F.col("__b") / F.lit(int(fan_in))))
-            .groupBy("__g")
-            .applyInPandas(merge_bucket, schema)
-        )
+        # contiguous runs of fan_in origins -> one bucket, whose (dense,
+        # order-preserving) index is the origin at the next level
+        bucket = F.floor(F.col("__b") / F.lit(int(fan_in))).alias("__k")
+        level = reduce_sorted_groups(
+            level.select("*", bucket), ["__k"], tail, merge_bucket
+        ).withColumnRenamed("__k", "__b")
         n = -(-n // fan_in)
-    return (
-        level.withColumn("__g", F.lit(0).cast("long"))
-        .groupBy("__g")
-        .applyInPandas(merge_bucket, schema)
-        .select(SKETCH_COL)
-    )
+    return reduce_sorted_groups(level, [], tail, merge_bucket)
 
 
 def premerged_sketch(

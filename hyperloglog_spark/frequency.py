@@ -9,6 +9,15 @@ stage unions candidates, point-queries the merged CMS, and emits the top k.
 Shuffle volume is one sketch + one bounded candidate list per partition —
 independent of data size.
 
+Every heavy-hitter answer comes out of ONE rank step, ``cms_topk_rollup``:
+per group, add the CMS counters (exact, so the bytes do not depend on the
+bracketing), union the candidates (NaN is one value), point-query, keep
+the top k. It runs on the sorted group stream
+(``engine.aggregate.reduce_sorted_groups``) over ``(sketch, cand_v,
+cand_h)`` rows — ``cms_topk``'s per-partition partials, or the stored
+``cms_topk_shards`` rows, whose candidates are each shard's EXACT
+top-``candidates_per_shard`` values computed in Spark SQL.
+
 The Misra-Gries store gives a DETERMINISTIC guarantee (unlike the
 local-top-k heuristic it replaced, VERDICT round 1 #3): with capacity C,
 any key whose partition count exceeds N_p/(C+1) keeps a positive residual
@@ -25,11 +34,17 @@ from typing import Any
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .engine.aggregate import SKETCH_COL, SketchAggregator, sketch_agg
+from .engine.aggregate import (
+    SKETCH_COL,
+    SketchAggregator,
+    _canon,
+    reduce_sorted_groups,
+    sketch_agg,
+)
 from .functions import _drop_null_rows, _to_numpy_u64
 from .sketch import cms, countsketch
 
@@ -244,7 +259,7 @@ def cms_topk(
             Σ thr <= N_p/(cap+1) — the deterministic survival bound."""
             acc = (
                 pd.concat(frames, ignore_index=True)
-                .groupby("v", sort=False, as_index=False)
+                .groupby("v", sort=False, as_index=False, dropna=False)
                 .agg(n=("n", "sum"), h=("h", "first"))
             )
             if len(acc) > cap:
@@ -279,7 +294,7 @@ def cms_topk(
                     "v": batch.column(0).to_pandas(),
                     "h": batch.column(1).to_pandas(),
                     "n": w,
-                }).groupby("v", sort=False, as_index=False)
+                }).groupby("v", sort=False, as_index=False, dropna=False)
                 .agg(n=("n", "sum"), h=("h", "first"))
             )
             pending.append(bdf)
@@ -301,37 +316,7 @@ def cms_topk(
             schema=arrow_schema,
         )
 
-    partials = proj.mapInArrow(build, part_schema).withColumn("__g", F.lit(1))
-
-    out_schema = T.StructType([
-        T.StructField(col, col_field.dataType, True),
-        T.StructField("approx_count", T.LongType(), False),
-    ])
-
-    def merge_rank(pdf):
-        import pandas as pd
-
-        merged = cms.merge_many(list(pdf["sketch"]))
-        cand: dict[Any, int] = {}
-        for vs, hs in zip(pdf["cand_v"], pdf["cand_h"]):
-            for v, ch in zip(vs, hs):
-                cand[v] = int(ch)
-        values = list(cand.keys())
-        hashes = np.array([cand[v] for v in values], dtype=np.int64).view(np.uint64)
-        ests = cms.point_query(merged, hashes).astype(np.int64)
-        order = sorted(
-            range(len(values)), key=lambda i: (-int(ests[i]), values[i])
-        )[:k]
-        return pd.DataFrame({
-            col: [values[i] for i in order],
-            "approx_count": [int(ests[i]) for i in order],
-        })
-
-    return (
-        partials.groupBy("__g")
-        .applyInPandas(lambda pdf: merge_rank(pdf), out_schema)
-        .orderBy(F.desc("approx_count"), F.asc(col))
-    )
+    return cms_topk_rollup(proj.mapInArrow(build, part_schema), col, k)
 
 
 def cms_topk_verified(
@@ -392,58 +377,47 @@ def cms_topk_shards(
     weight_col: str | None = None,
 ) -> DataFrame:
     """The STORABLE unit for heavy hitters: one row per shard (e.g. per
-    day) holding that shard's CMS plus a bounded local-candidate list.
-    Persist these rows once; ``cms_topk_rollup`` answers top-k over any
-    union of shards with zero rescan. Any global heavy hitter is a local
-    heavy hitter in at least one shard when candidates_per_shard is sized
-    generously (>= 4k is the usual rule). ``weight_col`` stores mass-based
-    shards (totals instead of counts), same contract."""
+    day) holding that shard's CMS plus its candidate list — the EXACT
+    per-shard top-``candidates_per_shard`` values by count (by mass with
+    ``weight_col``), ties broken by ascending value. Persist these rows
+    once; ``cms_topk_rollup`` answers top-k over any union of shards with
+    zero rescan. Any global heavy hitter is a local heavy hitter in at
+    least one shard when candidates_per_shard is sized generously (>= 4k
+    is the usual rule).
+
+    The sketch is ``sketch_agg`` keyed on the shard (per-partition partial
+    CMS, then one exact counter-add merge per shard). The candidates are
+    plain SQL: per-(shard, value) counts, a ``row_number`` cut that Spark
+    plans as a ``WindowGroupLimit`` below the shuffle, and a sorted
+    ``collect_list``. No Python stage ever holds a shard's data rows."""
     shard_by = [shard_by] if isinstance(shard_by, str) else list(shard_by)
     src = _drop_null_rows(df, [col])
-    col_field = next(f for f in src.schema.fields if f.name == col)
-    weighted = weight_col is not None
-    wcol = (_int_weight_expr(weight_col) if weighted
-            else F.lit(1).cast("long"))
-    proj = src.select(
-        *[F.col(c) for c in shard_by],
-        F.col(col).alias("__v"), F.xxhash64(col).alias("__h"),
-        wcol.alias("__w"),
+    agg = CmsAggregator(d, log2_w, weight_col=weight_col)
+    sketches = sketch_agg(src, [col], agg, shard_by, finalize=False)
+    w = (_int_weight_expr(weight_col) if weight_col is not None
+         else F.lit(1).cast("long"))
+    rank = Window.partitionBy(*shard_by).orderBy(F.desc("__n"), F.asc("__v"))
+    cands = (
+        src.groupBy(*shard_by, F.col(col).alias("__v"))
+        .agg(F.sum(w).alias("__n"))
+        .withColumn("__r", F.row_number().over(rank))
+        .filter(F.col("__r") <= candidates_per_shard)
+        .groupBy(*shard_by)
+        .agg(F.sort_array(F.collect_list(F.struct(
+            "__r", "__v", F.xxhash64("__v").alias("__h")))).alias("__c"))
+        .select(*[F.col(c).alias(f"__k{i}") for i, c in enumerate(shard_by)],
+                "__c")
     )
-    shard_fields = [
-        f for f in src.schema.fields if f.name in shard_by
-    ]
-    out_schema = T.StructType(shard_fields + [
-        T.StructField("sketch", T.BinaryType(), False),
-        T.StructField("cand_v", T.ArrayType(col_field.dataType), False),
-        T.StructField("cand_h", T.ArrayType(T.LongType()), False),
-    ])
-    cpp = candidates_per_shard
-
-    def build(pdf):
-        import pandas as pd
-
-        h = pdf["__h"].to_numpy(dtype=np.int64).view(np.uint64)
-        if weighted:
-            w = pdf["__w"].to_numpy(dtype=np.int64)
-            if len(w) and int(w.min()) < 0:
-                raise ValueError("cms_topk_shards weights must be "
-                                 "non-negative")
-            sk = cms.from_hashes(h, counts=w, d=d, log2_w=log2_w)
-        else:
-            sk = cms.from_hashes(h, d=d, log2_w=log2_w)
-        acc = (
-            pdf.groupby("__v", sort=False, as_index=False)
-            .agg(n=("__w", "sum"), h=("__h", "first"))
-            .sort_values(["n", "__v"], ascending=[False, True])
-            .head(cpp)
-        )
-        row = {c: [pdf[c].iloc[0]] for c in shard_by}
-        row["sketch"] = [sk]
-        row["cand_v"] = [list(acc["__v"])]
-        row["cand_h"] = [[int(x) for x in acc["h"]]]
-        return pd.DataFrame(row)
-
-    return proj.groupBy(*shard_by).applyInPandas(build, out_schema)
+    col_type = src.schema[col].dataType
+    same_shard = [F.col(c).eqNullSafe(F.col(f"__k{i}"))
+                  for i, c in enumerate(shard_by)]
+    return sketches.join(cands, same_shard).select(
+        # today's stored layout: shard columns in source-schema order
+        *[f.name for f in src.schema.fields if f.name in shard_by],
+        SKETCH_COL,
+        F.col("__c.__v").cast(T.ArrayType(col_type)).alias("cand_v"),
+        F.col("__c.__h").cast(T.ArrayType(T.LongType())).alias("cand_h"),
+    )
 
 
 def cms_topk_rollup(
@@ -457,49 +431,43 @@ def cms_topk_rollup(
     lists, point-query each candidate against the merged CMS, rank. No
     rescan of the data rows — the same zero-rescan contract as
     ``rollup.merge_sketches``, plus candidate handling (a plain sketch
-    cannot enumerate values)."""
+    cannot enumerate values). This rank step is also ``cms_topk``'s phase
+    2, over its per-partition partials; it runs on the sorted group
+    stream (``reduce_sorted_groups``), one group's rows at a time."""
     group_cols = (
         [group_by] if isinstance(group_by, str) else list(group_by or [])
     )
-    elem_type = next(
-        f.dataType for f in stored.schema.fields if f.name == "cand_v"
-    ).elementType
-    group_fields = [f for f in stored.schema.fields if f.name in group_cols]
-    out_schema = T.StructType(group_fields + [
+    elem_type = stored.schema["cand_v"].dataType.elementType
+    top = T.StructField("__top", T.ArrayType(T.StructType([
         T.StructField(col, elem_type, True),
         T.StructField("approx_count", T.LongType(), False),
-    ])
+    ]), False), False)
 
-    def merge_rank(pdf):
-        import pandas as pd
-
-        merged = cms.merge_many([bytes(s) for s in pdf["sketch"]])
+    def merge_rank(group: pa.Table) -> tuple:
+        merged = cms.merge_many(group.column(SKETCH_COL).to_pylist())
+        # NaN candidates from several rows collapse into one key
         cand: dict[Any, int] = {}
-        for vs, hs in zip(pdf["cand_v"], pdf["cand_h"]):
+        for vs, hs in zip(group.column("cand_v").to_pylist(),
+                          group.column("cand_h").to_pylist()):
             for v, ch in zip(vs, hs):
-                cand[v] = int(ch)
-        values = list(cand.keys())
-        hashes = np.array(
-            [cand[v] for v in values], dtype=np.int64
-        ).view(np.uint64)
+                cand[_canon(v)] = ch
+        values = list(cand)
+        hashes = np.array(list(cand.values()), dtype=np.int64).view(np.uint64)
         ests = cms.point_query(merged, hashes).astype(np.int64)
+        # count DESC, value ASC with NaN last (Spark's order)
         order = sorted(
-            range(len(values)), key=lambda i: (-int(ests[i]), values[i])
+            range(len(values)),
+            key=lambda i: (-int(ests[i]), values[i] != values[i], values[i]),
         )[:k]
-        row = {c: [pdf[c].iloc[0]] * len(order) for c in group_cols}
-        row[col] = [values[i] for i in order]
-        row["approx_count"] = [int(ests[i]) for i in order]
-        return pd.DataFrame(row)
+        return ([{col: values[i], "approx_count": int(ests[i])}
+                 for i in order],)
 
-    if group_cols:
-        out = stored.groupBy(*group_cols).applyInPandas(
-            merge_rank, out_schema)
-        return out.orderBy(
-            *group_cols, F.desc("approx_count"), F.asc(col))
-    tmp = stored.withColumn("__g", F.lit(1))
-    out = tmp.groupBy("__g").applyInPandas(
-        lambda pdf: merge_rank(pdf), out_schema)
-    return out.orderBy(F.desc("approx_count"), F.asc(col))
+    rows = stored.select(*group_cols, SKETCH_COL, "cand_v", "cand_h")
+    return (
+        reduce_sorted_groups(rows, group_cols, [top], merge_rank)
+        .select(*group_cols, F.inline("__top"))
+        .orderBy(*group_cols, F.desc("approx_count"), F.asc(col))
+    )
 
 
 def cms_join_size(
@@ -528,30 +496,21 @@ def cms_join_size(
         sk_a.select(F.col(SKETCH_COL).alias("__sa"))
         .crossJoin(F.broadcast(sk_b.select(F.col(SKETCH_COL).alias("__sb"))))
     )
-    out_schema = T.StructType([
+    fields = [
         T.StructField("est_join_size", T.LongType(), False),
         T.StructField("n_a", T.LongType(), False),
         T.StructField("n_b", T.LongType(), False),
         T.StructField("eps_n_a_n_b", T.DoubleType(), False),
-    ])
+    ]
 
-    def combine(pdf):
-        import pandas as pd
-
-        a, b = bytes(pdf["__sa"].iloc[0]), bytes(pdf["__sb"].iloc[0])
-        est = cms.inner_product(a, b)
+    def combine(one: pa.Table) -> tuple:
+        a, b = one.column("__sa")[0].as_py(), one.column("__sb")[0].as_py()
         _, _, n_a = cms.params(a)
         _, _, n_b = cms.params(b)
         eps, _ = cms.error_bound(a)
-        return pd.DataFrame({
-            "est_join_size": [est], "n_a": [n_a], "n_b": [n_b],
-            "eps_n_a_n_b": [eps * n_a * n_b],
-        })
+        return (cms.inner_product(a, b), n_a, n_b, eps * n_a * n_b)
 
-    return (
-        joined.withColumn("__g", F.lit(1))
-        .groupBy("__g").applyInPandas(combine, out_schema)
-    )
+    return reduce_sorted_groups(joined, [], fields, combine)
 
 
 class CountSketchAggregator(SketchAggregator):

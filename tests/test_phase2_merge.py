@@ -3,13 +3,16 @@ to a driver-side reference that collects the phase-1 partials, groups them
 in Python and calls ``merge_many`` once per group — for every sketch kind,
 every key shape (NULL, NaN, ±0.0, multi-column), groups whose partials span
 Arrow batches, empty input and global input. The other users of the shared
-sorted phase 2 — the ``engine="jvm"`` HLL finalize and the stored-sketch
-rollup — must form the same groups on the same keys."""
+sorted phase 2 — the ``engine="jvm"`` HLL finalize, the stored-sketch
+rollup, the count-min heavy-hitter family and the tree merge — must form
+the same groups on the same keys and give the reference bytes."""
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -21,11 +24,15 @@ from hyperloglog_spark import (
     merge_sketches,
 )
 from hyperloglog_spark.engine.aggregate import (
-    SKETCH_COL, sketch_agg, sketch_partials,
+    SKETCH_COL, sketch_agg, sketch_partials, tree_merge_rows,
 )
-from hyperloglog_spark.frequency import CmsAggregator
+from hyperloglog_spark.engine.plans import python_operators
+from hyperloglog_spark.frequency import (
+    CmsAggregator, cms_topk, cms_topk_rollup, cms_topk_shards,
+)
 from hyperloglog_spark.functions import HllAggregator
 from hyperloglog_spark.quantiles import KllAggregator, TDigestAggregator
+from hyperloglog_spark.sketch import cms
 
 KEYS = [None, float("nan"), 0.0, -0.0, 1.5, -2.0]
 
@@ -186,3 +193,166 @@ def test_rollup_matches_direct_build(data, group_cols):
                    group_cols) == _actual(
         approx_distinct(data, "v", group_by=group_cols, p=12, alias="d"),
         group_cols)
+
+
+# ---- the count-min heavy-hitter family and the tree merge ----------------
+
+def _canon_value(v):
+    """A candidate value as Spark's groupBy forms it: -0.0 folds into
+    0.0 (NaN stays one value under ``_norm``)."""
+    return 0.0 if isinstance(v, float) and v == 0 else v
+
+
+def _rank_key(v, n):
+    """count DESC, value ASC, NaN after every other value (Spark's order)."""
+    return (-n, isinstance(v, float) and math.isnan(v), v)
+
+
+@pytest.fixture(scope="module")
+def cms_data(data):
+    """c: a skewed double value column (ten digits) with NaN wherever n
+    is NULL and -0.0 for the s1 zeros; w: a positive integer weight."""
+    digit = F.substring("n", 2, 1).cast("double")
+    return data.withColumn(
+        "c",
+        F.when(F.col("n").isNull(), F.lit(float("nan")))
+        .when((digit == 0) & (F.col("s") == "s1"), F.lit(-0.0))
+        .otherwise(digit),
+    ).withColumn("w", F.length("v"))
+
+
+def _shards_reference(df, col, shard_by, cpp, weight_col, d, log2_w):
+    """Per shard: ``cms.from_hashes`` over the shard's collected rows, and
+    the exact top-``cpp`` values by (count or mass) DESC, value ASC."""
+    w = F.col(weight_col) if weight_col else F.lit(1)
+    rows = df.filter(F.col(col).isNotNull()).select(
+        *shard_by, F.col(col).alias("v"), F.xxhash64(col).alias("h"),
+        w.cast("long").alias("w"),
+    ).collect()
+    shards: dict[tuple, list] = {}
+    for r in rows:
+        key = tuple(_norm(_canon_value(r[c])) for c in shard_by)
+        shards.setdefault(key, []).append(r)
+    out = {}
+    for key, rs in shards.items():
+        hashes = np.array([r["h"] for r in rs], dtype=np.int64).view(
+            np.uint64)
+        counts = (np.array([r["w"] for r in rs], dtype=np.int64)
+                  if weight_col else None)
+        sketch = cms.from_hashes(hashes, counts=counts, d=d, log2_w=log2_w)
+        top = (
+            pd.DataFrame({
+                "v": [_canon_value(r["v"]) for r in rs],
+                "h": [r["h"] for r in rs],
+                "n": [r["w"] for r in rs],
+            }).groupby("v", dropna=False, as_index=False)
+            .agg(n=("n", "sum"), h=("h", "first"))
+        )
+        top = sorted(zip(top["v"], top["n"], top["h"]),
+                     key=lambda t: _rank_key(t[0], t[1]))[:cpp]
+        out[key] = (sketch, [_norm(float(v)) for v, _, _ in top],
+                    [int(h) for _, _, h in top])
+    return out
+
+
+@pytest.mark.parametrize("weight_col", [None, "w"])
+@pytest.mark.parametrize("shard_by", [["k"], ["k", "s"]])
+def test_cms_topk_shards_match_reference(cms_data, shard_by, weight_col):
+    got = {}
+    for r in cms_topk_shards(cms_data, "c", shard_by, d=3, log2_w=8,
+                             candidates_per_shard=3,
+                             weight_col=weight_col).collect():
+        key = tuple(_norm(r[c]) for c in shard_by)
+        assert key not in got, f"shard {key} emitted twice"
+        got[key] = (bytes(r["sketch"]), [_norm(v) for v in r["cand_v"]],
+                    list(r["cand_h"]))
+    want = _shards_reference(cms_data, "c", shard_by, 3, weight_col, 3, 8)
+    assert got == want
+    assert {k[0] for k in got} == {None, "nan", "0.0", "1.5", "-2.0"}
+    assert any("nan" in cands for _, cands, _ in got.values())
+
+
+def _rollup_reference(stored, col, k, group_cols):
+    """Driver-side rank step: per group, ``merge_many`` the sketches,
+    union the candidates, point-query them, keep the top k."""
+    groups: dict[tuple, list] = {}
+    for r in stored.collect():
+        key = tuple(_norm(r[c]) for c in group_cols)
+        groups.setdefault(key, []).append(r)
+    out = {}
+    for key, rs in groups.items():
+        merged = cms.merge_many([bytes(r["sketch"]) for r in rs])
+        cand = {}
+        for r in rs:
+            for v, h in zip(r["cand_v"], r["cand_h"]):
+                cand[_norm(v)] = (v, h)
+        values = list(cand.values())
+        ests = cms.point_query(merged, np.array(
+            [h for _, h in values], dtype=np.int64).view(np.uint64))
+        ranked = sorted(zip([v for v, _ in values], ests.tolist()),
+                        key=lambda t: _rank_key(t[0], t[1]))[:k]
+        out[key] = [(_norm(v), int(n)) for v, n in ranked]
+    return out
+
+
+def _rollup_rows(out, col, group_cols):
+    got: dict[tuple, list] = {}
+    for r in out.collect():
+        key = tuple(_norm(r[c]) for c in group_cols)
+        got.setdefault(key, []).append((_norm(r[col]), r["approx_count"]))
+    return got
+
+
+def test_cms_topk_rollup_matches_reference(cms_data):
+    """Grouped rollup equals the per-group reference rank step, and the
+    global rollup equals the grouped one over a constant key."""
+    stored = cms_topk_shards(cms_data, "c", ["k", "s"], d=3, log2_w=8,
+                             candidates_per_shard=3)
+    grouped = _rollup_rows(cms_topk_rollup(stored, "c", k=4, group_by="k"),
+                           "c", ["k"])
+    assert grouped == _rollup_reference(stored, "c", 4, ["k"])
+    assert set(grouped) == {(None,), ("nan",), ("0.0",), ("1.5",), ("-2.0",)}
+    one = stored.withColumn("g", F.lit(1))
+    assert _rollup_rows(cms_topk_rollup(stored, "c", k=4), "c", []) == {
+        (): _rollup_rows(cms_topk_rollup(one, "c", k=4, group_by="g"),
+                         "c", ["g"])[(1,)]
+    }
+
+
+def test_nan_heavy_hitter_is_ranked(spark):
+    """NaN is one value, and here the heaviest: every heavy-hitter entry
+    point must rank it, and NaN candidates from several partitions or
+    shards must collapse into one row."""
+    vals = [float("nan")] * 50 + [1.0] * 10 + [2.0] * 5
+    df = spark.createDataFrame(
+        [(v, i % 2) for i, v in enumerate(vals)], "v double, s int"
+    ).repartition(3)
+    want = [("nan", 50), ("1.0", 10), ("2.0", 5)]
+    got = [(_norm(r["v"]), r["approx_count"])
+           for r in cms_topk(df, "v", k=3).collect()]
+    assert got == want
+    shards = cms_topk_shards(df, "v", "s")
+    for r in shards.collect():
+        assert [_norm(v) for v in r["cand_v"]] == ["nan", "1.0", "2.0"]
+    got = [(_norm(r["v"]), r["approx_count"])
+           for r in cms_topk_rollup(shards, "v", k=3).collect()]
+    assert got == want
+
+
+@pytest.mark.parametrize("make", [lambda: HllAggregator(p=10),
+                                  lambda: CmsAggregator(d=3, log2_w=8)],
+                         ids=["hll", "cms"])
+def test_tree_merge_is_a_rebracketed_fold(data, make):
+    """fan_in=2 over 9 partials: four levels (9 -> 5 -> 3 -> 2 -> 1) with
+    uneven buckets, each a ``reduce_sorted_groups`` pass; the bytes equal
+    the sequential left-to-right fold."""
+    agg = make()
+    partials = sketch_partials(data.repartition(9), ["v"], agg)
+    rows = partials.select(F.spark_partition_id().alias("p"),
+                           SKETCH_COL).collect()
+    assert len(rows) == 9
+    fold = agg.merge_many(
+        [bytes(r[SKETCH_COL]) for r in sorted(rows, key=lambda r: r["p"])])
+    tree = tree_merge_rows(partials, agg.merge_many, fan_in=2)
+    assert [bytes(r[SKETCH_COL]) for r in tree.collect()] == [fold]
+    assert [n for n, _ in python_operators(tree)] == ["MapInArrow"] * 5

@@ -14,7 +14,9 @@ from hyperloglog_spark.engine.plans import (
     assert_pruned_scan,
     codegen_count,
     n_exchanges,
+    plan_string,
     pushed_filters,
+    python_operators,
     scan_columns,
 )
 from hyperloglog_spark.pipeline import exact_dedup, near_dup_pairs, token_stats
@@ -110,6 +112,51 @@ def test_cms_topk_shuffle_budget(events):
     assert_pruned_scan(q, {"event_type"})
     # candidate agg + ranked merge: allow 2 shuffles, never more
     assert_max_exchanges(q, 2)
+
+
+def _cms_family_cases():
+    from hyperloglog_spark import cms_join_size
+    from hyperloglog_spark.engine.aggregate import premerged_sketch
+    from hyperloglog_spark.frequency import cms_topk_rollup, cms_topk_shards
+    from hyperloglog_spark.functions import HllAggregator
+
+    yield "cms_topk", lambda ev: cms_topk(ev, "user_id", k=5)
+    yield "cms_topk_rollup", lambda ev: cms_topk_rollup(
+        cms_topk_shards(ev, "user_id", "event_type"), "user_id", k=5)
+    yield "cms_join_size", lambda ev: cms_join_size(
+        ev, "user_id", ev, "user_id")
+    yield "premerged_sketch", lambda ev: premerged_sketch(
+        ev.repartition(8), ["user_id"], HllAggregator(p=12), fan_in=2)
+
+
+@pytest.mark.parametrize(
+    "build", [pytest.param(b, id=label) for label, b in _cms_family_cases()]
+)
+def test_cms_family_rides_the_sorted_group_stream(events, build):
+    """Every phase 2 of the heavy-hitter family and the tree merge is a
+    ``reduce_sorted_groups`` pass (MapInArrow): no grouped pandas stage."""
+    q = build(events)
+    q.collect()
+    names = [n for n, _ in python_operators(q)]
+    assert names and set(names) == {"MapInArrow"}, names
+
+
+def test_cms_topk_shards_no_python_stage_over_data_rows(events):
+    """The candidate lists are SQL (a WindowGroupLimit cuts each shard's
+    top-cpp below the shuffle); the only Python operator fed straight
+    from the scan is ``sketch_agg``'s per-partition phase 1."""
+    from hyperloglog_spark.frequency import cms_topk_shards
+
+    q = cms_topk_shards(events.withColumn("day", F.to_date("ts")),
+                        "user_id", ["event_type", "day"])
+    # sketch phase-2 repartition, per-(shard, value) counts, the window
+    assert_max_exchanges(q, 3)
+    q.collect()
+    assert "WindowGroupLimit" in plan_string(q)
+    ops = python_operators(q)
+    assert [n for n, _ in ops] == ["MapInArrow", "MapInArrow"]
+    raw = [inp for _, inp in ops if "Exchange" not in inp]
+    assert len(raw) == 1 and "xxhash64(user_id" in raw[0], raw
 
 
 def test_exact_dedup_shuffles_fingerprint_not_payload(docs):

@@ -157,6 +157,7 @@ class TestDistributedPreMerge:
 
     def test_driver_sees_one_row_at_any_partition_count(self, events):
         from hyperloglog_spark.engine.aggregate import premerged_sketch
+        from hyperloglog_spark.engine.plans import python_operators
         from hyperloglog_spark.functions import HllAggregator
 
         agg = HllAggregator(p=14)
@@ -164,10 +165,11 @@ class TestDistributedPreMerge:
             one = premerged_sketch(
                 events.repartition(n_parts), ["user_id"], agg, fan_in=fan_in
             )
-            plan = one._jdf.queryExecution().executedPlan().toString()
-            # ceil(log_fan_in(P)) grouped-merge levels incl. the final one:
-            # each task holds <= fan_in partials regardless of P
-            assert plan.count("FlatMapGroupsInPandas") == want_levels
+            # ceil(log_fan_in(P)) merge levels incl. the final one, each a
+            # MapInArrow above the one phase-1 MapInArrow: each task holds
+            # <= fan_in partials regardless of P
+            names = [n for n, _ in python_operators(one)]
+            assert names == ["MapInArrow"] * (want_levels + 1)
             collected = one.collect()
             assert len(collected) == 1
 
@@ -189,6 +191,7 @@ class TestDistributedPreMerge:
             collect_merged,
             sketch_partials,
         )
+        from hyperloglog_spark.engine.plans import python_operators
         from hyperloglog_spark.functions import HllAggregator
 
         agg = HllAggregator(p=14)
@@ -197,7 +200,6 @@ class TestDistributedPreMerge:
         via_tree = collect_merged(small, ["user_id"], agg, fan_in=2)
         assert direct == via_tree
         # the phase-1 partials plan has exactly one python-UDF stage; the
-        # small-P path must not add a grouped merge level on top of it
+        # small-P path must not add a merge level on top of it
         partials = sketch_partials(small, ["user_id"], agg)
-        plan = partials._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("FlatMapGroupsInPandas") == 0
+        assert len(python_operators(partials)) == 1
