@@ -90,8 +90,9 @@ def q_hll_distinct_order_cust_pairs(spark, sf_dir):
 
 
 def q_hll_jvm_engine_event_users(spark, sf_dir):
-    """engine='jvm': register reduction in whole-stage codegen; registers
-    (hence estimates) bit-identical to the arrow UDAF engine. Exact here
+    """engine='jvm' (accepted, selects nothing): register reduction in
+    whole-stage codegen, the one count-distinct path; registers (hence
+    estimates) bit-identical to the two-phase HllAggregator. Exact here
     (linear-counting regime)."""
     from hyperloglog_spark import approx_distinct
 
@@ -135,8 +136,7 @@ def q_hll_set_algebra_users(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "view")
     )
-    sk = hll_sketch_agg(ev, "user_id", group_by="event_type", p=16,
-                        engine="jvm", expected_groups=2)
+    sk = hll_sketch_agg(ev, "user_id", group_by="event_type", p=16)
     a = sk.filter(F.col("event_type") == "click").select(
         F.col("sketch").alias("ska"))
     b = sk.filter(F.col("event_type") == "view").select(
@@ -159,8 +159,8 @@ def q_hll_set_algebra_users(spark, sf_dir):
 
 def q_hll_multi_column_profile(spark, sf_dir):
     """N per-column distinct counts in ONE scan (the ANALYZE-TABLE shape;
-    plan audited: single FileScan, single Exchange). Exact here (p=16
-    linear-counting regime)."""
+    plan audited: single FileScan, no shuffle of data rows). Exact here
+    (p=16 linear-counting regime)."""
     from hyperloglog_spark import approx_distinct_multi
 
     return approx_distinct_multi(
@@ -169,13 +169,12 @@ def q_hll_multi_column_profile(spark, sf_dir):
 
 
 def q_hll_multi_column_profile_jvm(spark, sf_dir):
-    """The multi-column profile through the JVM engine (round 5): the
-    per-row reduction — one (column-tag, packed-register) entry per
-    non-null column, map-side-combined groupBy — stays entirely in
-    whole-stage codegen; only <= n_cols * 2^p register rows reach Python.
-    Registers are bit-identical to the arrow MultiHllAggregator (same
-    packed kernel), so the same exact-regime oracle applies. 1.8x the
-    arrow path at 20M turns (the suite's biggest single cost)."""
+    """The multi-column profile with engine='jvm' (accepted, selects
+    nothing): the per-row reduction — one (column-tag, packed-register)
+    entry per non-null column, map-side-combined groupBy — stays entirely
+    in whole-stage codegen; only register rows reach Python. Registers are
+    bit-identical to per-column approx_distinct (same packed kernel), so
+    the same exact-regime oracle applies."""
     from hyperloglog_spark import approx_distinct_multi
 
     return approx_distinct_multi(
@@ -809,8 +808,7 @@ def q_hll_jaccard_priorities(spark, sf_dir):
     od = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
     )
-    sk = hll_sketch_agg(od, "o_custkey", group_by="o_orderpriority", p=16,
-                        engine="jvm", expected_groups=2)
+    sk = hll_sketch_agg(od, "o_custkey", group_by="o_orderpriority", p=16)
     a = sk.filter(F.col("o_orderpriority") == "1-URGENT").select(
         F.col("sketch").alias("ska"))
     b = sk.filter(F.col("o_orderpriority") == "5-LOW").select(

@@ -100,11 +100,9 @@ def main() -> None:
         "hll_distinct_convs_jvm": lambda: approx_distinct(
             trans, "conv_id", engine="jvm"),
         "hll_texts_by_role_tool": lambda: tq.distinct_texts_by_role_tool(trans),
-        # same grouped text-distinct through the jvm engine (~2.8x at 20M
-        # turns; (role, tool) group space is known-tiny so the register-row
-        # budget is trivially met); arrow row kept for comparability
+        # engine="jvm" selects nothing: the same query as the row above
         "hll_texts_by_role_tool_jvm": lambda: tq.distinct_texts_by_role_tool(
-            trans, engine="jvm", expected_groups=64),
+            trans, engine="jvm"),
         "hll_conv_tool_pairs": lambda: tq.distinct_conv_tool_pairs(trans),
         "cms_heavy_hitter_tools": lambda: tq.heavy_hitter_tools(trans),
         "kll_turn_length_q": lambda: tq.turn_length_quantiles(trans),
@@ -216,10 +214,7 @@ def main() -> None:
         # 3 per-column distinct counts, ONE scan of the transcripts table
         "hll_multi_profile_transcripts": lambda: approx_distinct_multi(
             trans, ["conv_id", "text", "tool"]),
-        # the same profile through the jvm engine (round 5): the per-row
-        # reduction never leaves whole-stage codegen — ~1.8x at 20M turns
-        # on the suite's biggest single cost; arrow row kept for
-        # cross-round comparability (registers bit-identical)
+        # engine="jvm" selects nothing: the same query as the row above
         "hll_multi_profile_transcripts_jvm": lambda: approx_distinct_multi(
             trans, ["conv_id", "text", "tool"], engine="jvm"),
         # gap-based sessionization over every conversation (one window

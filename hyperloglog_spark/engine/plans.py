@@ -46,22 +46,35 @@ def _children(node) -> list:
     return [kids.apply(i) for i in range(kids.size())]
 
 
+def _nodes(df: DataFrame):
+    """``(node, its children)`` of ``df``'s executed plan, top-down."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        kids = _children(node)
+        yield node, kids
+        stack.extend(reversed(kids))
+
+
 def python_operators(df: DataFrame) -> list[tuple[str, str]]:
     """The Python operators of ``df``'s executed plan, top-down, each as
     ``(node name, its input plan as a tree string)``: how many Python
     stages a query runs, and over which rows (e.g. a ``__idx`` aggregate
     in the input means only register rows reach Python)."""
-    out: list[tuple[str, str]] = []
-    stack = [df._jdf.queryExecution().executedPlan()]
-    while stack:
-        node = stack.pop()
-        kids = _children(node)
-        if node.nodeName() in PYTHON_OPERATORS:
-            out.append(
-                (node.nodeName(), "\n".join(k.treeString() for k in kids))
-            )
-        stack.extend(reversed(kids))
-    return out
+    return [
+        (node.nodeName(), "\n".join(k.treeString() for k in kids))
+        for node, kids in _nodes(df)
+        if node.nodeName() in PYTHON_OPERATORS
+    ]
+
+
+def exchange_inputs(df: DataFrame) -> list[str]:
+    """Node name of each shuffle ``Exchange``'s input, top-down (e.g. all
+    ``HashAggregate``: only aggregated rows shuffle, data rows never)."""
+    return [
+        kids[0].nodeName() for node, kids in _nodes(df)
+        if node.nodeName() == "Exchange"
+    ]
 
 
 def scan_read_schemas(df: DataFrame) -> list[str]:

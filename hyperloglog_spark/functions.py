@@ -7,11 +7,19 @@ Usage:
     approx_distinct(df, "conv_id")                       # 1-row DataFrame
     approx_distinct(df, ["conv_id", "tool"])             # composite distinct
     approx_distinct(df, "text", group_by=["role","tool"])
+
+Every ``hashing="spark"`` count-distinct (``approx_distinct``,
+``approx_distinct_multi``, ``hll_sketch_agg``) takes one path at any group
+count: Catalyst reduces the HLL registers (``groupBy(keys, idx).max(σ)``,
+map-side combined, so never more register rows than data rows leave a
+partition), then one sorted ``mapInArrow`` pass (``_jvm_finalize``)
+estimates or serializes each group from its register rows. ``HllAggregator``
+is the BinaryType mergeable aggregator behind ``hll_merged_sketch``,
+checkpointed builds, streaming and ``hashing="parity"``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from typing import Any
 
 import numpy as np
@@ -151,14 +159,15 @@ def _jvm_register_rows(
 ) -> DataFrame:
     """JVM-side HLL register reduction: idx/σ via codegen bit ops, then
     ``groupBy(keys, idx).max(σ)`` — Catalyst's map-side partial aggregation
-    collapses each partition to ≤ m rows before the shuffle, so the network
-    moves register rows, never data rows. Every row carries tag 0: the
-    one-column case of ``_jvm_multi_register_rows``."""
+    collapses each partition to its observed (group, idx) pairs before the
+    shuffle, so the network moves register rows, never data rows, and never
+    more of them than the partition has data rows. The one-column case of
+    ``_jvm_multi_register_rows``, without its ``__col`` tag."""
     packed = _hll_register_expr(F.xxhash64(*[F.col(c) for c in cols]), p)
     return _max_registers(
         df.select(*[F.col(c) for c in group_cols], packed.alias("__packed")),
         group_cols,
-    ).withColumn("__col", F.lit(0))
+    )
 
 
 def _max_registers(packed_rows: DataFrame, keys: list[str]) -> DataFrame:
@@ -174,60 +183,48 @@ def _jvm_finalize(
     group_cols: list[str],
     p: int,
     tail_fields: list[T.StructField],
-    emit: Callable[[np.ndarray, int], Any] = hll.estimate_registers,
+    sketch: bool = False,
 ) -> DataFrame:
-    """The one finalize of the JVM HLL engines: per group, tag i's
-    registers are assembled from its ``(__col, __idx, __rank)`` rows and
-    ``emit(regs, p)`` gives the i-th tail field (an estimate, or with
-    ``hll._serialize_dense`` the sketch bytes). A NULL tag (a row NULL in
-    every column) keeps its group alive and sets no register. Only
-    ≤ #tags · 2^p register rows per group reach Python, never data rows."""
-    n_tags = len(tail_fields)
+    """The one finalize of every ``hashing="spark"`` count-distinct. Per
+    group, the i-th tail field comes from the ``(__idx, __rank)`` rows with
+    ``__col`` = i (every row when ``reg_rows`` has no ``__col``); they are
+    unique per idx, since they come out of ``groupBy(..., __idx)``. It is
+    computed from the pairs with no m-byte register array: the estimate
+    from the rank histogram, or with ``sketch`` the serialized sketch
+    (sparse or dense, as ``hll._serialize_dense`` picks). A NULL tag (a row
+    NULL in every column) keeps its group alive and sets no register."""
+    m = 1 << p
+    tag_col = ["__col"] if "__col" in reg_rows.columns else []
+
+    def emit(idx: np.ndarray, rank: np.ndarray):
+        if sketch:
+            order = np.argsort(idx)
+            return hll._serialize(p, idx[order], rank[order])
+        counts = np.bincount(rank, minlength=1)
+        counts[0] = m - len(rank)  # the unset registers
+        return hll.estimate_histogram(counts, p)
 
     def reduce(group: pa.Table) -> tuple:
-        regs = np.zeros((n_tags, 1 << p), dtype=np.uint8)
-        real = group.select(["__col", "__idx", "__rank"]).drop_null()
-        regs[real["__col"].to_numpy(), real["__idx"].to_numpy()] = (
-            real["__rank"].to_numpy()
+        real = group.select(["__idx", "__rank", *tag_col]).drop_null()
+        idx, rank = real["__idx"].to_numpy(), real["__rank"].to_numpy()
+        if not tag_col:
+            return (emit(idx, rank),)
+        tag = real["__col"].to_numpy()
+        return tuple(
+            emit(idx[tag == i], rank[tag == i])
+            for i in range(len(tail_fields))
         )
-        return tuple(emit(r, p) for r in regs)
 
     return reduce_sorted_groups(reg_rows, group_cols, tail_fields, reduce)
 
 
-#: grouped jvm-engine state budget: pre-merge register rows are bounded by
-#: #groups × 2^p; past this the shuffle/sort state dwarfs the arrow path's
-#: sparse sketch rows (which scale with OBSERVED cardinality per group).
-JVM_GROUPED_ROW_BUDGET = 1 << 26
+def _check_engine(engine: str | None) -> None:
+    if engine not in (None, "arrow", "jvm"):
+        raise ValueError(f"engine must be 'arrow' or 'jvm': {engine!r}")
 
 
-def _resolve_jvm_grouped(
-    engine: str, group_by: list[str], p: int, expected_groups: int | None
-) -> str:
-    """Scale guard for engine='jvm' with group_by (VERDICT round 1 #4).
-
-    Grouped jvm-engine state grows as #groups × 2^p register rows before
-    the map-side combine; at high group cardinality that beats the data
-    itself. Callers must size it via ``expected_groups``:
-
-    - group_by + expected_groups within budget  -> jvm (the fast path)
-    - group_by + expected_groups over budget    -> ValueError (explicit)
-    - group_by + expected_groups=None           -> auto-fallback to arrow
-      (sparse sketch rows are the safe default at unknown cardinality)
-    """
-    if engine != "jvm" or not group_by:
-        return engine
-    if expected_groups is None:
-        return "arrow"
-    if expected_groups * (1 << p) > JVM_GROUPED_ROW_BUDGET:
-        raise ValueError(
-            f"engine='jvm' with group_by and expected_groups="
-            f"{expected_groups} implies up to {expected_groups * (1 << p)} "
-            f"register rows (> budget {JVM_GROUPED_ROW_BUDGET}); use "
-            f"engine='arrow' (sparse sketch rows scale with observed "
-            f"cardinality) or lower p"
-        )
-    return "jvm"
+def _as_list(cols: str | list[str] | None) -> list[str]:
+    return [cols] if isinstance(cols, str) else list(cols or [])
 
 
 def approx_distinct(
@@ -237,8 +234,7 @@ def approx_distinct(
     p: int = hll.DEFAULT_P,
     hashing: str = "spark",
     alias: str = "approx_distinct",
-    engine: str = "arrow",
-    expected_groups: int | None = None,
+    engine: str | None = None,
 ) -> DataFrame:
     """HLL approximate count-distinct of ``cols`` (optionally per group).
 
@@ -246,37 +242,27 @@ def approx_distinct(
     NULL are excluded. On empty input the result has zero rows (not a 0-count
     row) — the grouped-aggregation convention.
 
-    engine="arrow" (default): two-phase BinaryType sketch aggregation via
-        mapInArrow — the mergeable-UDAF path; sketches are reusable,
-        storable, streamable. Best when group cardinality is high (sparse
-        sketch rows beat register rows).
-    engine="jvm": register reduction stays in whole-stage codegen; only
-        ≤ m register rows per group ever leave the JVM. ~10-20× faster for
-        global / low-cardinality-group counts at scale — nothing but the
-        estimator math runs in Python. Registers (and therefore estimates)
-        are BIT-IDENTICAL to engine="arrow" with hashing="spark".
-        With ``group_by``, pass ``expected_groups`` (state is #groups × 2^p
-        register rows): omitted -> auto-fallback to arrow; over budget ->
-        ValueError. See ``_resolve_jvm_grouped``.
-    """
-    cols = [cols] if isinstance(cols, str) else list(cols)
-    group_by = (
-        [group_by] if isinstance(group_by, str) else list(group_by or [])
-    )
+    hashing="spark" (default): the registers reduce in whole-stage codegen
+        (``groupBy(keys, idx).max(σ)`` with map-side combine), and one
+        sorted ``mapInArrow`` pass estimates each group from its register
+        rows — at any group count, no data row reaches Python.
+    hashing="parity": the reference's hash functions, computed in numpy
+        by the two-phase ``sketch_agg(HllAggregator(p, "parity"))``.
+
+    ``engine`` selects nothing: ``"arrow"`` and ``"jvm"`` are accepted (any
+    other value raises) and run the same path as omitting it."""
+    hll._validate_p(p)
+    _check_engine(engine)
+    cols, group_by = _as_list(cols), _as_list(group_by)
     clean = _drop_null_rows(df, cols)
-    engine = _resolve_jvm_grouped(engine, group_by, p, expected_groups)
-    if engine == "jvm":
-        if hashing != "spark":
-            raise ValueError("engine='jvm' supports hashing='spark' only")
-        reg_rows = _jvm_register_rows(clean, cols, p, group_by)
-        return _jvm_finalize(
-            reg_rows, group_by, p, [T.StructField(alias, T.LongType(), False)]
-        )
-    if engine != "arrow":
-        raise ValueError(f"engine must be 'arrow' or 'jvm': {engine!r}")
-    agg = HllAggregator(p=p, hashing=hashing)
-    out = sketch_agg(clean, cols, agg, group_by)
-    return out.withColumnRenamed("approx_distinct", alias)
+    if hashing != "spark":
+        agg = HllAggregator(p=p, hashing=hashing)
+        out = sketch_agg(clean, cols, agg, group_by)
+        return out.withColumnRenamed("approx_distinct", alias)
+    return _jvm_finalize(
+        _jvm_register_rows(clean, cols, p, group_by), group_by, p,
+        [T.StructField(alias, T.LongType(), False)],
+    )
 
 
 def hll_sketch_agg(
@@ -285,36 +271,22 @@ def hll_sketch_agg(
     group_by: str | list[str] | None = None,
     p: int = hll.DEFAULT_P,
     hashing: str = "spark",
-    engine: str = "arrow",
-    expected_groups: int | None = None,
 ) -> DataFrame:
     """Like approx_distinct but returns the merged sketch (BinaryType) per
     group — composable: store it, merge it later, estimate at the driver.
-
-    engine="jvm" builds the same sketch BYTES via codegen register
-    reduction (only register rows cross to Python) — the scale path when
-    group cardinality is modest; with ``group_by`` pass ``expected_groups``
-    (see ``approx_distinct``: omitted -> arrow fallback, over budget ->
-    ValueError)."""
-    cols = [cols] if isinstance(cols, str) else list(cols)
-    group_by = (
-        [group_by] if isinstance(group_by, str) else list(group_by or [])
-    )
+    Under hashing="spark" the sketch bytes are serialized from the
+    codegen-reduced register rows (the ``approx_distinct`` path); they
+    equal the bytes of ``sketch_agg(HllAggregator(p), finalize=False)``."""
+    hll._validate_p(p)
+    cols, group_by = _as_list(cols), _as_list(group_by)
     clean = _drop_null_rows(df, cols)
-    engine = _resolve_jvm_grouped(engine, group_by, p, expected_groups)
-    if engine == "jvm":
-        if hashing != "spark":
-            raise ValueError("engine='jvm' supports hashing='spark' only")
-        reg_rows = _jvm_register_rows(clean, cols, p, group_by)
-        return _jvm_finalize(
-            reg_rows, group_by, p,
-            [T.StructField(SKETCH_COL, T.BinaryType(), False)],
-            emit=lambda regs, p: hll._serialize_dense(p, regs),
-        )
-    if engine != "arrow":
-        raise ValueError(f"engine must be 'arrow' or 'jvm': {engine!r}")
-    agg = HllAggregator(p=p, hashing=hashing)
-    return sketch_agg(clean, cols, agg, group_by, finalize=False)
+    if hashing != "spark":
+        agg = HllAggregator(p=p, hashing=hashing)
+        return sketch_agg(clean, cols, agg, group_by, finalize=False)
+    return _jvm_finalize(
+        _jvm_register_rows(clean, cols, p, group_by), group_by, p,
+        [T.StructField(SKETCH_COL, T.BinaryType(), False)], sketch=True,
+    )
 
 
 def hll_merged_sketch(
@@ -327,7 +299,7 @@ def hll_merged_sketch(
     """Distributed partial build + CLUSTER-side tree-merge (one row to the
     driver); ``fan_in`` caps partials per merge task — lower it for
     byte-heavy custom precisions."""
-    cols = [cols] if isinstance(cols, str) else list(cols)
+    cols = _as_list(cols)
     agg = HllAggregator(p=p, hashing=hashing)
     return collect_merged(_drop_null_rows(df, cols), cols, agg, fan_in=fan_in)
 
@@ -407,7 +379,6 @@ def approx_distinct_verified(
     p: int = hll.DEFAULT_P,
     alias: str = "n_exact",
     k: float = 3.0,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Error-bound verification query: one row ``(alias, est_in_bound)``
     where ``alias`` is the EXACT distinct count and ``est_in_bound`` asserts
@@ -423,8 +394,8 @@ def approx_distinct_verified(
     verification scale (this is a test harness, not the production path)
     that is the point — production uses ``approx_distinct`` alone.
     """
-    cols = [cols] if isinstance(cols, str) else list(cols)
-    est = approx_distinct(df, cols, p=p, alias="__est", engine=engine)
+    cols = _as_list(cols)
+    est = approx_distinct(df, cols, p=p, alias="__est")
     exact = _drop_null_rows(df, cols).agg(
         F.count_distinct(*[F.col(c) for c in cols]).alias(alias)
     )
@@ -468,99 +439,16 @@ def _hll_packed_register_expr(col: Column | str, p: int) -> Column:
     )
 
 
-def _pack_multi(sketches: list[bytes]) -> bytes:
-    import struct
-
-    parts = [b"MS", bytes([len(sketches)])]
-    for s in sketches:
-        parts.append(struct.pack("<I", len(s)))
-        parts.append(s)
-    return b"".join(parts)
-
-
-def _unpack_multi(buf: bytes) -> list[bytes]:
-    import struct
-
-    if buf[:2] != b"MS":
-        raise ValueError("not a multi-sketch envelope")
-    n, off, out = buf[2], 3, []
-    for _ in range(n):
-        (ln,) = struct.unpack_from("<I", buf, off)
-        off += 4
-        out.append(bytes(buf[off:off + ln]))
-        off += ln
-    return out
-
-
-class MultiHllAggregator(SketchAggregator):
-    """One HLL per column, ONE scan. The ANALYZE-TABLE shape: at 100 TB a
-    second pass costs more than every sketch combined, so N per-column
-    distinct counts must ride a single FileScan. Each partial row carries a
-    multi-sketch envelope (count + length-prefixed cells); merge is
-    component-wise, so the whole thing rides the standard two-phase
-    pipeline unchanged. Null semantics are per-column COUNT(DISTINCT c):
-    a NULL in one column drops that column's update only."""
-
-    name = "hll_multi"
-
-    def __init__(self, cols: list[str], p: int = hll.DEFAULT_P):
-        if not 4 <= p <= 16:
-            raise ValueError(f"precision p must be in [4, 16], got {p}")
-        if not cols:
-            raise ValueError("need at least one column")
-        self.cols = list(cols)
-        self.p = p
-        self.finalize_fields = [
-            T.StructField(f"n_{c}", T.LongType(), False) for c in self.cols
-        ]
-
-    def prepare_columns(self, df: DataFrame, cols: list[str]):
-        return [_hll_packed_register_expr(c, self.p) for c in cols]
-
-    def build_grouped(self, codes, values, n_groups) -> list[bytes]:
-        per_col: list[list[bytes]] = []
-        for i in range(len(self.cols)):
-            arr = values[f"__v{i}"]
-            c = codes
-            if arr.null_count:
-                mask = ~np.asarray(arr.is_null())
-                arr = arr.drop_null()
-                c = codes[mask]
-            packed = arr.to_numpy(zero_copy_only=False).astype(np.int64)
-            per_col.append(hll.group_from_registers(
-                c, packed >> 7, (packed & 127).astype(np.uint8),
-                n_groups, self.p,
-            ))
-        return [
-            _pack_multi([per_col[i][g] for i in range(len(self.cols))])
-            for g in range(n_groups)
-        ]
-
-    def merge_many(self, packs: list[bytes]) -> bytes:
-        comps = [_unpack_multi(bytes(b)) for b in packs]
-        return _pack_multi([
-            hll.merge_many([c[i] for c in comps])
-            for i in range(len(comps[0]))
-        ])
-
-    def finalize(self, pack: bytes) -> dict[str, Any]:
-        return {
-            f"n_{c}": hll.estimate(s)
-            for c, s in zip(self.cols, _unpack_multi(bytes(pack)))
-        }
-
-
 def _jvm_multi_register_rows(
     df: DataFrame, cols: list[str], p: int, group_cols: list[str]
 ) -> DataFrame:
     """One-scan per-column register reduction fully JVM-side: every row
     emits one (column-tag, packed-register) entry per NON-NULL column
-    (the per-column COUNT(DISTINCT) null rule) through the same packed
-    kernel the arrow path uses, then ``groupBy(tag, idx).max(sigma)``
-    map-side-combines each partition to <= n_cols * 2^p register rows
-    before the shuffle. No data row and no Arrow batch leaves the JVM —
-    the multi-column analogue of ``_jvm_register_rows``, with identical
-    registers to the arrow ``MultiHllAggregator`` by construction."""
+    (the per-column COUNT(DISTINCT) null rule) through the one packed
+    kernel, then ``groupBy(tag, idx).max(sigma)`` map-side-combines each
+    partition before the shuffle. No data row and no Arrow batch leaves
+    the JVM — the multi-column analogue of ``_jvm_register_rows``, with
+    the registers of the single-column path by construction."""
     # hash in a plain (codegen'd) Project first, not inside the Generate
     packed = df.select(
         *[F.col(g) for g in group_cols],
@@ -590,36 +478,29 @@ def approx_distinct_multi(
     cols: list[str],
     group_by: str | list[str] | None = None,
     p: int = hll.DEFAULT_P,
-    engine: str = "arrow",
-    expected_groups: int | None = None,
+    engine: str | None = None,
 ) -> DataFrame:
     """Per-column approximate distinct counts for ALL of ``cols`` in one
-    scan (columns ``n_<col>``, optionally per group). Estimates are
-    bit-identical to running approx_distinct per column — same registers,
-    one pass.
+    scan (columns ``n_<col>``, optionally per group) — the ANALYZE-TABLE
+    shape: at 100 TB a second pass costs more than every sketch combined.
+    Null semantics are per-column COUNT(DISTINCT c): a NULL in one column
+    drops that column's update only, and a group NULL in every column is
+    kept with n_c = 0.
 
-    ``engine='jvm'`` keeps the whole reduction in whole-stage codegen:
-    each row explodes into one register entry per non-null column and
-    Catalyst's map-side combine collapses every partition to
-    <= n_cols * 2^p register rows before the shuffle — nothing crosses
-    the Arrow boundary per data row. At 300k rows × 3 columns on 4 cores
-    both engines take about 1 s. Grouped use requires
-    ``expected_groups``, budget-checked per column (same trade as
+    Each row explodes into one register entry per non-null column and
+    Catalyst's map-side combine reduces them before the shuffle, so no data
+    row crosses the Arrow boundary; estimates are bit-identical to running
+    ``approx_distinct`` per column. ``engine`` selects nothing (see
     ``approx_distinct``)."""
-    agg = MultiHllAggregator(cols, p=p)  # checks p and cols, both engines
-    if engine not in ("arrow", "jvm"):
-        raise ValueError(f"engine must be 'arrow' or 'jvm': {engine!r}")
-    group_by = (
-        [group_by] if isinstance(group_by, str) else list(group_by or [])
+    hll._validate_p(p)
+    if not cols:
+        raise ValueError("need at least one column")
+    _check_engine(engine)
+    group_by = _as_list(group_by)
+    return _jvm_finalize(
+        _jvm_multi_register_rows(df, cols, p, group_by), group_by, p,
+        [T.StructField(f"n_{c}", T.LongType(), False) for c in cols],
     )
-    engine = _resolve_jvm_grouped(
-        engine, group_by, p,
-        None if expected_groups is None else expected_groups * len(cols),
-    )
-    if engine == "jvm":
-        reg_rows = _jvm_multi_register_rows(df, cols, p, group_by)
-        return _jvm_finalize(reg_rows, group_by, p, agg.finalize_fields)
-    return sketch_agg(df, cols, agg, group_by)
 
 
 # ------------------------------------------------------- packed-binary ingest
@@ -727,9 +608,7 @@ def approx_distinct_packed(
     the distributed form of the reference's byte-buffer/Stream ingest
     (``AddAs*``; Streams arrive as Structured Streaming micro-batches of
     binary rows instead, see hyperloglog_spark.streaming)."""
-    group_by = (
-        [group_by] if isinstance(group_by, str) else list(group_by or [])
-    )
+    group_by = _as_list(group_by)
     agg = PackedBinaryHllAggregator(value_type=value_type, p=p)
     return sketch_agg(
         df.filter(F.col(binary_col).isNotNull()), [binary_col], agg, group_by

@@ -1,7 +1,7 @@
 """Sketch-column re-aggregation (rollup): merge STORED sketches, no rescan.
 
 This is the pattern that makes sketches valuable in a lakehouse: persist
-per-(day, key) sketch rows once (`hll_sketch_agg(..., engine=...)`,
+per-(day, key) sketch rows once (`hll_sketch_agg`,
 `cms_sketch_agg`, ...), then answer every coarser query — per key, per
 week, global — by merging the stored BinaryType cells. At 10^12-turn
 scale the rollup input is millions of ~KB sketch rows, not the trillion

@@ -320,8 +320,14 @@ def estimate(sketch: bytes) -> int:
 
 
 def estimate_registers(regs: np.ndarray, p: int) -> int:
+    return estimate_histogram(np.bincount(regs, minlength=1), p)
+
+
+def estimate_histogram(counts: np.ndarray, p: int) -> int:
+    """The HLL++ estimate from the register-rank histogram alone
+    (``counts[r]`` = number of registers holding rank r; Heule et al. 2013,
+    Ertl 2017): no m-byte register array is needed."""
     m = 1 << p
-    counts = np.bincount(regs, minlength=1)
     v = float(counts[0])
     # zInverse = sum(2^-reg) computed per distinct register value (exact in
     # float64: each term is counts[r] * 2^-r, r <= 65)

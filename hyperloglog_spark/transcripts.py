@@ -51,9 +51,8 @@ def distinct_conversations(df: DataFrame, p: int = 14) -> DataFrame:
 def distinct_texts_by_role_tool(df: DataFrame, p: int = 14,
                                 **kw) -> DataFrame:
     """Approximate distinct turn texts per (role, tool). Extra kwargs pass
-    through to ``approx_distinct`` — the (role, tool) group space is tiny
-    and known, so ``engine="jvm", expected_groups=64`` keeps the whole
-    reduction in codegen (~2.8x at 20M turns, bit-identical estimates)."""
+    through to ``approx_distinct``; its register reduction stays in
+    codegen at any group count."""
     return approx_distinct(
         df, "text", group_by=["role", "tool"], p=p, alias="approx_texts",
         **kw

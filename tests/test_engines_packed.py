@@ -1,51 +1,91 @@
-"""engine='jvm' register reduction parity + packed-binary (AddAs*) ingest
-+ one-shot count_prehashed."""
+"""The one count-distinct path (codegen register reduction + the sorted
+register-row finalize) against the two-phase ``HllAggregator`` reference,
+its scale past the old grouped-row budget, packed-binary (AddAs*) ingest
+and one-shot count_prehashed."""
+
+import re
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from hyperloglog_spark import approx_distinct
-from hyperloglog_spark.functions import approx_distinct_packed
+from hyperloglog_spark import approx_distinct, hll_sketch_agg
+from hyperloglog_spark.engine.aggregate import SKETCH_COL, sketch_agg
+from hyperloglog_spark.engine.plans import _nodes, python_operators
+from hyperloglog_spark.functions import (
+    HllAggregator,
+    _drop_null_rows,
+    approx_distinct_packed,
+)
 from hyperloglog_spark.sketch import hll
 from hyperloglog_spark.sketch.hashing import mix64
 
 
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _reference(df, cols, p=14, group_by=(), finalize=True):
+    """The two-phase ``sketch_agg(HllAggregator(p))`` answer."""
+    cols = [cols] if isinstance(cols, str) else list(cols)
+    return sketch_agg(_drop_null_rows(df, cols), cols, HllAggregator(p),
+                      list(group_by), finalize=finalize)
+
+
 def test_jvm_engine_matches_arrow_global(spark, sf01_dir):
     ev = spark.read.parquet(f"{sf01_dir}/events.parquet")
-    a = approx_distinct(ev, "user_id", engine="arrow").first()[0]
-    j = approx_distinct(ev, "user_id", engine="jvm").first()[0]
-    assert a == j                       # identical registers -> identical
+    want = _reference(ev, "user_id").first()[0]
+    for engine in (None, "arrow", "jvm"):   # engine selects nothing
+        assert approx_distinct(ev, "user_id", engine=engine).first()[0] \
+            == want
 
 
 def test_jvm_engine_matches_arrow_grouped(spark, sf01_dir):
     ev = spark.read.parquet(f"{sf01_dir}/events.parquet")
-    a = {tuple(r)[:1]: r[-1] for r in approx_distinct(
-        ev, "user_id", group_by="event_type", engine="arrow").collect()}
-    j = {tuple(r)[:1]: r[-1] for r in approx_distinct(
-        ev, "user_id", group_by="event_type", engine="jvm",
-        expected_groups=8).collect()}
-    assert a == j
+    got = approx_distinct(ev, "user_id", group_by="event_type")
+    assert _rows(got) == _rows(
+        _reference(ev, "user_id", group_by=["event_type"]))
 
 
 def test_jvm_engine_composite_key_and_p(spark, sf01_dir):
     orders = spark.read.parquet(f"{sf01_dir}/orders.parquet")
+    cols = ["o_custkey", "o_orderpriority"]
     for p in (10, 14, 16):
-        a = approx_distinct(orders, ["o_custkey", "o_orderpriority"],
-                            p=p, engine="arrow").first()[0]
-        j = approx_distinct(orders, ["o_custkey", "o_orderpriority"],
-                            p=p, engine="jvm").first()[0]
-        assert a == j, p
+        got = approx_distinct(orders, cols, p=p).first()[0]
+        assert got == _reference(orders, cols, p).first()[0], p
 
 
 def test_jvm_engine_shuffle_budget(spark, sf01_dir):
     from hyperloglog_spark.engine.plans import assert_max_exchanges
 
     ev = spark.read.parquet(f"{sf01_dir}/events.parquet")
-    q = approx_distinct(ev, "user_id", group_by="event_type", engine="jvm",
-                        expected_groups=8)
+    q = approx_distinct(ev, "user_id", group_by="event_type")
     # register agg (1, with map-side partial) + group finalize (1)
     assert_max_exchanges(q, 2)
+
+
+def test_register_path_scales_past_the_old_grouped_row_budget(spark):
+    """20,000 groups at p=16: #groups x 2^p is 1.3e9 register rows, about
+    20x the 2^26-row budget that used to push such queries off this path.
+    The map-side combine never emits more rows than it reads, so the
+    shuffled register rows stay below the 40,000 input rows; estimates and
+    sketch bytes equal the two-phase reference."""
+    n_rows, p = 40_000, 16
+    df = spark.range(n_rows).select(
+        (F.col("id") % 20_000).alias("g"), F.col("id").alias("v"))
+    est = approx_distinct(df, "v", group_by="g", p=p)
+    [(name, below)] = python_operators(est)
+    assert name == "MapInArrow"
+    assert re.search(r"HashAggregate\(.*__idx", below)
+    assert _rows(est) == _rows(_reference(df, "v", p, ["g"]))
+    assert len(_rows(est)) == 20_000
+    sk = hll_sketch_agg(df, "v", group_by="g", p=p)
+    assert _rows(sk) == _rows(_reference(df, "v", p, ["g"], finalize=False))
+    # rows out of the map-side partial and the final register aggregate
+    agg_rows = [node.metrics().get("numOutputRows").get().value()
+                for node, _ in _nodes(est)
+                if node.nodeName() == "HashAggregate"]
+    assert len(agg_rows) == 2 and max(agg_rows) <= n_rows
 
 
 # ------------------------------------------------------------ packed binary
@@ -162,52 +202,11 @@ def test_parity_float_truncation_hashing(spark):
 
 
 def test_jvm_sketch_agg_bytes_identical(spark, sf01_dir):
-    """hll_sketch_agg: jvm engine produces BYTE-IDENTICAL sketches to the
-    arrow UDAF path (same registers -> same deterministic codec choice)."""
-    from hyperloglog_spark import hll_sketch_agg
-
+    """hll_sketch_agg serializes the register rows to the BYTES of the
+    two-phase UDAF (same registers -> same deterministic codec choice)."""
     ev = spark.read.parquet(f"{sf01_dir}/events.parquet")
-    a = {r["event_type"]: bytes(r["sketch"]) for r in hll_sketch_agg(
-        ev, "user_id", group_by="event_type", engine="arrow").collect()}
-    j = {r["event_type"]: bytes(r["sketch"]) for r in hll_sketch_agg(
-        ev, "user_id", group_by="event_type", engine="jvm",
-        expected_groups=8).collect()}
-    assert a == j
-    ga = bytes(hll_sketch_agg(ev, "user_id", engine="arrow").first()["sketch"])
-    gj = bytes(hll_sketch_agg(ev, "user_id", engine="jvm").first()["sketch"])
-    assert ga == gj
-
-
-# -------------------------------------------------- grouped jvm scale guard
-
-
-def test_jvm_grouped_without_expected_groups_falls_back(spark, sf01_dir):
-    """VERDICT round 1 #4: unknown group cardinality must not run the jvm
-    register-row path (state = #groups x 2^p). Fallback result must still
-    be bit-identical (same registers either way)."""
-    ev = spark.read.parquet(f"{sf01_dir}/events.parquet")
-    fb = approx_distinct(ev, "user_id", group_by="event_type", engine="jvm")
-    # no ArrowEvalPython register scan: the arrow path's mapInArrow shows
-    # up instead of the jvm path's groupBy(__idx) aggregate
-    plan = fb._sc._jvm.PythonSQLUtils.explainString(
-        fb._jdf.queryExecution(), "formatted")
-    assert "__idx" not in plan
-    want = approx_distinct(
-        ev, "user_id", group_by="event_type", engine="arrow").collect()
-    assert sorted(map(tuple, fb.collect())) == sorted(map(tuple, want))
-
-
-def test_jvm_grouped_over_budget_raises(spark, sf01_dir):
-    ev = spark.read.parquet(f"{sf01_dir}/events.parquet")
-    with pytest.raises(ValueError, match="register rows"):
-        approx_distinct(ev, "user_id", group_by="event_type", engine="jvm",
-                        p=16, expected_groups=10_000_000)
-
-
-def test_jvm_grouped_within_budget_uses_jvm(spark, sf01_dir):
-    ev = spark.read.parquet(f"{sf01_dir}/events.parquet")
-    q = approx_distinct(ev, "user_id", group_by="event_type", engine="jvm",
-                        expected_groups=8)
-    plan = q._sc._jvm.PythonSQLUtils.explainString(
-        q._jdf.queryExecution(), "formatted")
-    assert "__idx" in plan
+    got = hll_sketch_agg(ev, "user_id", group_by="event_type")
+    assert _rows(got) == _rows(_reference(
+        ev, "user_id", group_by=["event_type"], finalize=False))
+    assert bytes(hll_sketch_agg(ev, "user_id").first()[SKETCH_COL]) == \
+        bytes(_reference(ev, "user_id", finalize=False).first()[SKETCH_COL])

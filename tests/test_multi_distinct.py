@@ -1,6 +1,6 @@
 """approx_distinct_multi: N per-column distinct counts in ONE scan —
 estimates bit-identical to per-column approx_distinct, per-column null
-semantics, single FileScan + single Exchange in the plan."""
+semantics, a single FileScan in the plan and no shuffle of data rows."""
 
 from __future__ import annotations
 
@@ -9,12 +9,41 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from hyperloglog_spark import approx_distinct, approx_distinct_multi
+from hyperloglog_spark import (
+    approx_distinct,
+    approx_distinct_multi,
+    hll_sketch_agg,
+)
+from hyperloglog_spark.engine.aggregate import sketch_agg
 from hyperloglog_spark.engine.plans import (
-    assert_max_exchanges,
     assert_pruned_scan,
+    exchange_inputs,
+    n_exchanges,
     python_operators,
 )
+from hyperloglog_spark.functions import HllAggregator
+
+
+def _reference(df, cols, p=14, group_by=()):
+    """n_<c> per group from the two-phase ``sketch_agg(HllAggregator(p))``
+    over column c's non-NULL rows; a group with none holds 0."""
+    group_by = [group_by] if isinstance(group_by, str) else list(group_by)
+    keys = [tuple(r) for r in df.select(*group_by).distinct().collect()]
+    out = {k: [0] * len(cols) for k in keys}
+    for i, c in enumerate(cols):
+        clean = df.filter(F.col(c).isNotNull())
+        for r in sketch_agg(clean, [c], HllAggregator(p), group_by).collect():
+            out[tuple(r)[:-1]][i] = r[-1]
+    return out
+
+
+def _rows_by_key(q, group_by=()):
+    group_by = [group_by] if isinstance(group_by, str) else list(group_by)
+    got = {}
+    for r in q.collect():
+        got[tuple(r[g] for g in group_by)] = [
+            r[f] for f in q.columns if f not in group_by]
+    return got
 
 
 @pytest.fixture(scope="module")
@@ -58,7 +87,10 @@ class TestMultiDistinct:
         q = approx_distinct_multi(fresh, ["user_id", "event_type"])
         plan = q._jdf.queryExecution().executedPlan().toString()
         assert plan.count("FileScan") == 1      # ONE pass over the data
-        assert_max_exchanges(q, 1)
+        # the register aggregate's shuffle + the finalize's repartition,
+        # each fed by an aggregate: data rows shuffle zero times
+        assert n_exchanges(q) == 2
+        assert exchange_inputs(q) == ["HashAggregate"] * 2
         assert_pruned_scan(q, {"user_id", "event_type"})
 
     def test_all_null_column_counts_zero(self, spark):
@@ -71,28 +103,27 @@ class TestMultiDistinct:
 
 
 class TestMultiDistinctJvmEngine:
-    """engine='jvm' keeps the multi-column reduction in whole-stage
-    codegen (explode to (tag, packed) register entries + map-side-combined
-    groupBy); same packed kernel as the arrow MultiHllAggregator, so the
-    registers — and therefore estimates — are bit-identical."""
+    """The multi-column reduction stays in whole-stage codegen (explode to
+    (tag, packed) register entries + map-side-combined groupBy) through
+    the one packed kernel, so each column's registers — and estimates —
+    are those of the two-phase ``HllAggregator`` over that column.
+    ``engine`` is accepted and selects nothing."""
 
     def test_global_identical_to_arrow(self, events):
         cols = ["user_id", "event_type", "value"]
-        a = approx_distinct_multi(events, cols).collect()
-        j = approx_distinct_multi(events, cols, engine="jvm").collect()
-        assert a == j
+        want = _reference(events, cols)
+        for engine in (None, "arrow", "jvm"):
+            got = approx_distinct_multi(events, cols, engine=engine)
+            assert _rows_by_key(got) == want
 
     def test_grouped_identical_with_nulls(self, events):
         withnulls = events.withColumn(
             "maybe", F.when(F.col("event_id") % 7 != 0, F.col("user_id"))
         )
         cols = ["user_id", "maybe"]
-        a = (approx_distinct_multi(withnulls, cols, group_by="event_type")
-             .orderBy("event_type").collect())
-        j = (approx_distinct_multi(withnulls, cols, group_by="event_type",
-                                   engine="jvm", expected_groups=8)
-             .orderBy("event_type").collect())
-        assert a == j
+        got = approx_distinct_multi(withnulls, cols, group_by="event_type")
+        assert _rows_by_key(got, "event_type") == _reference(
+            withnulls, cols, group_by="event_type")
 
     def test_all_null_column_counts_zero_jvm(self, spark):
         df = spark.createDataFrame(
@@ -105,62 +136,50 @@ class TestMultiDistinctJvmEngine:
     def test_single_scan_no_arrow_udf_in_reduction(self, spark, sf01_dir):
         spark.catalog.clearCache()
         fresh = spark.read.parquet(f"{sf01_dir}/events.parquet")
-        q = approx_distinct_multi(
-            fresh, ["user_id", "event_type"], engine="jvm"
-        )
+        q = approx_distinct_multi(fresh, ["user_id", "event_type"])
         plan = q._jdf.queryExecution().executedPlan().toString()
         assert plan.count("FileScan") == 1
         # the per-row reduction is JVM hash aggregation; the one Python
-        # stage (the per-group register assembly, <= n_cols * 2^p rows)
-        # sits above that aggregate, so no data row reaches Python
+        # stage (the per-group register finalize) sits above that
+        # aggregate, so no data row reaches Python
         [(_, below)] = python_operators(q)
         assert re.search(r"HashAggregate\(.*__idx", below)
         assert_pruned_scan(q, {"user_id", "event_type"})
 
-    def test_grouped_budget_guard(self, events):
-        # unknown group cardinality -> silent arrow fallback (same rule
-        # as approx_distinct); over budget -> explicit error
-        q = approx_distinct_multi(
-            events, ["user_id", "value"], group_by="event_type",
-            engine="jvm",
-        )
-        plan = q._sc._jvm.PythonSQLUtils.explainString(
-            q._jdf.queryExecution(), "formatted")
-        assert "__idx" not in plan
-        with pytest.raises(ValueError, match="budget"):
-            approx_distinct_multi(
-                events, ["user_id", "value"], group_by="event_type",
-                engine="jvm", expected_groups=1 << 24,
-            )
-
     def test_all_null_groups_match_arrow(self, spark):
         """A group (or the whole input) whose rows are NULL in every
-        column is kept with n_c = 0 by both engines."""
+        column is kept with n_c = 0."""
         df = spark.createDataFrame(
             [("g1", "a", 1), ("g1", None, 2), ("g2", None, None),
              ("g2", None, None), (None, None, None)],
             "g string, s string, i int",
         )
-        kw = dict(group_by="g")
-        a = approx_distinct_multi(df, ["s", "i"], **kw).orderBy("g").collect()
-        j = (approx_distinct_multi(df, ["s", "i"], engine="jvm",
-                                   expected_groups=3, **kw)
-             .orderBy("g").collect())
-        assert a == j
-        assert [(r["g"], r["n_s"], r["n_i"]) for r in j] == [
+        got = approx_distinct_multi(df, ["s", "i"], group_by="g")
+        assert _rows_by_key(got, "g") == _reference(df, ["s", "i"],
+                                                    group_by="g")
+        assert [(r["g"], r["n_s"], r["n_i"])
+                for r in got.orderBy("g").collect()] == [
             (None, 0, 0), ("g1", 1, 2), ("g2", 0, 0)
         ]
         nulls = df.filter(F.col("s").isNull() & F.col("i").isNull())
-        a = approx_distinct_multi(nulls, ["s", "i"]).collect()
-        j = approx_distinct_multi(nulls, ["s", "i"], engine="jvm").collect()
-        assert a == j
+        j = approx_distinct_multi(nulls, ["s", "i"]).collect()
         assert [(r["n_s"], r["n_i"]) for r in j] == [(0, 0)]
 
     @pytest.mark.parametrize("engine", ["arrow", "jvm"])
     @pytest.mark.parametrize("p", [3, 17])
     def test_precision_checked_before_dispatch(self, events, engine, p):
-        with pytest.raises(ValueError, match="precision p"):
-            approx_distinct_multi(events, ["user_id"], p=p, engine=engine)
+        for run in (
+            lambda: approx_distinct_multi(events, ["user_id"], p=p,
+                                          engine=engine),
+            lambda: approx_distinct(events, "user_id", p=p, engine=engine),
+            lambda: approx_distinct(events, "user_id", group_by="event_type",
+                                    p=p, engine=engine),
+            lambda: hll_sketch_agg(events, "user_id", p=p),
+            lambda: hll_sketch_agg(events, "user_id", group_by="event_type",
+                                   p=p),
+        ):
+            with pytest.raises(ValueError, match="precision p"):
+                run()
 
     @pytest.mark.parametrize("engine", ["arrow", "jvm"])
     def test_empty_cols_rejected_before_dispatch(self, events, engine):
@@ -170,13 +189,14 @@ class TestMultiDistinctJvmEngine:
     def test_unknown_engine_rejected(self, events):
         with pytest.raises(ValueError, match="engine must be"):
             approx_distinct_multi(events, ["user_id"], engine="jvmm")
+        with pytest.raises(ValueError, match="engine must be"):
+            approx_distinct(events, "user_id", engine="jvmm")
 
 
 class TestMultiEnvelopeBytes:
-    """Each component of the merged multi-sketch envelope is byte-for-byte
-    the single-column ``hll_sketch_agg`` sketch of that column's non-NULL
-    rows; a group with no non-NULL value in a column holds the empty
-    sketch there."""
+    """Each column's count equals the single-column ``approx_distinct`` of
+    that column's non-NULL rows, global and grouped; a group with no
+    non-NULL value in a column (``all_null``) counts 0 there."""
 
     COLS = ["s", "n"]
 
@@ -196,39 +216,24 @@ class TestMultiEnvelopeBytes:
     def test_components_equal_single_column_sketches(
         self, frame, p, group_by
     ):
-        from hyperloglog_spark import hll_sketch_agg
-        from hyperloglog_spark.engine.aggregate import SKETCH_COL, sketch_agg
-        from hyperloglog_spark.functions import (
-            MultiHllAggregator,
-            _unpack_multi,
-        )
-        from hyperloglog_spark.sketch import hll
-
-        merged = sketch_agg(frame, self.COLS,
-                            MultiHllAggregator(self.COLS, p=p), group_by,
-                            finalize=False).collect()
-        got = {
-            tuple(r[g] for g in group_by): _unpack_multi(bytes(r[SKETCH_COL]))
-            for r in merged
-        }
+        got = _rows_by_key(
+            approx_distinct_multi(frame, self.COLS, group_by=group_by, p=p),
+            group_by)
         assert len(got) == (4 if group_by else 1)
         for i, c in enumerate(self.COLS):
-            want = {
-                tuple(r[g] for g in group_by): bytes(r[SKETCH_COL])
-                for r in hll_sketch_agg(frame.filter(F.col(c).isNotNull()),
-                                        c, group_by=group_by, p=p).collect()
-            }
+            want = _rows_by_key(approx_distinct(
+                frame.filter(F.col(c).isNotNull()), c, group_by=group_by,
+                p=p), group_by)
             assert set(want) <= set(got)
-            for key, comps in got.items():
-                assert comps[i] == want.get(key, hll.empty(p)), (c, key)
+            for key, counts in got.items():
+                assert counts[i] == want.get(key, [0])[0], (c, key)
+        if group_by:
+            assert got[("all_null",)] == [0, 0]
 
     @pytest.mark.parametrize("p", [4, 16])
     def test_engines_equal_rows(self, frame, p):
-        kw = dict(group_by="g", p=p)
-        a = approx_distinct_multi(frame, self.COLS, **kw).orderBy("g")
-        j = approx_distinct_multi(frame, self.COLS, engine="jvm",
-                                  expected_groups=4, **kw).orderBy("g")
-        assert a.collect() == j.collect()
-        assert (approx_distinct_multi(frame, self.COLS, p=p).collect()
-                == approx_distinct_multi(frame, self.COLS, p=p,
-                                         engine="jvm").collect())
+        for group_by in ([], ["g"]):
+            got = approx_distinct_multi(frame, self.COLS, group_by=group_by,
+                                        p=p)
+            assert _rows_by_key(got, group_by) == _reference(
+                frame, self.COLS, p, group_by)

@@ -3,7 +3,7 @@ to a driver-side reference that collects the phase-1 partials, groups them
 in Python and calls ``merge_many`` once per group — for every sketch kind,
 every key shape (NULL, NaN, ±0.0, multi-column), groups whose partials span
 Arrow batches, empty input and global input. The other users of the shared
-sorted phase 2 — the ``engine="jvm"`` HLL finalize, the stored-sketch
+sorted phase 2 — the HLL register-path finalize, the stored-sketch
 rollup, the count-min heavy-hitter family and the tree merge — must form
 the same groups on the same keys and give the reference bytes."""
 
@@ -157,20 +157,32 @@ def test_empty_input_gives_zero_rows(data, group_cols):
 
 @pytest.mark.parametrize("group_cols", [["k"], ["k", "s"], []])
 def test_jvm_engines_match_arrow(data, group_cols):
-    """The three ``engine="jvm"`` entry points return the arrow engine's
-    groups and values: estimates, sketch bytes, multi-column estimates
-    (column n is NULL in every row of the NaN groups: NULL-tag rows)."""
-    kw = dict(group_by=group_cols, expected_groups=32)
-    for run in (
-        lambda e: approx_distinct(data, "v", alias="d", engine=e, **kw),
-        lambda e: hll_sketch_agg(data, "v", p=12, engine=e, **kw),
-        lambda e: approx_distinct_multi(data, ["v", "n"], engine=e, **kw),
-        lambda e: approx_distinct_multi(data, ["n"], engine=e, **kw),
-    ):
-        want = _actual(run("arrow"), group_cols)
-        assert _actual(run("jvm"), group_cols) == want
-        if group_cols:
-            assert {k[0] for k in want} == {None, "nan", "0.0", "1.5", "-2.0"}
+    """The three register-path entry points return the groups and values
+    of the two-phase ``HllAggregator`` reference over the same non-NULL
+    rows: estimates, sketch bytes, and multi-column estimates (column n is
+    NULL in every row of the NaN groups: NULL-tag rows, n = 0)."""
+    def reference(col, p, finalize):
+        clean = data.filter(F.col(col).isNotNull())
+        return _actual(sketch_agg(clean, [col], HllAggregator(p), group_cols,
+                                  finalize), group_cols)
+
+    want_v = reference("v", 14, True)
+    assert _actual(approx_distinct(data, "v", alias="d", group_by=group_cols),
+                   group_cols) == want_v
+    assert _actual(hll_sketch_agg(data, "v", p=12, group_by=group_cols),
+                   group_cols) == reference("v", 12, False)
+    want_n = reference("n", 14, True)
+    for cols in (["v", "n"], ["n"]):
+        got = _actual(approx_distinct_multi(data, cols, group_by=group_cols),
+                      group_cols)
+        assert set(got) == set(want_v)
+        assert got == {
+            key: tuple((want_v[key] if c == "v" else want_n.get(key, (0,)))[0]
+                       for c in cols)
+            for key in want_v
+        }
+    if group_cols:
+        assert {k[0] for k in want_v} == {None, "nan", "0.0", "1.5", "-2.0"}
 
 
 @pytest.mark.parametrize("group_cols", [["k"], ["k", "s"]])

@@ -14,7 +14,9 @@ from hyperloglog_spark import (
     hll_sketch_agg,
     merge_sketches,
 )
+from hyperloglog_spark.engine.aggregate import sketch_agg
 from hyperloglog_spark.frequency import cms_agg
+from hyperloglog_spark.functions import HllAggregator
 from hyperloglog_spark.quantiles import kll_agg
 from hyperloglog_spark.rollup import _merge_cells
 from hyperloglog_spark.sketch import kll
@@ -48,10 +50,14 @@ class TestHllRollup:
         assert rolled == direct
 
     def test_rollup_estimates_match_build(self, events):
-        daily = hll_sketch_agg(
-            events, "user_id", group_by=["event_type", "day"], engine="jvm",
-            expected_groups=64
+        daily = sketch_agg(
+            events.filter(F.col("user_id").isNotNull()), ["user_id"],
+            HllAggregator(), ["event_type", "day"], finalize=False,
         )
+        direct = hll_sketch_agg(events, "user_id",
+                                group_by=["event_type", "day"])
+        assert sorted(map(tuple, daily.collect()), key=repr) == sorted(
+            map(tuple, direct.collect()), key=repr)
         got = {
             r["event_type"]: r["n_users"]
             for r in hll_rollup(

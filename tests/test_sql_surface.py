@@ -99,11 +99,11 @@ class TestErrorBounds:
 
     def test_bounds_no_python_udf_in_plan(self, events):
         bounded = with_error_bounds(
-            approx_distinct(events, "user_id", engine="jvm")
+            approx_distinct(events, "user_id")
         )
         # the bound columns themselves must be JVM arithmetic: exactly the
-        # jvm engine's one Python stage (its sorted register finalize), no
-        # extra Eval for the bounds
+        # count-distinct path's one Python stage (its sorted register
+        # finalize), no extra Eval for the bounds
         assert [name for name, _ in python_operators(bounded)] == [
             "MapInArrow"
         ]
