@@ -97,12 +97,7 @@ def main() -> None:
 
     queries = {
         "hll_distinct_convs": lambda: tq.distinct_conversations(trans),
-        "hll_distinct_convs_jvm": lambda: approx_distinct(
-            trans, "conv_id", engine="jvm"),
         "hll_texts_by_role_tool": lambda: tq.distinct_texts_by_role_tool(trans),
-        # engine="jvm" selects nothing: the same query as the row above
-        "hll_texts_by_role_tool_jvm": lambda: tq.distinct_texts_by_role_tool(
-            trans, engine="jvm"),
         "hll_conv_tool_pairs": lambda: tq.distinct_conv_tool_pairs(trans),
         "cms_heavy_hitter_tools": lambda: tq.heavy_hitter_tools(trans),
         "kll_turn_length_q": lambda: tq.turn_length_quantiles(trans),
@@ -214,9 +209,6 @@ def main() -> None:
         # 3 per-column distinct counts, ONE scan of the transcripts table
         "hll_multi_profile_transcripts": lambda: approx_distinct_multi(
             trans, ["conv_id", "text", "tool"]),
-        # engine="jvm" selects nothing: the same query as the row above
-        "hll_multi_profile_transcripts_jvm": lambda: approx_distinct_multi(
-            trans, ["conv_id", "text", "tool"], engine="jvm"),
         # gap-based sessionization over every conversation (one window
         # shuffle + per-session agg), reduced to a 1-row summary so the
         # collect measures the operator, not driver transfer
@@ -347,7 +339,6 @@ def main() -> None:
     # headline throughput: full two-phase HLL build over the transcripts
     # table (re-run on the timed query, not the warm-up count)
     turns_per_sec = int(n_turns / timings["hll_distinct_convs"])
-    turns_per_sec_jvm = int(n_turns / timings["hll_distinct_convs_jvm"])
 
     print(json.dumps({
         "metric": "sketch_suite_wall",
@@ -357,7 +348,6 @@ def main() -> None:
         "sf": sf,
         "n_turns": int(n_turns),
         "turns_per_sec": turns_per_sec,
-        "turns_per_sec_jvm": turns_per_sec_jvm,
         "cpus": CPUS,
     }))
     spark.stop()

@@ -3,9 +3,13 @@
 Python UDAFs get no automatic partial aggregation from Catalyst, so the
 map-side combine is built explicitly (SURVEY.md §3.4):
 
-    phase 1 (mapInArrow):  per-partition, per-group vectorized sketch build —
-                           one output row per (partition, group), each a
-                           BinaryType sketch (16 KB dense / smaller sparse)
+    phase 1 (mapInArrow):  per-partition, per-group sketch build — each
+                           Arrow batch is stably sorted once by its keys
+                           (no sort when it holds one key), cut into runs
+                           of equal keys, and each kind's ``build`` makes
+                           one sketch per run; one output row per
+                           (partition, group), each a BinaryType sketch
+                           (16 KB dense / smaller sparse)
     phase 2 (shuffle):     repartition(group_cols).sortWithinPartitions
                            (group_cols).mapInArrow — one streamed pass per
                            shuffle partition cuts the sorted partials into
@@ -42,14 +46,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 SKETCH_COL = "sketch"
-_GLOBAL_KEY = "__all__"
 
 
 class SketchAggregator:
     """Adapter every sketch kind implements to ride the two-phase pipeline.
 
-    build_grouped: (codes int64[n], values dict[col -> np.ndarray/pd.Series],
-                    n_groups) -> list[bytes]   (vectorized batch build)
+    build:         (cols list[pa.Array], bounds list[int]) -> list[bytes]
+                   one sketch per group: ``cols`` are the prepared value
+                   columns ordered by group, group i is rows
+                   ``bounds[i]:bounds[i+1]`` in input order. A kind never
+                   sorts or groups rows itself.
     merge_many:    (list[bytes]) -> bytes
     finalize:      (bytes) -> dict[field -> python value]
     finalize_schema: pyspark StructType fields for the finalized values
@@ -61,7 +67,7 @@ class SketchAggregator:
         """Spark-side (JVM) preparation of the value columns."""
         raise NotImplementedError
 
-    def build_grouped(self, codes, values, n_groups) -> list[bytes]:
+    def build(self, cols: list[pa.Array], bounds: list[int]) -> list[bytes]:
         raise NotImplementedError
 
     def merge_many(self, sketches: list[bytes]) -> bytes:
@@ -86,13 +92,27 @@ def _canon(v):
 
 
 def _key_codes(cols: list[pa.Array]) -> tuple[list[np.ndarray], list[list]]:
-    """Per-column int64 codes and code -> key value lists. NULL is a key
-    of its own, distinct from NaN; all NaNs share one code."""
+    """Per-column codes and code -> key value lists. NULL is a key of its
+    own, distinct from NaN; all NaNs share one code. Codes take the
+    narrowest unsigned dtype that holds them: numpy's stable sort is a
+    radix sort on 8- and 16-bit keys, several times faster than on int64."""
     encs = [pc.dictionary_encode(c, null_encoding="encode") for c in cols]
     return (
-        [e.indices.to_numpy().astype(np.int64) for e in encs],
+        [e.indices.to_numpy().astype(np.min_scalar_type(len(e.dictionary)))
+         for e in encs],
         [[_canon(v) for v in e.dictionary.to_pylist()] for e in encs],
     )
+
+
+def _run_bounds(codes: list[np.ndarray], n: int) -> list[int]:
+    """Run bounds of ``n`` key-sorted rows: run i is rows
+    ``bounds[i]:bounds[i+1]``, and a run ends where any key column's code
+    changes (no key columns: one run)."""
+    new = np.zeros(n, dtype=bool)
+    new[0] = True
+    for c in codes:
+        new[1:] |= c[1:] != c[:-1]
+    return np.flatnonzero(new).tolist() + [n]
 
 
 def _group_field(df: DataFrame, name: str) -> T.StructField:
@@ -142,60 +162,39 @@ def sketch_partials(
         [pa.field(f.name, _to_arrow(f.dataType)) for f in out_fields]
     )
 
-    n_groups_cols = len(group_cols)
-    build_grouped = agg.build_grouped
+    n_keys = len(group_cols)
+    build = agg.build
     merge_many = agg.merge_many
 
     def build_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         acc: dict[tuple, bytes] = {}
         nrows: dict[tuple, int] = {}
         for batch in batches:
-            if batch.num_rows == 0:
+            n = batch.num_rows
+            if n == 0:
                 continue
-            values = {
-                n: batch.column(n_groups_cols + i)
-                for i, n in enumerate(value_names)
-            }
-            if n_groups_cols == 0:
-                codes = np.zeros(batch.num_rows, dtype=np.int64)
-                uniques: list[tuple] = [(_GLOBAL_KEY,)]
+            cols = batch.columns[n_keys:]
+            col_codes, col_uniqs = _key_codes(batch.columns[:n_keys])
+            if any(len(u) > 1 for u in col_uniqs):
+                # one stable sort by the keys: rows of a group end up
+                # adjacent, in input order
+                order = np.lexsort(col_codes[::-1])
+                col_codes = [c[order] for c in col_codes]
+                cols = [c.take(order) for c in cols]
+                bounds = _run_bounds(col_codes, n)
             else:
-                col_codes, col_uniqs = _key_codes(
-                    [batch.column(i) for i in range(n_groups_cols)]
-                )
-                if n_groups_cols == 1:
-                    codes = col_codes[0]
-                    uniques = [(u,) for u in col_uniqs[0]]
-                else:
-                    import pandas as pd
-
-                    # radix-combine per-column codes, then factorize the
-                    # int64 keys — O(n) hash path; MultiIndex.factorize
-                    # materializes python tuples and is ~10x slower
-                    combined = col_codes[0]
-                    for c, u in zip(col_codes[1:], col_uniqs[1:]):
-                        combined = combined * np.int64(len(u)) + c
-                    codes_arr, _ = pd.factorize(combined)
-                    first_pos = (
-                        pd.Series(codes_arr).drop_duplicates().index.values
-                    )
-                    uniques = [
-                        tuple(col_uniqs[j][col_codes[j][fp]]
-                              for j in range(n_groups_cols))
-                        for fp in first_pos
-                    ]
-                    codes = codes_arr.astype(np.int64)
-            sketches = build_grouped(codes, values, len(uniques))
-            counts = np.bincount(codes, minlength=len(uniques))
-            for gi, (key, sk) in enumerate(zip(uniques, sketches)):
+                bounds = [0, n]
+            sketches = build(cols, bounds)
+            for s, e, sk in zip(bounds, bounds[1:], sketches):
+                key = tuple(u[c[s]] for c, u in zip(col_codes, col_uniqs))
                 prev = acc.get(key)
                 acc[key] = sk if prev is None else merge_many([prev, sk])
-                nrows[key] = nrows.get(key, 0) + int(counts[gi])
+                nrows[key] = nrows.get(key, 0) + e - s
         if not acc:
             return
         keys = list(acc.keys())
         arrays = []
-        for i in range(n_groups_cols):
+        for i in range(n_keys):
             arrays.append(
                 pa.array([k[i] for k in keys], type=out_arrow.field(i).type)
             )
@@ -288,14 +287,9 @@ def reduce_sorted_groups(
             col_codes, col_uniqs = _key_codes(
                 [batch.column(i) for i in range(n_keys)]
             )
-            # the input is sorted by key: a group starts where any key
-            # column's code changes (row 0 may continue the open group)
-            new = np.zeros(n, dtype=bool)
-            new[0] = True
-            for c in col_codes:
-                new[1:] |= c[1:] != c[:-1]
-            starts = np.flatnonzero(new).tolist()
-            for s, e in zip(starts, starts[1:] + [n]):
+            # the input is sorted by key (row 0 may continue the open group)
+            bounds = _run_bounds(col_codes, n)
+            for s, e in zip(bounds, bounds[1:]):
                 k = tuple(u[c[s]] for c, u in zip(col_codes, col_uniqs))
                 if k != key:
                     if pending:

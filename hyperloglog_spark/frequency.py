@@ -123,35 +123,22 @@ class CmsAggregator(SketchAggregator):
             prepared.append(_int_weight_expr(self.weight_col))
         return prepared
 
-    def build_grouped(self, codes, values, n_groups) -> list[bytes]:
-        if self.weight_col is None:
-            (arr,) = values.values()
-            hashes = _to_numpy_u64(arr)
-            weights = None
-        else:
-            arr, warr = values.values()
-            hashes = _to_numpy_u64(arr)
-            weights = np.asarray(warr, dtype=np.int64)
+    def build(self, cols, bounds) -> list[bytes]:
+        hashes = _to_numpy_u64(cols[0])
+        weights = None
+        if self.weight_col is not None:
+            weights = np.asarray(cols[1], dtype=np.int64)
             if len(weights) and int(weights.min()) < 0:
                 raise ValueError(
                     "cms weights must be non-negative (counters are "
                     "unsigned; for signed updates use the count sketch)"
                 )
-        if n_groups == 1:
-            return [cms.from_hashes(hashes, counts=weights, d=self.d,
-                                    log2_w=self.log2_w)]
-        order = np.argsort(codes, kind="stable")
-        sc, sh = codes[order], hashes[order]
-        sw = weights[order] if weights is not None else None
-        bounds = np.searchsorted(sc, np.arange(n_groups + 1))
         return [
             cms.from_hashes(
-                sh[bounds[g]: bounds[g + 1]],
-                counts=(sw[bounds[g]: bounds[g + 1]]
-                        if sw is not None else None),
+                hashes[s:e], counts=None if weights is None else weights[s:e],
                 d=self.d, log2_w=self.log2_w,
             )
-            for g in range(n_groups)
+            for s, e in zip(bounds, bounds[1:])
         ]
 
     def merge_many(self, sketches: list[bytes]) -> bytes:
@@ -534,19 +521,11 @@ class CountSketchAggregator(SketchAggregator):
     def prepare_columns(self, df: DataFrame, cols: list[str]):
         return [_hash_expr(cols, self.hashing)]
 
-    def build_grouped(self, codes, values, n_groups) -> list[bytes]:
-        (arr,) = values.values()
-        hashes = _to_numpy_u64(arr)
-        if n_groups == 1:
-            return [countsketch.from_hashes(hashes, d=self.d,
-                                            log2_w=self.log2_w)]
-        order = np.argsort(codes, kind="stable")
-        sc, sh = codes[order], hashes[order]
-        bounds = np.searchsorted(sc, np.arange(n_groups + 1))
+    def build(self, cols, bounds) -> list[bytes]:
+        hashes = _to_numpy_u64(cols[0])
         return [
-            countsketch.from_hashes(sh[bounds[g]: bounds[g + 1]], d=self.d,
-                                    log2_w=self.log2_w)
-            for g in range(n_groups)
+            countsketch.from_hashes(hashes[s:e], d=self.d, log2_w=self.log2_w)
+            for s, e in zip(bounds, bounds[1:])
         ]
 
     def merge_many(self, sketches: list[bytes]) -> bytes:

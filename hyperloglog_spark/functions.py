@@ -55,6 +55,11 @@ def _to_numpy_u64(arr: pa.Array) -> np.ndarray:
     return arr.to_numpy(zero_copy_only=False).astype(np.int64).view(np.uint64)
 
 
+def _run_ids(bounds: list[int]) -> np.ndarray:
+    """Group index of every row of a ``build`` batch."""
+    return np.repeat(np.arange(len(bounds) - 1), np.diff(bounds))
+
+
 class HllAggregator(SketchAggregator):
     """HLL over one or more columns.
 
@@ -106,18 +111,19 @@ class HllAggregator(SketchAggregator):
             return mix64(vals.astype(np.int64))
         return mix64(arr.to_numpy(zero_copy_only=False).astype(np.int64))
 
-    def build_grouped(self, codes, values, n_groups) -> list[bytes]:
-        (arr,) = values.values()
+    def build(self, cols, bounds) -> list[bytes]:
+        (arr,) = cols
+        runs = _run_ids(bounds)
         if self.hashing == "spark":
             packed = arr.to_numpy(zero_copy_only=False).astype(np.int64)
             idx = packed >> 7
             sigma = (packed & 127).astype(np.uint8)
-            return hll.group_from_registers(codes, idx, sigma, n_groups, self.p)
+            return hll.group_from_registers(
+                runs, idx, sigma, len(bounds) - 1, self.p)
         if arr.null_count:
-            mask = ~np.asarray(arr.is_null())
-            codes = codes[mask]
-        hashes = self._hashes(arr)
-        return hll.group_from_hashes(codes, hashes, n_groups, self.p)
+            runs = runs[~np.asarray(arr.is_null())]
+        return hll.group_from_hashes(
+            runs, self._hashes(arr), len(bounds) - 1, self.p)
 
     def merge_many(self, sketches: list[bytes]) -> bytes:
         return hll.merge_many(sketches)
@@ -577,17 +583,15 @@ class PackedBinaryHllAggregator(SketchAggregator):
             vals = flat.astype(np.int64).view(np.uint64)
         return vals, counts
 
-    def build_grouped(self, codes, values, n_groups) -> list[bytes]:
-        (arr,) = values.values()
-        if isinstance(arr, pa.ChunkedArray):
-            arr = arr.combine_chunks()
+    def build(self, cols, bounds) -> list[bytes]:
+        (arr,) = cols
+        runs = _run_ids(bounds)
         if arr.null_count:
-            keep = ~np.asarray(arr.is_null())
-            codes = codes[keep]
+            runs = runs[~np.asarray(arr.is_null())]
             arr = arr.drop_null()
         vals, counts = self._unpack(arr)
-        expanded = np.repeat(codes, counts)
-        return hll.group_from_hashes(expanded, mix64(vals), n_groups, self.p)
+        return hll.group_from_hashes(
+            np.repeat(runs, counts), mix64(vals), len(bounds) - 1, self.p)
 
     def merge_many(self, sketches: list[bytes]) -> bytes:
         return hll.merge_many(sketches)

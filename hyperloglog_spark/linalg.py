@@ -66,18 +66,10 @@ class FdAggregator(SketchAggregator):
         (c,) = cols
         return [F.col(c)]
 
-    def build_grouped(self, codes, values, n_groups) -> list[bytes]:
-        (arr,) = values.values()
-        mat = _to_matrix(arr)
-        if n_groups == 1:
-            return [fd.append(fd.empty(self.ell), mat)]
-        order = np.argsort(codes, kind="stable")
-        sc, sm = codes[order], mat[order]
-        bounds = np.searchsorted(sc, np.arange(n_groups + 1))
-        return [
-            fd.append(fd.empty(self.ell), sm[bounds[g]: bounds[g + 1]])
-            for g in range(n_groups)
-        ]
+    def build(self, cols, bounds) -> list[bytes]:
+        mat = _to_matrix(cols[0])
+        return [fd.append(fd.empty(self.ell), mat[s:e])
+                for s, e in zip(bounds, bounds[1:])]
 
     def merge_many(self, sketches: list[bytes]) -> bytes:
         return fd.merge_many(sketches)

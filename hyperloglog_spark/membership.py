@@ -10,7 +10,6 @@ from __future__ import annotations
 from typing import Any
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -46,21 +45,10 @@ class BloomAggregator(SketchAggregator):
     def prepare_columns(self, df: DataFrame, cols: list[str]):
         return [F.xxhash64(*[F.col(c) for c in cols])]
 
-    def build_grouped(self, codes, values, n_groups) -> list[bytes]:
-        (arr,) = values.values()
-        hashes = _to_numpy_u64(arr)
-        if n_groups == 1:
-            return [bloom.from_hashes(hashes, self.m_bits, self.k)]
-        order = np.argsort(codes, kind="stable")
-        sorted_codes = codes[order]
-        sorted_hashes = hashes[order]
-        bounds = np.searchsorted(sorted_codes, np.arange(n_groups + 1))
-        return [
-            bloom.from_hashes(
-                sorted_hashes[bounds[g]: bounds[g + 1]], self.m_bits, self.k
-            )
-            for g in range(n_groups)
-        ]
+    def build(self, cols, bounds) -> list[bytes]:
+        hashes = _to_numpy_u64(cols[0])
+        return [bloom.from_hashes(hashes[s:e], self.m_bits, self.k)
+                for s, e in zip(bounds, bounds[1:])]
 
     def merge_many(self, sketches: list[bytes]) -> bytes:
         return bloom.merge_many(sketches)
@@ -226,22 +214,11 @@ class CbfAggregator(SketchAggregator):
         )
         return [_hash_expr(cols, self.hashing), delta]
 
-    def build_grouped(self, codes, values, n_groups) -> list[bytes]:
-        harr, darr = values.values()
-        hashes = _to_numpy_u64(harr)
-        deltas = np.asarray(darr, dtype=np.int64)
-        if n_groups == 1:
-            return [cbf.from_hashes(hashes, deltas, self.log2_m, self.k)]
-        order = np.argsort(codes, kind="stable")
-        sc, sh, sd = codes[order], hashes[order], deltas[order]
-        bounds = np.searchsorted(sc, np.arange(n_groups + 1))
-        return [
-            cbf.from_hashes(
-                sh[bounds[g]: bounds[g + 1]], sd[bounds[g]: bounds[g + 1]],
-                self.log2_m, self.k,
-            )
-            for g in range(n_groups)
-        ]
+    def build(self, cols, bounds) -> list[bytes]:
+        hashes = _to_numpy_u64(cols[0])
+        deltas = np.asarray(cols[1], dtype=np.int64)
+        return [cbf.from_hashes(hashes[s:e], deltas[s:e], self.log2_m, self.k)
+                for s, e in zip(bounds, bounds[1:])]
 
     def merge_many(self, sketches: list[bytes]) -> bytes:
         return cbf.merge_many(sketches)

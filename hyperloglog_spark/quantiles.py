@@ -77,16 +77,12 @@ class _QuantileAggregator(SketchAggregator):
             raise ValueError("quantile sketches take exactly one column")
         return [F.col(cols[0]).cast("double")]
 
-    def build_grouped(self, codes, values, n_groups) -> list[bytes]:
-        (arr,) = values.values()
-        vals = arr.to_numpy(zero_copy_only=False).astype(np.float64)
-        if n_groups == 1:
-            return [self._build(vals)]
-        order = np.argsort(codes, kind="stable")
-        sc, sv = codes[order], vals[order]
-        bounds = np.searchsorted(sc, np.arange(n_groups + 1))
-        return [self._build(sv[bounds[g]: bounds[g + 1]])
-                for g in range(n_groups)]
+    def build(self, cols, bounds) -> list[bytes]:
+        # values (and weights, for the weighted kinds' two-column _build)
+        xs = [c.to_numpy(zero_copy_only=False).astype(np.float64)
+              for c in cols]
+        return [self._build(*(x[s:e] for x in xs))
+                for s, e in zip(bounds, bounds[1:])]
 
     def merge_many(self, sketches: list[bytes]) -> bytes:
         return self.module.merge_many(sketches)
@@ -134,15 +130,9 @@ class TDigestAggregator(_QuantileAggregator):
         )
 
 
-class WeightedTDigestAggregator(_QuantileAggregator):
-    """t-digest over (value, weight) rows — quantiles of a deduplicated
-    corpus where each representative carries its copy count, or any other
-    importance weighting. Same codec, merge, and estimator as the plain
-    t-digest (the weight is native to the centroid state); only the build
-    feeds per-row masses instead of ones."""
-
-    name = "tdigest_weighted"
-    module = tdigest
+class _WeightedQuantileAggregator(_QuantileAggregator):
+    """A quantile sketch over (value, weight) rows: ``_build(values,
+    weights)`` feeds per-row masses instead of ones."""
 
     def __init__(self, qs: list[float] | None = None,
                  weight_col: str = "weight", **params):
@@ -157,26 +147,23 @@ class WeightedTDigestAggregator(_QuantileAggregator):
             F.col(self.weight_col).cast("double"),
         ]
 
-    def build_grouped(self, codes, values, n_groups) -> list[bytes]:
-        varr, warr = values.values()
-        vals = varr.to_numpy(zero_copy_only=False).astype(np.float64)
-        ws = warr.to_numpy(zero_copy_only=False).astype(np.float64)
-        delta = self.params.get("delta", tdigest.DEFAULT_DELTA)
-        if n_groups == 1:
-            return [tdigest.from_weighted(vals, ws, delta)]
-        order = np.argsort(codes, kind="stable")
-        sc, sv, sw = codes[order], vals[order], ws[order]
-        bounds = np.searchsorted(sc, np.arange(n_groups + 1))
-        return [
-            tdigest.from_weighted(
-                sv[bounds[g]: bounds[g + 1]], sw[bounds[g]: bounds[g + 1]],
-                delta,
-            )
-            for g in range(n_groups)
-        ]
+
+class WeightedTDigestAggregator(_WeightedQuantileAggregator):
+    """t-digest over (value, weight) rows — quantiles of a deduplicated
+    corpus where each representative carries its copy count, or any other
+    importance weighting. Same codec, merge, and estimator as the plain
+    t-digest (the weight is native to the centroid state); only the build
+    feeds per-row masses instead of ones."""
+
+    name = "tdigest_weighted"
+    module = tdigest
+
+    def _build(self, values: np.ndarray, weights: np.ndarray) -> bytes:
+        return tdigest.from_weighted(
+            values, weights, self.params.get("delta", tdigest.DEFAULT_DELTA))
 
 
-class WeightedKllAggregator(_QuantileAggregator):
+class WeightedKllAggregator(_WeightedQuantileAggregator):
     """KLL over (value, weight) rows with INTEGER weights: the mirror of
     WeightedTDigestAggregator on the KLL backend. A weight-w row enters
     level h once for every set bit of w (level-h items carry weight 2^h),
@@ -187,35 +174,9 @@ class WeightedKllAggregator(_QuantileAggregator):
     name = "kll_weighted"
     module = kll
 
-    def __init__(self, qs: list[float] | None = None,
-                 weight_col: str = "weight", **params):
-        super().__init__(qs, **params)
-        self.weight_col = weight_col
-
-    def prepare_columns(self, df: DataFrame, cols: list[str]):
-        if len(cols) != 1:
-            raise ValueError("quantile sketches take exactly one column")
-        return [
-            F.col(cols[0]).cast("double"),
-            F.col(self.weight_col).cast("double"),
-        ]
-
-    def build_grouped(self, codes, values, n_groups) -> list[bytes]:
-        varr, warr = values.values()
-        vals = varr.to_numpy(zero_copy_only=False).astype(np.float64)
-        ws = warr.to_numpy(zero_copy_only=False).astype(np.float64)
-        k = self.params.get("k", kll.DEFAULT_K)
-        if n_groups == 1:
-            return [kll.from_weighted(vals, ws, k)]
-        order = np.argsort(codes, kind="stable")
-        sc, sv, sw = codes[order], vals[order], ws[order]
-        bounds = np.searchsorted(sc, np.arange(n_groups + 1))
-        return [
-            kll.from_weighted(
-                sv[bounds[g]: bounds[g + 1]], sw[bounds[g]: bounds[g + 1]], k
-            )
-            for g in range(n_groups)
-        ]
+    def _build(self, values: np.ndarray, weights: np.ndarray) -> bytes:
+        return kll.from_weighted(
+            values, weights, self.params.get("k", kll.DEFAULT_K))
 
 
 def approx_quantiles_weighted(

@@ -90,12 +90,10 @@ class _StoredCells(SketchAggregator):
     def prepare_columns(self, df: DataFrame, cols: list[str]):
         return [F.col(cols[0])]
 
-    def build_grouped(self, codes, values, n_groups) -> list[bytes]:
-        (cells,) = values.values()
-        groups: list[list[bytes]] = [[] for _ in range(n_groups)]
-        for g, cell in zip(codes.tolist(), cells.to_pylist()):
-            groups[g].append(cell)
-        return [self.merge_many(g) for g in groups]
+    def build(self, cols, bounds) -> list[bytes]:
+        cells = cols[0].to_pylist()
+        return [self.merge_many(cells[s:e])
+                for s, e in zip(bounds, bounds[1:])]
 
     def merge_many(self, sketches: list[bytes]) -> bytes:
         return _merge_cells(sketches, self.fold_to)

@@ -80,20 +80,10 @@ class ThetaAggregator(SketchAggregator):
     def prepare_columns(self, df: DataFrame, cols: list[str]):
         return [_hash_expr(cols, self.hashing, self.salt)]
 
-    def build_grouped(self, codes, values, n_groups) -> list[bytes]:
-        (arr,) = values.values()
-        hashes = arr.to_numpy(zero_copy_only=False).astype(np.int64)
-        if n_groups == 1:
-            return [theta.build(hashes, self.k, self.mode)]
-        order = np.argsort(codes, kind="stable")
-        sorted_codes = codes[order]
-        sorted_hashes = hashes[order]
-        bounds = np.searchsorted(sorted_codes, np.arange(n_groups + 1))
-        return [
-            theta.build(sorted_hashes[bounds[g]: bounds[g + 1]],
-                        self.k, self.mode)
-            for g in range(n_groups)
-        ]
+    def build(self, cols, bounds) -> list[bytes]:
+        hashes = cols[0].to_numpy(zero_copy_only=False).astype(np.int64)
+        return [theta.build(hashes[s:e], self.k, self.mode)
+                for s, e in zip(bounds, bounds[1:])]
 
     def merge_many(self, sketches: list[bytes]) -> bytes:
         return theta.union_many(sketches)

@@ -10,7 +10,8 @@ mergeable, and update-in-place. The reference's ``AddAs*(Stream)`` ingest
     emit          =  finalize(state[group])        every trigger (update mode)
 
 Value preparation (hashing, casts) stays JVM-side exactly as in the batch
-path — the same ``SketchAggregator`` drives both, so batch and streaming
+path — the same ``SketchAggregator`` drives both (here each pandas chunk of
+a group is one ``build(cols, [0, n])`` run), so batch and streaming
 estimates are bit-identical on identical input (asserted in tests).
 
 Scale notes: state per group is one sketch blob in the state store; the
@@ -22,9 +23,7 @@ event-time queries.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
-import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -82,7 +81,7 @@ def streaming_sketch_agg(
         out_fields = out_fields + [T.StructField("sketch", T.BinaryType())]
     out_schema = T.StructType(out_fields)
     state_schema = T.StructType([T.StructField("sketch", T.BinaryType())])
-    build_grouped = agg.build_grouped
+    build = agg.build
     merge_many = agg.merge_many
     finalize = agg.finalize
     fin_names = [f.name for f in agg.finalize_fields]
@@ -97,11 +96,8 @@ def streaming_sketch_agg(
         for pdf in pdfs:
             if not len(pdf):
                 continue
-            values: dict[str, Any] = {
-                n: pa.array(pdf[n]) for n in value_names
-            }
-            codes = np.zeros(len(pdf), dtype=np.int64)
-            parts.extend(build_grouped(codes, values, 1))
+            cols = [pa.array(pdf[n]) for n in value_names]
+            parts.extend(build(cols, [0, len(pdf)]))
         if not parts:
             return
         merged = merge_many(parts)

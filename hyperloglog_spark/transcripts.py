@@ -48,14 +48,11 @@ def distinct_conversations(df: DataFrame, p: int = 14) -> DataFrame:
     return approx_distinct(df, "conv_id", p=p, alias="approx_convs")
 
 
-def distinct_texts_by_role_tool(df: DataFrame, p: int = 14,
-                                **kw) -> DataFrame:
-    """Approximate distinct turn texts per (role, tool). Extra kwargs pass
-    through to ``approx_distinct``; its register reduction stays in
-    codegen at any group count."""
+def distinct_texts_by_role_tool(df: DataFrame, p: int = 14) -> DataFrame:
+    """Approximate distinct turn texts per (role, tool); the register
+    reduction stays in codegen at any group count."""
     return approx_distinct(
-        df, "text", group_by=["role", "tool"], p=p, alias="approx_texts",
-        **kw
+        df, "text", group_by=["role", "tool"], p=p, alias="approx_texts"
     )
 
 

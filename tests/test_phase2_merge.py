@@ -5,11 +5,17 @@ every key shape (NULL, NaN, ±0.0, multi-column), groups whose partials span
 Arrow batches, empty input and global input. The other users of the shared
 sorted phase 2 — the HLL register-path finalize, the stored-sketch
 rollup, the count-min heavy-hitter family and the tree merge — must form
-the same groups on the same keys and give the reference bytes."""
+the same groups on the same keys and give the reference bytes.
+
+Phase 1 is pinned separately, against the sketch kernels: each partial is
+the kind's kernel over its group's rows in input order (or the left fold
+of those kernels over Arrow batches), and multi-column keys never merge
+distinct groups."""
 
 from __future__ import annotations
 
 import math
+import struct
 
 import numpy as np
 import pandas as pd
@@ -19,8 +25,10 @@ from pyspark.sql import functions as F
 from hyperloglog_spark import (
     approx_distinct,
     approx_distinct_multi,
+    approx_quantiles,
     hll_rollup,
     hll_sketch_agg,
+    kll_agg,
     merge_sketches,
 )
 from hyperloglog_spark.engine.aggregate import (
@@ -28,11 +36,23 @@ from hyperloglog_spark.engine.aggregate import (
 )
 from hyperloglog_spark.engine.plans import python_operators
 from hyperloglog_spark.frequency import (
-    CmsAggregator, cms_topk, cms_topk_rollup, cms_topk_shards,
+    CmsAggregator, CountSketchAggregator, cms_topk, cms_topk_rollup,
+    cms_topk_shards,
 )
-from hyperloglog_spark.functions import HllAggregator
-from hyperloglog_spark.quantiles import KllAggregator, TDigestAggregator
-from hyperloglog_spark.sketch import cms
+from hyperloglog_spark.functions import (
+    HllAggregator, PackedBinaryHllAggregator,
+)
+from hyperloglog_spark.linalg import FdAggregator
+from hyperloglog_spark.membership import BloomAggregator, CbfAggregator
+from hyperloglog_spark.quantiles import (
+    KllAggregator, TDigestAggregator, WeightedKllAggregator,
+    WeightedTDigestAggregator,
+)
+from hyperloglog_spark.setops import ThetaAggregator
+from hyperloglog_spark.sketch import (
+    bloom, cbf, cms, countsketch, fd, hll, kll, tdigest, theta,
+)
+from hyperloglog_spark.sketch.hashing import fnv1a64_utf16le, mix64
 
 KEYS = [None, float("nan"), 0.0, -0.0, 1.5, -2.0]
 
@@ -368,3 +388,159 @@ def test_tree_merge_is_a_rebracketed_fold(data, make):
     tree = tree_merge_rows(partials, agg.merge_many, fan_in=2)
     assert [bytes(r[SKETCH_COL]) for r in tree.collect()] == [fold]
     assert [n for n, _ in python_operators(tree)] == ["MapInArrow"] * 5
+
+
+# ---- phase 1: partials equal the kernels ----------------------------------
+
+@pytest.fixture(scope="module")
+def p1_data(spark):
+    """One partition, in row order: five key columns over NULL/NaN/±0.0
+    (k, k2 double; s, t string; j long) and value columns for every
+    kind — v string (NULL every 4th row), x double, w integer weight,
+    b packed int32 binary (NULL every 5th row), e a 3-dim embedding."""
+    rows = []
+    for i in range(240):
+        rows.append((
+            KEYS[i % 6], [None, "a", "b"][i % 3], [None, 0, 1][i // 2 % 3],
+            [-0.0, 0.0, float("nan"), None][i // 3 % 4],
+            ["x", None][i // 5 % 2],
+            None if i % 4 == 0 else f"v{i % 29}", float(i % 17) - 4.5,
+            1 + i % 4,
+            None if i % 5 == 0 else struct.pack("<2i", i % 37, -(i % 11)),
+            [float(i % 7), float(i % 3) - 1.0, 0.5 * (i % 5)],
+        ))
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1),
+        "k double, s string, j long, k2 double, t string, v string, "
+        "x double, w long, b binary, e array<double>",
+    )
+
+
+@pytest.fixture(scope="module")
+def p1_rows(p1_data):
+    """The input rows in partition order, with Spark's ``xxhash64`` of v
+    (h; th with theta's salt 0)."""
+    return p1_data.select(
+        "*", F.xxhash64("v").alias("h"),
+        F.xxhash64(F.col("v"), F.lit(0)).alias("th"),
+    ).collect()
+
+
+def _col(rs, c, dtype):
+    return np.array([r[c] for r in rs], dtype=dtype)
+
+
+def _u64(rs, c="h"):
+    return _col(rs, c, np.int64).view(np.uint64)
+
+
+def _packed(rs):
+    vals = [np.frombuffer(r["b"], "<i4") for r in rs if r["b"] is not None]
+    flat = np.concatenate(vals + [np.empty(0, "<i4")]).astype(np.int64)
+    return mix64(flat.view(np.uint64))
+
+
+# (id, aggregator, value columns, kernel over one group's rows)
+KERNELS = [
+    ("hll_spark", lambda: HllAggregator(p=10), ["v"],
+     lambda rs: hll.from_hashes(_u64(rs), 10)),
+    ("hll_parity", lambda: HllAggregator(p=10, hashing="parity"), ["v"],
+     lambda rs: hll.from_hashes(fnv1a64_utf16le(
+         [r["v"] for r in rs if r["v"] is not None]), 10)),
+    ("hll_packed", lambda: PackedBinaryHllAggregator("int32", p=10), ["b"],
+     lambda rs: hll.from_hashes(_packed(rs), 10)),
+    ("cms", lambda: CmsAggregator(d=3, log2_w=8), ["v"],
+     lambda rs: cms.from_hashes(_u64(rs), d=3, log2_w=8)),
+    ("cms_weighted", lambda: CmsAggregator(d=3, log2_w=8, weight_col="w"),
+     ["v"], lambda rs: cms.from_hashes(
+         _u64(rs), counts=_col(rs, "w", np.int64), d=3, log2_w=8)),
+    ("countsketch", lambda: CountSketchAggregator(d=3, log2_w=8), ["v"],
+     lambda rs: countsketch.from_hashes(_u64(rs), d=3, log2_w=8)),
+    ("theta", lambda: ThetaAggregator(k=16), ["v"],
+     lambda rs: theta.build(_col(rs, "th", np.int64), 16)),
+    ("kll", lambda: KllAggregator([0.5], k=8), ["x"],
+     lambda rs: kll.from_values(_col(rs, "x", np.float64), 8)),
+    ("tdigest", lambda: TDigestAggregator([0.5]), ["x"],
+     lambda rs: tdigest.from_values(_col(rs, "x", np.float64))),
+    ("kll_weighted", lambda: WeightedKllAggregator([0.5], "w", k=8), ["x"],
+     lambda rs: kll.from_weighted(_col(rs, "x", np.float64),
+                                  _col(rs, "w", np.float64), 8)),
+    ("tdigest_weighted", lambda: WeightedTDigestAggregator([0.5], "w"),
+     ["x"], lambda rs: tdigest.from_weighted(_col(rs, "x", np.float64),
+                                             _col(rs, "w", np.float64))),
+    ("bloom", lambda: BloomAggregator(m_bits=256, k=3), ["v"],
+     lambda rs: bloom.from_hashes(_u64(rs), 256, 3)),
+    ("cbf", lambda: CbfAggregator(log2_m=6, k=3, delta_col="w"), ["v"],
+     lambda rs: cbf.from_hashes(_u64(rs), _col(rs, "w", np.int64), 6, 3)),
+    ("fd", lambda: FdAggregator(ell=2), ["e"],
+     lambda rs: fd.append(fd.empty(2), _col(rs, "e", np.float64))),
+]
+
+P1_KEYS = [[], ["k"], ["k", "s"], ["k", "s", "j", "k2", "t"]]
+
+
+def _group_rows(rows, group_cols):
+    """Rows per group key (Spark's groupBy key forms), in input order."""
+    groups: dict[tuple, list] = {}
+    for r in rows:
+        key = tuple(_norm(_canon_value(r[c])) for c in group_cols)
+        groups.setdefault(key, []).append(r)
+    return groups
+
+
+@pytest.mark.parametrize("name,make,cols,kernel", KERNELS,
+                         ids=[k[0] for k in KERNELS])
+def test_partials_equal_kernel_per_group(p1_data, p1_rows, name, make, cols,
+                                         kernel):
+    """One partition, one Arrow batch: each group's partial is the kind's
+    kernel over that group's rows in input order, for 0, 1, 2 and 5 key
+    columns."""
+    agg = make()
+    for group_cols in P1_KEYS:
+        want = {key: (kernel(rs),)
+                for key, rs in _group_rows(p1_rows, group_cols).items()}
+        got = _actual(sketch_partials(p1_data, cols, agg, group_cols),
+                      group_cols)
+        assert got == want, group_cols
+
+
+def test_partials_fold_kernels_over_batches(spark, p1_data, p1_rows):
+    """Seven rows per Arrow batch: a group's partial is the left fold
+    ``merge_many([acc, kernel(rows of batch i)])`` over the batches that
+    hold its rows."""
+    group_cols = ["k", "s"]
+    want: dict[tuple, bytes] = {}
+    for b in range(0, len(p1_rows), 7):
+        groups = _group_rows(p1_rows[b:b + 7], group_cols)
+        for key, rs in groups.items():
+            sk = kll.from_values(_col(rs, "x", np.float64), 8)
+            want[key] = sk if key not in want else kll.merge_many(
+                [want[key], sk])
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", 7)
+    try:
+        got = _actual(sketch_partials(p1_data, ["x"], KllAggregator(k=8),
+                                      group_cols), group_cols)
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    assert got == {key: (sk,) for key, sk in want.items()}
+
+
+def test_multi_column_keys_never_merge(spark):
+    """8,193 distinct 5-column long keys in one partition (one batch),
+    8,192 distinct values per column: (4096, 0, 0, 0, 0) is a group of
+    its own and keeps its value -1.0; (0, 0, 0, 0, 0) holds only 0.0."""
+    cols = [f"c{i}" for i in range(5)]
+    last = F.col("id") == 8192
+    df = spark.range(0, 8193, 1, 1).select(
+        *[F.when(last, F.lit(4096 if i == 0 else 0)).otherwise(F.col("id"))
+          .alias(c) for i, c in enumerate(cols)],
+        F.when(last, -1.0).otherwise(0.0).alias("x"),
+    )
+    n_groups = df.groupBy(*cols).count().count()
+    assert n_groups == 8193
+    q = {tuple(r[c] for c in cols): r["q5"]
+         for r in approx_quantiles(df, "x", [0.5], group_by=cols).collect()}
+    assert len(q) == n_groups
+    assert q[(4096, 0, 0, 0, 0)] == -1.0
+    assert q[(0, 0, 0, 0, 0)] == 0.0
+    assert kll_agg(df, "x", group_by=cols).count() == n_groups
