@@ -170,30 +170,8 @@ def main() -> None:
             near_dup_pairs(t(spark, "documents"), "text", "doc_id"),
             out_id="doc_id",
         ),
-        "embedding_neardup_docs": lambda: embedding_neardup_pairs(
-            t(spark, "embeddings").select("vec_id", "embedding").unionByName(
-                t(spark, "embeddings").select(
-                    (F.col("vec_id") + 100000).alias("vec_id"),
-                    F.expr(
-                        "concat(array(CAST(0.0 AS FLOAT)), "
-                        "slice(embedding, 2, size(embedding) - 1))"
-                    ).alias("embedding"),
-                )
-            ),
-            # sf<=0.1: params pinned to the r02 values so interleaved
-            # per-query comparisons across rounds stay apples-to-apples.
-            # Larger sf: the library defaults (64-bit sigs, 8-bit chunks)
-            # — the r02 pin's 4-bit chunks cap-drop every bucket beyond
-            # ~16k rows and the query degenerates to zero candidates.
-            "vec_id", "embedding", threshold_permille=900,
-            nbits=(16 if sf <= 0.1 else 64),
-            max_hamming=(3 if sf <= 0.1 else 7),
-        ),
-        # the SAME query at the library defaults (64-bit sigs, 8-bit
-        # pigeonhole chunks) at every sf — recorded alongside the pinned
-        # row so one interleaved run carries both curves and the r02 pin
-        # can be retired once a cross-round baseline exists for this row
-        # (VERDICT r4 #8)
+        # near-duplicate embeddings at the library defaults (64-bit
+        # sigs, 8-bit pigeonhole chunks) at every sf
         "embedding_neardup_docs_default": lambda: embedding_neardup_pairs(
             t(spark, "embeddings").select("vec_id", "embedding").unionByName(
                 t(spark, "embeddings").select(

@@ -26,6 +26,10 @@ with GLOBAL count > N/(C+1) appears in the candidate union of at least one
 partition — even a key spread so uniformly that it ranks below hundreds of
 partition-local decoys everywhere. Final ranking uses CMS point estimates
 (>= true count), so the guaranteed candidate also ranks correctly.
+
+The point-query UDF factories (``cms_point_query_udf``,
+``cs_point_query_udf``) are ``engine.cells.hash_probe_udf`` calls: a NULL
+hash gives a NULL estimate, not the count for hash key 0.
 """
 
 from __future__ import annotations
@@ -45,7 +49,8 @@ from .engine.aggregate import (
     reduce_sorted_groups,
     sketch_agg,
 )
-from .functions import _drop_null_rows, _to_numpy_u64
+from .engine.cells import hash_probe_udf
+from .functions import _as_list, _drop_null_rows, _to_numpy_u64
 from .sketch import cms, countsketch
 
 __all__ = [
@@ -161,30 +166,14 @@ def cms_agg(
     """Per-group CMS sketches as a BinaryType column. ``weight_col`` makes
     each row add its weight instead of 1 (approximate SUM-by-key)."""
     cols = [cols] if isinstance(cols, str) else list(cols)
-    group_by = [group_by] if isinstance(group_by, str) else list(group_by or [])
+    group_by = _as_list(group_by)
     agg = CmsAggregator(d, log2_w, hashing, weight_col=weight_col)
     return sketch_agg(_drop_null_rows(df, cols), cols, agg, group_by, finalize=False)
 
 
 def cms_point_query_udf(sketch: bytes):
     """Scalar pandas UDF factory: hash column (int64) -> estimated count."""
-    sketch = bytes(sketch)
-
-    @F.pandas_udf(T.LongType())
-    def q(hashes):
-        import pandas as pd
-
-        h = hashes.to_numpy(dtype=np.int64, na_value=0).view(np.uint64)
-        out = pd.Series(
-            cms.point_query(sketch, h).astype(np.int64),
-            index=hashes.index,
-            dtype="Int64",
-        )
-        # NULL keys get NULL estimates, not the count for hash key 0.
-        out[hashes.isna()] = None
-        return out
-
-    return q
+    return hash_probe_udf(cms.point_query, sketch, T.LongType())
 
 
 def cms_topk(
@@ -421,9 +410,7 @@ def cms_topk_rollup(
     cannot enumerate values). This rank step is also ``cms_topk``'s phase
     2, over its per-partition partials; it runs on the sorted group
     stream (``reduce_sorted_groups``), one group's rows at a time."""
-    group_cols = (
-        [group_by] if isinstance(group_by, str) else list(group_by or [])
-    )
+    group_cols = _as_list(group_by)
     elem_type = stored.schema["cand_v"].dataType.elementType
     top = T.StructField("__top", T.ArrayType(T.StructType([
         T.StructField(col, elem_type, True),
@@ -546,7 +533,7 @@ def countsketch_agg(
 ) -> DataFrame:
     """Per-group count sketches as a BinaryType column."""
     cols = [cols] if isinstance(cols, str) else list(cols)
-    group_by = [group_by] if isinstance(group_by, str) else list(group_by or [])
+    group_by = _as_list(group_by)
     agg = CountSketchAggregator(d, log2_w, hashing)
     return sketch_agg(_drop_null_rows(df, cols), cols, agg, group_by,
                       finalize=False)
@@ -567,7 +554,7 @@ def countsketch_f2(
     (value space far below w); unbiased with rel. error O(1/sqrt(w))
     otherwise."""
     cols = [cols] if isinstance(cols, str) else list(cols)
-    group_by = [group_by] if isinstance(group_by, str) else list(group_by or [])
+    group_by = _as_list(group_by)
     agg = CountSketchAggregator(d, log2_w, hashing)
     return sketch_agg(_drop_null_rows(df, cols), cols, agg, group_by)
 
@@ -575,20 +562,4 @@ def countsketch_f2(
 def cs_point_query_udf(sketch: bytes):
     """Scalar pandas UDF factory: hash column (int64) -> unbiased count
     estimate (median over rows of the signed counters)."""
-    sketch = bytes(sketch)
-
-    @F.pandas_udf(T.LongType())
-    def q(hashes):
-        import pandas as pd
-
-        h = hashes.to_numpy(dtype=np.int64, na_value=0).view(np.uint64)
-        out = pd.Series(
-            countsketch.point_query(sketch, h).astype(np.int64),
-            index=hashes.index,
-            dtype="Int64",
-        )
-        # NULL keys get NULL estimates, not the count for hash key 0.
-        out[hashes.isna()] = None
-        return out
-
-    return q
+    return hash_probe_udf(countsketch.point_query, sketch, T.LongType())

@@ -16,6 +16,11 @@ partition), then one sorted ``mapInArrow`` pass (``_jvm_finalize``)
 estimates or serializes each group from its register rows. ``HllAggregator``
 is the BinaryType mergeable aggregator behind ``hll_merged_sketch``,
 checkpointed builds, streaming and ``hashing="parity"``.
+
+The scalar UDFs over stored sketch cells (``hll_estimate_udf``,
+``hll_merge_pair_udf``, ``hll_fold_udf``, ``hll_jaccard_udf``) are each one
+``engine.cells.cell_udf`` call: a NULL argument gives NULL, except that a
+NULL side of a merge is the empty sketch.
 """
 
 from __future__ import annotations
@@ -35,6 +40,7 @@ from .engine.aggregate import (
     reduce_sorted_groups,
     sketch_agg,
 )
+from .engine.cells import UNION, cell_udf
 from .sketch import hll
 from .sketch.hashing import fnv1a64_binary, fnv1a64_utf16le, mix64
 
@@ -310,57 +316,28 @@ def hll_merged_sketch(
     return collect_merged(_drop_null_rows(df, cols), cols, agg, fan_in=fan_in)
 
 
-@F.pandas_udf(T.LongType())
-def hll_estimate_udf(sketches):
+@cell_udf(T.LongType())
+def hll_estimate_udf(sketch):
     """Scalar pandas UDF: sketch binary column -> cardinality estimate."""
-    import pandas as pd
-
-    # Nullable extension dtype: a NULL sketch row (e.g. from a left join)
-    # must yield a NULL estimate; plain "int64" raises TypeError on None.
-    return pd.Series(
-        [hll.estimate(bytes(s)) if s is not None else None for s in sketches],
-        dtype="Int64",
-    )
+    return hll.estimate(sketch)
 
 
-@F.pandas_udf(T.BinaryType())
+@cell_udf(T.BinaryType(), nulls=UNION)
 def hll_merge_pair_udf(a, b):
     """Row-wise merge of two sketch columns (NULL-absorbing: NULL ∪ x = x)."""
-    import pandas as pd
-
-    out = []
-    for x, y in zip(a, b):
-        if x is None:
-            out.append(None if y is None else bytes(y))
-        elif y is None:
-            out.append(bytes(x))
-        else:
-            out.append(hll.merge(bytes(x), bytes(y)))
-    return pd.Series(out)
+    return hll.merge(a, b)
 
 
-@F.pandas_udf(T.BinaryType())
-def hll_fold_udf(sketches, p_target):
+@cell_udf(T.BinaryType())
+def hll_fold_udf(sketch, p_target):
     """Row-wise exact precision downgrade (see sketch.hll.fold)."""
-    import pandas as pd
-
-    return pd.Series(
-        [None if s is None else hll.fold(bytes(s), int(p))
-         for s, p in zip(sketches, p_target)],
-    )
+    return hll.fold(sketch, int(p_target))
 
 
-@F.pandas_udf(T.DoubleType())
+@cell_udf(T.DoubleType())
 def hll_jaccard_udf(a, b):
     """Row-wise Jaccard similarity estimate of two sketch columns."""
-    import pandas as pd
-
-    return pd.Series(
-        [None if x is None or y is None
-         else hll.jaccard_estimate(bytes(x), bytes(y))
-         for x, y in zip(a, b)],
-        dtype="float64",
-    )
+    return hll.jaccard_estimate(a, b)
 
 
 def register_sql_functions(spark) -> None:

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .engine.aggregate import SketchAggregator, collect_merged, sketch_agg
+from .functions import _as_list
 from .sketch import fd
 
 __all__ = ["FdAggregator", "fd_build", "fd_agg", "fd_gram_long",
@@ -95,7 +96,7 @@ def fd_agg(
     ell: int = fd.DEFAULT_ELL,
 ) -> DataFrame:
     """Per-group FD sketches as a BinaryType column."""
-    group_by = [group_by] if isinstance(group_by, str) else list(group_by or [])
+    group_by = _as_list(group_by)
     return sketch_agg(
         df.filter(F.col(vec_col).isNotNull()), [vec_col],
         FdAggregator(ell), group_by, finalize=False,

@@ -3,6 +3,9 @@ vectorized membership probes.
 
     sk = bloom_build(df, "c_custkey", expected_items=200_000)
     probed = with_might_contain(other_df, "key_col", sk, alias="seen")
+
+Both probes are ``engine.cells.hash_probe_udf`` calls: one vectorized
+kernel call per Arrow batch, and a NULL hash gives NULL.
 """
 
 from __future__ import annotations
@@ -15,7 +18,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .engine.aggregate import SketchAggregator, collect_merged, sketch_agg
-from .functions import _drop_null_rows, _to_numpy_u64
+from .engine.cells import hash_probe_udf
+from .functions import _as_list, _drop_null_rows, _to_numpy_u64
 from .sketch import bloom, cbf
 
 __all__ = [
@@ -88,7 +92,7 @@ def bloom_agg(
 ) -> DataFrame:
     """Per-group Bloom sketches as a BinaryType column."""
     cols = [cols] if isinstance(cols, str) else list(cols)
-    group_by = [group_by] if isinstance(group_by, str) else list(group_by or [])
+    group_by = _as_list(group_by)
     agg = BloomAggregator(m_bits, k)
     return sketch_agg(_drop_null_rows(df, cols), cols, agg, group_by, finalize=False)
 
@@ -104,23 +108,8 @@ def with_might_contain(
     8-byte hashes. The filter bytes ride along as a closure constant
     (broadcast-sized: m_bits/8 bytes)."""
     cols = [cols] if isinstance(cols, str) else list(cols)
-    sketch = bytes(sketch)
-
-    @F.pandas_udf(T.BooleanType())
-    def probe(hashes):
-        import pandas as pd
-
-        h = hashes.to_numpy(dtype=np.int64, na_value=0).view(np.uint64)
-        out = pd.Series(
-            bloom.might_contain(sketch, h),
-            index=hashes.index,
-            dtype="boolean",
-        )
-        out[hashes.isna()] = None  # NULL key -> NULL, not hash-0's answer
-        return out
-
-    hcol = F.xxhash64(*[F.col(c) for c in cols])
-    return df.withColumn(alias, probe(hcol))
+    probe = hash_probe_udf(bloom.might_contain, sketch, T.BooleanType())
+    return df.withColumn(alias, probe(F.xxhash64(*[F.col(c) for c in cols])))
 
 
 def bloom_filtered_join(
@@ -255,7 +244,7 @@ def cbf_agg(
 ) -> DataFrame:
     """Per-group counting-Bloom sketches as a BinaryType column."""
     cols = [cols] if isinstance(cols, str) else list(cols)
-    group_by = [group_by] if isinstance(group_by, str) else list(group_by or [])
+    group_by = _as_list(group_by)
     agg = CbfAggregator(log2_m, k, delta_col=delta_col, hashing=hashing)
     return sketch_agg(_drop_null_rows(df, cols), cols, agg, group_by,
                       finalize=False)
@@ -277,17 +266,5 @@ def with_cbf_might_contain(
     sketch = bytes(sketch)
     cbf.validate(sketch)  # fail fast on the driver, not inside executors
 
-    @F.pandas_udf(T.BooleanType())
-    def probe(hashes):
-        import pandas as pd
-
-        h = hashes.to_numpy(dtype=np.int64, na_value=0).view(np.uint64)
-        out = pd.Series(
-            cbf.might_contain(sketch, h),
-            index=hashes.index,
-            dtype="boolean",
-        )
-        out[hashes.isna()] = None  # NULL key -> NULL, not hash-0's answer
-        return out
-
+    probe = hash_probe_udf(cbf.might_contain, sketch, T.BooleanType())
     return df.withColumn(alias, probe(_hash_expr(cols, hashing)))

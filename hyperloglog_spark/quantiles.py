@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .engine.aggregate import SketchAggregator, sketch_agg
-from .functions import _drop_null_rows
+from .functions import _as_list, _drop_null_rows
 from .sketch import kll, tdigest
 
 __all__ = [
@@ -194,7 +194,7 @@ def approx_quantiles_weighted(
     n_copies — without re-exploding the duplicates. method='tdigest'
     (default) takes arbitrary positive weights; method='kll' requires
     integer weights (exact binary-decomposition placement)."""
-    group_by = [group_by] if isinstance(group_by, str) else list(group_by or [])
+    group_by = _as_list(group_by)
     if method == "tdigest":
         agg: _QuantileAggregator = WeightedTDigestAggregator(
             qs, weight_col=weight_col, **params
@@ -256,7 +256,7 @@ def approx_trimmed_mean(
     (k >= n) the result is EXACTLY the SQL fractional-overlap
     order-statistic rule; beyond, boundaries carry the backend's rank
     error."""
-    group_by = [group_by] if isinstance(group_by, str) else list(group_by or [])
+    group_by = _as_list(group_by)
     if method == "kll":
         agg: _QuantileAggregator = KllTrimmedMeanAggregator(q0, q1, **params)
     elif method == "tdigest":
@@ -333,7 +333,7 @@ def approx_rank(
     approx_quantiles. method='kll' (default, whp rank bound) or
     'tdigest' (centroid-midrank interpolation, typically tighter
     mid-distribution, no worst-case bound)."""
-    group_by = [group_by] if isinstance(group_by, str) else list(group_by or [])
+    group_by = _as_list(group_by)
     if method == "kll":
         agg: _QuantileAggregator = KllRankAggregator(values, **params)
     elif method == "tdigest":
@@ -367,7 +367,7 @@ def approx_quantiles(
     columns — the sketch's values at ranks q -/+ eps for the backend's whp
     rank-error bound eps (the reference TestValidity shape: the exact
     q-quantile lies in [lo, hi] with high probability)."""
-    group_by = [group_by] if isinstance(group_by, str) else list(group_by or [])
+    group_by = _as_list(group_by)
     agg = _make_agg(method, qs, **params)
     return sketch_agg(_drop_null_rows(df, [col]), [col], agg, group_by)
 
@@ -378,7 +378,7 @@ def kll_agg(
     group_by: str | list[str] | None = None,
     k: int = kll.DEFAULT_K,
 ) -> DataFrame:
-    group_by = [group_by] if isinstance(group_by, str) else list(group_by or [])
+    group_by = _as_list(group_by)
     agg = KllAggregator(k=k)
     return sketch_agg(_drop_null_rows(df, [col]), [col], agg, group_by,
                       finalize=False)
@@ -390,7 +390,7 @@ def tdigest_agg(
     group_by: str | list[str] | None = None,
     delta: int = tdigest.DEFAULT_DELTA,
 ) -> DataFrame:
-    group_by = [group_by] if isinstance(group_by, str) else list(group_by or [])
+    group_by = _as_list(group_by)
     agg = TDigestAggregator(delta=delta)
     return sketch_agg(_drop_null_rows(df, [col]), [col], agg, group_by,
                       finalize=False)

@@ -23,10 +23,13 @@ input partition's cells per key, so at most (#partitions x #groups) sketch
 rows cross the shuffle, and phase 2 is the shared sorted merge. Merges are
 associative and commutative, so the rolled-up sketch is byte-identical to
 one built directly from the raw rows (asserted in tests/test_rollup.py).
+NULL cells are skipped; ``hll_rollup`` and ``quantiles_rollup`` then read
+each merged cell through an ``engine.cells.cell_udf``.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -37,6 +40,8 @@ from .engine.aggregate import (
     premerged_sketch,
     sketch_agg,
 )
+from .engine.cells import cell_udf
+from .functions import _as_list, hll_estimate_udf
 from .sketch import (
     bloom,
     cbf,
@@ -117,9 +122,7 @@ def merge_sketches(
     before merging — for stores whose shards were written at different
     precisions over time (see ``sketch.hll.fold``).
     """
-    group_cols = (
-        [group_by] if isinstance(group_by, str) else list(group_by or [])
-    )
+    group_cols = _as_list(group_by)
     cells = df.filter(F.col(sketch_col).isNotNull())
     agg = _StoredCells(fold_to)
     if not group_cols:
@@ -148,13 +151,9 @@ def hll_rollup(
     event_type — byte-identical registers, zero data rescan. ``fold_to=p``
     exactly folds mixed-precision shards to p first.
     """
-    from .functions import hll_estimate_udf
-
     merged = merge_sketches(df, sketch_col, group_by, alias="__sk",
                             fold_to=fold_to)
-    group_cols = (
-        [group_by] if isinstance(group_by, str) else list(group_by or [])
-    )
+    group_cols = _as_list(group_by)
     return merged.select(
         *[F.col(c) for c in group_cols],
         hll_estimate_udf(F.col("__sk")).alias(alias),
@@ -172,38 +171,26 @@ def quantiles_rollup(
     The kind (KLL vs t-digest) is read from each cell's codec envelope.
     Output columns follow approx_quantiles naming (0.5 -> q5, 0.99 -> q99).
     """
-    import numpy as np
-
     from .quantiles import _q_name
-    from .sketch import kll as _kll
-    from .sketch import tdigest as _td
 
     qs = list(qs)
     if any(not 0 <= q <= 1 for q in qs):
         raise ValueError(f"quantile ranks must be in [0, 1]: {qs}")
     merged = merge_sketches(df, sketch_col, group_by, alias="__sk")
-    group_cols = (
-        [group_by] if isinstance(group_by, str) else list(group_by or [])
-    )
+    group_cols = _as_list(group_by)
 
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def qudf(cells):
-        import pandas as pd
-
-        out = []
-        for cell in cells:
-            b = bytes(cell)
-            kind = codec.sketch_kind(b)
-            if kind == codec.KIND_KLL:
-                vals = _kll.quantiles(b, qs)
-            elif kind == codec.KIND_TDIGEST:
-                vals = _td.quantiles(b, qs)
-            else:
-                raise ValueError(
-                    f"quantiles_rollup needs KLL/t-digest cells, got kind {kind}"
-                )
-            out.append([None if np.isnan(v) else float(v) for v in vals])
-        return pd.Series(out)
+    @cell_udf(T.ArrayType(T.DoubleType()))
+    def qudf(cell):
+        kind = codec.sketch_kind(cell)
+        if kind == codec.KIND_KLL:
+            vals = kll.quantiles(cell, qs)
+        elif kind == codec.KIND_TDIGEST:
+            vals = tdigest.quantiles(cell, qs)
+        else:
+            raise ValueError(
+                f"quantiles_rollup needs KLL/t-digest cells, got kind {kind}"
+            )
+        return [None if np.isnan(v) else float(v) for v in vals]
 
     sel = merged.select(
         *[F.col(c) for c in group_cols], qudf(F.col("__sk")).alias("__qs")

@@ -6,7 +6,9 @@ three estimates and can go negative. The theta sketch (``sketch/theta``)
 is the set-operation-closed alternative: per-group bottom-k states built
 with the same two-phase skeleton as every other sketch here, then
 union / intersect / a-not-b composed LAZILY over the stored sketch
-columns via scalar pandas UDFs.
+columns via scalar pandas UDFs (``engine.cells``: a NULL side of a union
+is the empty sketch, a NULL right side of a-not-b removes nothing, any
+other NULL argument gives NULL).
 
     va = theta_sketch_agg(events.filter("event_type='view'"), "user_id")
     vb = theta_sketch_agg(events.filter("event_type='purchase'"), "user_id")
@@ -31,7 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .engine.aggregate import SKETCH_COL, SketchAggregator, sketch_agg
-from .functions import _drop_null_rows
+from .engine.cells import LEFT, UNION, cell_udf
+from .functions import _as_list, _drop_null_rows
 from .sketch import theta
 
 __all__ = [
@@ -103,9 +106,7 @@ def theta_sketch_agg(
     """Merged theta sketch (BinaryType ``sketch``) per group — store it,
     union it across shards, intersect it across slices later."""
     cols = [cols] if isinstance(cols, str) else list(cols)
-    group_by = (
-        [group_by] if isinstance(group_by, str) else list(group_by or [])
-    )
+    group_by = _as_list(group_by)
     agg = ThetaAggregator(k=k, hashing=hashing, salt=salt)
     return sketch_agg(
         _drop_null_rows(df, cols), cols, agg, group_by, finalize=False
@@ -125,83 +126,39 @@ def theta_distinct(
     ``approx_distinct`` (HLL) when only union/rollup matters — better
     accuracy per byte; use this when the sets will also be intersected."""
     cols = [cols] if isinstance(cols, str) else list(cols)
-    group_by = (
-        [group_by] if isinstance(group_by, str) else list(group_by or [])
-    )
+    group_by = _as_list(group_by)
     agg = ThetaAggregator(k=k, hashing=hashing, salt=salt, alias=alias)
     return sketch_agg(_drop_null_rows(df, cols), cols, agg, group_by)
 
 
-@F.pandas_udf(T.LongType())
-def theta_estimate_udf(sketches):
-    import pandas as pd
-
-    # Nullable extension dtype: NULL sketches (e.g. theta_intersect over a
-    # left join's missing side) must map to NULL estimates, and the plain
-    # "int64" constructor raises TypeError on None.
-    return pd.Series(
-        [None if s is None else theta.estimate(bytes(s)) for s in sketches],
-        dtype="Int64",
-    )
+@cell_udf(T.LongType())
+def theta_estimate_udf(sketch):
+    """Row-wise distinct-count estimate of a theta sketch column."""
+    return theta.estimate(sketch)
 
 
-def _pairwise(op):
-    import pandas as pd
-
-    def fn(a, b):
-        out = []
-        for x, y in zip(a, b):
-            if x is None:
-                out.append(None if y is None else bytes(y))
-            elif y is None:
-                out.append(bytes(x))
-            else:
-                out.append(op(bytes(x), bytes(y)))
-        return pd.Series(out)
-
-    return fn
-
-
-@F.pandas_udf(T.BinaryType())
+@cell_udf(T.BinaryType(), nulls=UNION)
 def theta_union_udf(a, b):
     """Row-wise union of two sketch columns (NULL-absorbing)."""
-    return _pairwise(theta.union)(a, b)
+    return theta.union(a, b)
 
 
-@F.pandas_udf(T.BinaryType())
+@cell_udf(T.BinaryType())
 def theta_intersect_udf(a, b):
-    """Row-wise intersection. NULL (= empty set here) yields the other
-    side for union — for intersection a NULL input yields NULL."""
-    import pandas as pd
-
-    return pd.Series(
-        [None if x is None or y is None
-         else theta.intersect(bytes(x), bytes(y))
-         for x, y in zip(a, b)]
-    )
+    """Row-wise intersection of two sketch columns."""
+    return theta.intersect(a, b)
 
 
-@F.pandas_udf(T.BinaryType())
+@cell_udf(T.BinaryType(), nulls=LEFT)
 def theta_a_not_b_udf(a, b):
-    import pandas as pd
-
-    return pd.Series(
-        [None if x is None else
-         (bytes(x) if y is None else theta.a_not_b(bytes(x), bytes(y)))
-         for x, y in zip(a, b)]
-    )
+    """Row-wise set difference a minus b; a NULL b removes nothing."""
+    return theta.a_not_b(a, b)
 
 
-@F.pandas_udf(T.DoubleType())
+@cell_udf(T.DoubleType())
 def theta_jaccard_udf(a, b):
-    import pandas as pd
-
-    return pd.Series(
-        [None if x is None or y is None
-         else theta.jaccard(bytes(x), bytes(y))
-         for x, y in zip(a, b)],
-        dtype="float64",
-    )
+    """Row-wise Jaccard similarity estimate of two sketch columns."""
+    return theta.jaccard(a, b)
 
 
 def register_theta_sql_functions(spark) -> None:

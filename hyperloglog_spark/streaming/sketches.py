@@ -17,7 +17,9 @@ estimates are bit-identical on identical input (asserted in tests).
 Scale notes: state per group is one sketch blob in the state store; the
 shuffle per micro-batch moves raw rows once to group them (unavoidable in
 update mode); watermark + per-window groups bound state growth for
-event-time queries.
+event-time queries. ``streaming_approx_distinct`` names its estimate column
+by renaming the aggregator's ``approx_distinct`` output, as the batch
+``approx_distinct`` does.
 """
 
 from __future__ import annotations
@@ -32,7 +34,12 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..engine.aggregate import SketchAggregator
-from ..functions import HllAggregator
+from ..functions import (
+    HllAggregator,
+    _as_list,
+    _drop_null_rows,
+    hll_sketch_agg,
+)
 
 
 def streaming_sketch_agg(
@@ -124,19 +131,11 @@ def streaming_approx_distinct(
     alias: str = "approx_distinct",
 ) -> DataFrame:
     """Streaming HLL distinct per group (update mode, exact restarts)."""
-    from ..functions import _drop_null_rows
-
     key_cols = [cols] if isinstance(cols, str) else list(cols)
     df = _drop_null_rows(df, key_cols)  # COUNT(DISTINCT ...) null semantics
-    agg = HllAggregator(p=p)
-    agg.finalize_fields = [T.StructField(alias, T.LongType(), False)]
-    base = agg.finalize
-
-    def renamed(sk: bytes) -> dict:
-        return {alias: base(sk)["approx_distinct"]}
-
-    agg.finalize = renamed  # type: ignore[method-assign]
-    return streaming_sketch_agg(df, cols, agg, group_by)
+    return streaming_sketch_agg(
+        df, cols, HllAggregator(p=p), group_by
+    ).withColumnRenamed("approx_distinct", alias)
 
 
 def streaming_approx_quantiles(
@@ -155,7 +154,6 @@ def streaming_approx_quantiles(
     value-for-value, and beyond it the published rank-error bounds hold
     (micro-batch splits only change which compactions fire, not the
     guarantee)."""
-    from ..functions import _drop_null_rows
     from ..quantiles import _make_agg
 
     agg = _make_agg(method, qs, **params)
@@ -180,7 +178,6 @@ def streaming_approx_quantiles_weighted(
     KLL: integer weights, exact binary-decomposition placement) riding the
     generic skeleton; in the KLL no-compaction regime the streamed state
     is byte-identical to the batch build over the same rows."""
-    from ..functions import _drop_null_rows
     from ..quantiles import WeightedKllAggregator, WeightedTDigestAggregator
 
     if method == "tdigest":
@@ -207,7 +204,6 @@ def streaming_cms_sketches(
     Counter addition is exact and associative, so the streamed sketch is
     byte-identical to a batch build over the same rows."""
     from ..frequency import CmsAggregator
-    from ..functions import _drop_null_rows
     from ..sketch import cms
 
     agg = CmsAggregator(
@@ -282,10 +278,8 @@ def sketch_shard_sink(
     Returns the started StreamingQuery's writer — call
     ``.trigger(...).start()`` (or ``.trigger(availableNow=True)``) on it.
     """
-    from ..functions import hll_sketch_agg
-
     key_cols = [cols] if isinstance(cols, str) else list(cols)
-    groups = [group_by] if isinstance(group_by, str) else list(group_by or [])
+    groups = _as_list(group_by)
 
     def write_batch(bdf, bid: int) -> None:
         if not bdf.isEmpty():

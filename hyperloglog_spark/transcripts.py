@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .frequency import cms_topk
-from .functions import approx_distinct
+from .functions import _as_list, approx_distinct
 from .membership import bloom_build, with_might_contain
 from .quantiles import approx_quantiles
 
@@ -148,7 +148,7 @@ def sessionize(
     partition_by = (
         [partition_by] if isinstance(partition_by, str) else list(partition_by)
     )
-    order_by = [order_by] if isinstance(order_by, str) else list(order_by or [])
+    order_by = _as_list(order_by)
     # NTZ -> TIMESTAMP -> epoch seconds (session TZ pinned UTC by get_spark)
     epoch = F.col(ts_col).cast("timestamp").cast("double")
     order_cols = [F.col(ts_col)] + [F.col(c) for c in order_by]
