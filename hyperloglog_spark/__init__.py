@@ -6,6 +6,7 @@ aggregation, built for transcripts-scale tables (see SURVEY.md /
 BASELINE.json).
 """
 
+from .engine import worker as _worker
 from .frequency import (
     cms_agg, cms_join_size, cms_point_query_udf, cms_topk,
     cms_topk_verified,
@@ -74,3 +75,6 @@ __all__ = [
     "tdigest_agg",
     "with_might_contain",
 ]
+
+# On a Python worker: skip the per-task import-cache flush (engine.worker).
+_worker.install()

@@ -4,21 +4,25 @@ vectorized membership probes.
     sk = bloom_build(df, "c_custkey", expected_items=200_000)
     probed = with_might_contain(other_df, "key_col", sk, alias="seen")
 
-Both probes are ``engine.cells.hash_probe_udf`` calls: one vectorized
-kernel call per Arrow batch, and a NULL hash gives NULL.
+Both probes are ``engine.cells.hash_probe_udf`` calls over ``_probe_hash``:
+one vectorized kernel call per Arrow batch, and a key with a NULL column
+probes as NULL, as an equi-join key matches nothing.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
 from typing import Any
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .engine.aggregate import SketchAggregator, collect_merged, sketch_agg
 from .engine.cells import hash_probe_udf
+from .frequency import _hash_expr
 from .functions import _as_list, _drop_null_rows, _to_numpy_u64
 from .sketch import bloom, cbf
 
@@ -97,6 +101,13 @@ def bloom_agg(
     return sketch_agg(_drop_null_rows(df, cols), cols, agg, group_by, finalize=False)
 
 
+def _probe_hash(cols: list[str], hashing: str) -> Column:
+    """The probe key's hash, NULL when any key column is NULL (``xxhash64``
+    alone hashes a NULL key to its seed, 42, and would answer for that)."""
+    present = reduce(and_, [F.col(c).isNotNull() for c in cols])
+    return F.when(present, _hash_expr(cols, hashing))
+
+
 def with_might_contain(
     df: DataFrame,
     cols: str | list[str],
@@ -106,10 +117,11 @@ def with_might_contain(
     """Add a boolean column probing the filter. Hashing stays JVM-side
     (xxhash64, identical to the build path); the probe UDF only touches
     8-byte hashes. The filter bytes ride along as a closure constant
-    (broadcast-sized: m_bits/8 bytes)."""
+    (broadcast-sized: m_bits/8 bytes). A key with a NULL column gives
+    NULL."""
     cols = [cols] if isinstance(cols, str) else list(cols)
     probe = hash_probe_udf(bloom.might_contain, sketch, T.BooleanType())
-    return df.withColumn(alias, probe(F.xxhash64(*[F.col(c) for c in cols])))
+    return df.withColumn(alias, probe(_probe_hash(cols, "xxhash64")))
 
 
 def bloom_filtered_join(
@@ -194,8 +206,6 @@ class CbfAggregator(SketchAggregator):
         ]
 
     def prepare_columns(self, df: DataFrame, cols: list[str]):
-        from .frequency import _hash_expr
-
         delta = (
             F.col(self.delta_col).cast("long")
             if self.delta_col is not None
@@ -259,12 +269,11 @@ def with_cbf_might_contain(
 ) -> DataFrame:
     """Probe a counting-Bloom filter: true iff all k counters > 0. No false
     negatives for keys with positive net insert count; raises if the merged
-    filter has negative cells (deletes of never-inserted keys)."""
-    from .frequency import _hash_expr
-
+    filter has negative cells (deletes of never-inserted keys). A key with
+    a NULL column gives NULL."""
     cols = [cols] if isinstance(cols, str) else list(cols)
     sketch = bytes(sketch)
     cbf.validate(sketch)  # fail fast on the driver, not inside executors
 
     probe = hash_probe_udf(cbf.might_contain, sketch, T.BooleanType())
-    return df.withColumn(alias, probe(_hash_expr(cols, hashing)))
+    return df.withColumn(alias, probe(_probe_hash(cols, hashing)))

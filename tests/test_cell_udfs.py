@@ -10,9 +10,9 @@ written out here independently of the helper that implements it:
 - in ``theta_a_not_b`` a NULL right side returns the left side.
 
 One-argument UDFs read the first argument's pattern. Probes hash their
-key column first, so their NULL rule applies to the hash: ``xxhash64``
-of a NULL key is the seed, not NULL, while the md5 hash of a NULL key is
-NULL. ``quantiles_rollup`` merges stored cells per group, so a NULL cell
+key columns first, so their NULL rule applies to the hash: a key with any
+NULL column hashes to NULL, as an equi-join key matches nothing (bare
+``xxhash64`` of a NULL key would be its seed, 42). ``quantiles_rollup`` merges stored cells per group, so a NULL cell
 is skipped and a group of NULL cells is dropped.
 """
 
@@ -116,7 +116,11 @@ UDFS = {
     "cs_point_query": (cs_point_query_udf(CS), ["k"],
                        _probe(countsketch.point_query, CS)),
     "bloom_probe": (None, ["k_xxhash64"], _probe(bloom.might_contain, BLOOM)),
+    "bloom_probe_pair": (None, ["kp_xxhash64"],
+                         _probe(bloom.might_contain, BLOOM)),
     "cbf_probe": (None, ["k_md5"], _probe(cbf.might_contain, CBF)),
+    "cbf_probe_xxhash64": (None, ["k_xxhash64"],
+                           _probe(cbf.might_contain, CBF)),
 }
 
 
@@ -135,11 +139,17 @@ def table(spark):
         for pat in PATTERNS
     ], schema)
     df = with_might_contain(df, "k", BLOOM, alias="udf_bloom_probe")
+    df = with_might_contain(df, ["k", "p"], BLOOM,
+                            alias="udf_bloom_probe_pair")
     df = with_cbf_might_contain(df, "k", CBF, alias="udf_cbf_probe",
                                 hashing="md5")
+    df = with_cbf_might_contain(df, "k", CBF,
+                                alias="udf_cbf_probe_xxhash64")
     rows = df.select(
         "*",
-        F.xxhash64("k").alias("k_xxhash64"),
+        F.when(F.col("k").isNotNull(), F.xxhash64("k")).alias("k_xxhash64"),
+        F.when(F.col("k").isNotNull() & F.col("p").isNotNull(),
+               F.xxhash64("k", "p")).alias("kp_xxhash64"),
         _hash_expr(["k"], "md5").alias("k_md5"),
         *[udf(*args).alias(f"udf_{name}")
           for name, (udf, args, _) in UDFS.items() if udf],

@@ -178,6 +178,26 @@ def test_ngram_jaccard_observes_dropped_postings(docs):
     assert got["n_ids_in_dropped"] > 2 * got["n_buckets_dropped"]
 
 
+def test_observed_drops_of_an_empty_result_raise_on_get(spark):
+    # The caveat in dedup._observe_dropped: when every bucket is over the
+    # cap the final result is empty, AQE's empty-relation propagation
+    # prunes the CollectMetrics node, and Observation.get raises instead
+    # of reporting the drops.
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql import Observation
+
+    from hyperloglog_spark.pipeline.dedup import minhash_lsh_candidates
+
+    sigs = spark.createDataFrame([(i, [1, 2, 3, 4]) for i in range(20)],
+                                 "doc_id long, sig array<bigint>")
+    obs = Observation("drops")
+    out = minhash_lsh_candidates(sigs, "doc_id", bands=2, rows_per_band=2,
+                                 max_bucket=5, observation=obs)
+    assert out.collect() == []
+    with pytest.raises(Py4JJavaError):
+        obs.get
+
+
 def test_neardup_partitioning_invariance(docs):
     a = near_dup_pairs(docs, "text", "doc_id").collect()
     b = near_dup_pairs(docs.repartition(7), "text", "doc_id").collect()
