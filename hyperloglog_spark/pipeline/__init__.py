@@ -2,7 +2,8 @@
 
 Deduplication (exact, MinHash+LSH, SimHash, n-gram Jaccard,
 embedding-cosine, connected-component clusters with keep-representative),
-similarity search (brute-force + blocked + LSH-bucketed cosine top-k),
+similarity search (brute-force, blocked, LSH, IVF and PQ cosine top-k
+sharing one local-cut + SQL top-k tail),
 text analysis (language
 ID, quality scoring, token stats, fingerprinting), and multimodal column
 plumbing. All Spark-first: string/shingle hashing runs JVM-side inside

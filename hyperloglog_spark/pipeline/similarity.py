@@ -1,22 +1,33 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
-Two paths:
+Every top-k operator is one pipeline: candidates -> local cut -> SQL
+top-k -> optional exact re-rank.
 
-- ``brute_force_topk`` — the exact baseline for broadcast-sized query
-  sets: the query matrix rides the Arrow UDF closure (the same driver
-  round-trip a broadcast hash join performs internally); each corpus batch
-  does ONE numpy matmul, keeps its local top-k per query, and only
-  #partitions × #queries × k candidate rows ever reach the final per-query
-  merge. Zero corpus shuffle — at 100 TB the scan dominates and the
-  reduction is output-bounded.
-- ``blocked_topk`` — the exact path when the query set outgrows broadcast:
-  corpus hashed into blocks, queries replicated per block JVM-side, one
-  matmul per cogroup block, output-bounded merge. One shuffle per side.
-- ``lsh_topk`` — the approximate scale path: random-hyperplane signatures
-  bucket the corpus; queries run the SAME signature kernel (fully lazy, no
-  collect), probe their own bucket plus all 1-bit-flip neighbors
-  (multiprobe), and candidates are exactly re-ranked via a bucket join
-  that carries the query vector. Recall vs brute force asserted in tests.
+- Candidates. ``brute_force_topk`` scores each corpus batch against the
+  query matrix riding the Arrow UDF closure (the driver round-trip a
+  broadcast hash join performs internally; zero corpus shuffle).
+  ``blocked_topk`` is the exact path when the query set outgrows
+  broadcast: corpus hashed into blocks, queries replicated per block, one
+  matmul per cogroup block. ``pq_topk``, ``ivf_pq_topk`` and
+  ``pq_topk_from_codes`` score product-quantization codes through ADC
+  lookup tables (``_adc_candidates``). ``lsh_topk`` and ``ivf_topk`` join
+  corpus buckets / coarse cells to query probes (fully lazy, no collect)
+  and score the joined pairs exactly.
+- Local cut. ``_local_topk`` keeps each query's best ``take`` rows of a
+  batch under the final ordering (permille desc, id asc), self excluded
+  before the cut, so only #batches x #queries x take rows leave a scan.
+- SQL top-k. ``_topk`` is a per-query ``row_number()`` cut, which Spark
+  plans as a ``WindowGroupLimit`` (a partial limit below the shuffle and
+  the final one above it): no Python stage merges candidates.
+- Re-rank. The PQ operators broadcast their ADC shortlist back against
+  the corpus (``_refine``) and rescore it exactly with the same
+  pair-cosine kernel and top-k as ``lsh_topk``/``ivf_topk``
+  (``_score_and_topk``); ``embedding_neardup_pairs`` verifies its
+  signature-blocked pairs with that kernel too.
+
+A row whose vector (or stored PQ code) is NULL takes no part, on the
+corpus and on the query side alike — the rule COUNT(DISTINCT) applies to
+NULL values.
 
 Scores cross engine boundaries as ``floor(1000 * cosine)`` integers
 (permille) to keep comparisons float-free; ties break on neighbor id.
@@ -29,19 +40,25 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .sampling import _sample_key
+
+_CAND_COLS = "query_id bigint, neighbor_id bigint, score_permille bigint"
+
 
 def _vec_matrix(arr: pa.Array) -> np.ndarray:
-    """list<float> column -> (n, d) float64 matrix (zero-copy flat)."""
+    """list<float> column of equal-length vectors -> (n, d) float64."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
-    offsets = arr.offsets.to_numpy(zero_copy_only=False)
-    d = int(offsets[1] - offsets[0]) if len(offsets) > 1 else 0
-    flat = arr.values.to_numpy(zero_copy_only=False).astype(np.float64)
-    return flat.reshape(-1, d)
+    flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    return flat.reshape(len(arr), -1)
+
+
+def _ids(arr: pa.Array) -> np.ndarray:
+    return arr.to_numpy(zero_copy_only=False).astype(np.int64)
 
 
 def _normalize(m: np.ndarray) -> np.ndarray:
@@ -50,18 +67,14 @@ def _normalize(m: np.ndarray) -> np.ndarray:
     return m / norms
 
 
-_CAND_SCHEMA = T.StructType([
-    T.StructField("query_id", T.LongType(), False),
-    T.StructField("neighbor_id", T.LongType(), False),
-    T.StructField("score_permille", T.LongType(), False),
-])
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The (id, vector) projection every operator reads: rows whose
+    vector is NULL are dropped."""
+    return df.select(id_col, vec_col).where(F.col(vec_col).isNotNull())
 
-_TOPK_SCHEMA = T.StructType([
-    T.StructField("query_id", T.LongType(), False),
-    T.StructField("rank", T.IntegerType(), False),
-    T.StructField("neighbor_id", T.LongType(), False),
-    T.StructField("score_permille", T.LongType(), False),
-])
+
+def _vec_type(df: DataFrame, vec_col: str) -> str:
+    return df.schema[vec_col].dataType.simpleString()
 
 
 def _infer_dim(df: DataFrame, vec_col: str, dim: int | None) -> int:
@@ -70,8 +83,8 @@ def _infer_dim(df: DataFrame, vec_col: str, dim: int | None) -> int:
     set instead of an opaque TypeError (ADVICE r2)."""
     if dim is not None:
         return dim
-    row = df.select(vec_col).first()
-    if row is None or row[0] is None:
+    row = df.select(vec_col).where(F.col(vec_col).isNotNull()).first()
+    if row is None:
         raise ValueError(
             f"cannot infer vector dim: {vec_col!r} is empty (no non-null "
             "rows to peek at) — pass dim= explicitly"
@@ -79,16 +92,80 @@ def _infer_dim(df: DataFrame, vec_col: str, dim: int | None) -> int:
     return len(row[0])
 
 
-def _topk_merge(k: int):
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["score_permille", "neighbor_id"], ascending=[False, True]
-        ).head(k)
-        pdf = pdf.reset_index(drop=True)
-        pdf["rank"] = np.arange(1, len(pdf) + 1, dtype=np.int32)
-        return pdf[["query_id", "rank", "neighbor_id", "score_permille"]]
+def _collect_queries(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    max_queries: int,
+    op: str | None,
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """Budgeted driver collect of the query set -> (ids, raw vectors).
+    ``limit(max_queries + 1)`` is at once the budget probe and the
+    materialization: driver transfer is capped at max_queries + 1 rows
+    (CollectLimit early-exits the scan) and no extra job runs. Over
+    budget, returns None when ``op`` is None (the caller routes the
+    query set elsewhere), else raises naming ``op``."""
+    rows = (
+        _vectors(queries, id_col, vec_col).limit(max_queries + 1).collect()
+    )
+    if len(rows) > max_queries:
+        if op is None:
+            return None
+        raise ValueError(
+            f"{op} collects the query set to the driver; got more than "
+            f"max_queries={max_queries} rows — use blocked_topk for "
+            "corpus-scale query sets or raise the budget explicitly"
+        )
+    if not rows:
+        raise ValueError("empty query set")
+    return (np.array([r[0] for r in rows], dtype=np.int64),
+            np.array([r[1] for r in rows], dtype=np.float64))
 
-    return merge
+
+def _local_topk(
+    q_ids: np.ndarray,
+    ids: np.ndarray,
+    pm: np.ndarray,
+    take: int,
+    exclude_self: bool,
+) -> pa.RecordBatch:
+    """The per-query local cut of one batch: ``pm[i, j]`` is the permille
+    score of corpus row ``ids[i]`` for query ``q_ids[j]``. Keeps each
+    query's best ``take`` rows under the FINAL ordering (permille desc,
+    id asc) — cutting on raw floats or with argpartition could drop a
+    permille-tied candidate the global top-k would rank — after dropping
+    the query itself when ``exclude_self``."""
+    out_q, out_n, out_s = [], [], []
+    for qi, qid in enumerate(q_ids):
+        col, nids = pm[:, qi], ids
+        if exclude_self:
+            keep = nids != qid
+            col, nids = col[keep], nids[keep]
+        order = np.lexsort((nids, -col))[:take]
+        out_q.append(np.full(len(order), qid, dtype=np.int64))
+        out_n.append(nids[order])
+        out_s.append(col[order])
+    cat = (lambda xs: np.concatenate(xs) if xs
+           else np.empty(0, dtype=np.int64))
+    return pa.RecordBatch.from_arrays(
+        [pa.array(cat(out_q), pa.int64()), pa.array(cat(out_n), pa.int64()),
+         pa.array(cat(out_s), pa.int64())],
+        names=["query_id", "neighbor_id", "score_permille"],
+    )
+
+
+def _topk(cands: DataFrame, k: int) -> DataFrame:
+    """The global per-query top-k of (query_id, neighbor_id,
+    score_permille) candidate rows -> (query_id, rank, neighbor_id,
+    score_permille). A ``row_number`` cut Spark plans as a
+    ``WindowGroupLimit``."""
+    order = Window.partitionBy("query_id").orderBy(
+        F.desc("score_permille"), F.asc("neighbor_id"))
+    return (
+        cands.withColumn("rank", F.row_number().over(order))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", "score_permille")
+    )
 
 
 def brute_force_topk(
@@ -122,11 +199,9 @@ def brute_force_topk(
         return blocked_topk(
             corpus, queries, id_col, vec_col, k=k, exclude_self=exclude_self
         )
-    q_rows = (
-        queries.select(id_col, vec_col)
-        .limit(max_broadcast_queries + 1).collect()
-    )
-    if len(q_rows) > max_broadcast_queries:
+    got = _collect_queries(
+        queries, id_col, vec_col, max_broadcast_queries, op=None)
+    if got is None:
         if expected_queries is None:
             return blocked_topk(
                 corpus, queries, id_col, vec_col, k=k,
@@ -137,50 +212,76 @@ def brute_force_topk(
             f"rows but expected_queries={expected_queries} declared it "
             "broadcast-sized; use blocked_topk or declare the true size"
         )
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = _normalize(np.array([r[1] for r in q_rows], dtype=np.float64))
-
-    proj = corpus.select(F.col(id_col), F.col(vec_col))
-    local_k = k + (1 if exclude_self else 0)
+    q_ids, q_vecs = got
+    q_mat = _normalize(q_vecs)
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             mat = _normalize(_vec_matrix(batch.column(1)))
-            scores = mat @ q_mat.T                       # (n, q)
-            pm = np.floor(scores * 1000.0).astype(np.int64)
-            n = len(ids)
-            take = min(local_k, n)
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(q_ids)):
-                # local top-k under the FINAL ordering (permille desc, id
-                # asc) — selecting on raw floats could drop a permille-tied
-                # candidate the global merge would have ranked
-                order = np.lexsort((ids, -pm[:, qi]))[:take]
-                out_q.append(np.full(take, q_ids[qi], dtype=np.int64))
-                out_n.append(ids[order])
-                out_s.append(pm[order, qi])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(out_q), pa.int64()),
-                    pa.array(np.concatenate(out_n), pa.int64()),
-                    pa.array(np.concatenate(out_s), pa.int64()),
-                ],
-                names=["query_id", "neighbor_id", "score_permille"],
-            )
+            pm = np.floor((mat @ q_mat.T) * 1000.0).astype(np.int64)
+            yield _local_topk(q_ids, _ids(batch.column(0)), pm, k,
+                              exclude_self)
 
-    cands = proj.mapInArrow(
-        scan, "query_id bigint, neighbor_id bigint, score_permille bigint"
+    cands = _vectors(corpus, id_col, vec_col).mapInArrow(scan, _CAND_COLS)
+    return _topk(cands, k).orderBy("query_id", "rank")
+
+
+def blocked_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int = 10,
+    n_blocks: int | None = None,
+    exclude_self: bool = True,
+) -> DataFrame:
+    """Distributed exact brute-force top-k for LARGE query sets.
+
+    ``brute_force_topk`` broadcasts the query matrix (the right plan while
+    queries are broadcast-sized: zero corpus shuffle). When the query set
+    approaches corpus scale that cliff matters, so this variant shuffles
+    instead: corpus rows hash to ``n_blocks`` blocks, query rows are
+    replicated to every block JVM-side (explode over block ids — the small
+    side moves, once per block), and each cogroup block runs one matmul and
+    keeps block-local top-k under the final ordering. The merge input is
+    output-bounded: n_blocks × n_queries × k candidate rows, never n × q.
+    Results are identical to brute_force_topk (same scoring, same
+    tie-break).
+    """
+    if n_blocks is None:
+        n_blocks = max(corpus.sparkSession.sparkContext.defaultParallelism, 1)
+
+    c = _vectors(corpus, id_col, vec_col).withColumn(
+        "__blk", F.pmod(F.xxhash64(id_col), F.lit(n_blocks)).cast("int")
     )
-    if exclude_self:
-        cands = cands.filter(F.col("query_id") != F.col("neighbor_id"))
-    return (
-        cands.groupBy("query_id")
-        .applyInPandas(_topk_merge(k), _TOPK_SCHEMA)
-        .orderBy("query_id", "rank")
+    # the query side carries its own column names: when queries derive
+    # from the corpus DataFrame, shared names let the cogroup bind the
+    # corpus attributes on both sides
+    q = _vectors(queries, id_col, vec_col).select(
+        F.col(id_col).alias("__qid"), F.col(vec_col).alias("__qv"),
+        F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("__blk"),
     )
+
+    def score_block(cpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
+        ids = cpdf[id_col].to_numpy(dtype=np.int64)
+        q_ids = qpdf["__qid"].to_numpy(dtype=np.int64)
+        if len(ids) == 0 or len(q_ids) == 0:
+            q_ids = ids = np.empty(0, dtype=np.int64)
+            pm = np.empty((0, 0), dtype=np.int64)
+        else:
+            mat = _normalize(np.array(cpdf[vec_col].tolist(), np.float64))
+            qm = _normalize(np.array(qpdf["__qv"].tolist(), np.float64))
+            pm = np.floor((mat @ qm.T) * 1000.0).astype(np.int64)
+        return _local_topk(q_ids, ids, pm, k, exclude_self).to_pandas()
+
+    cands = (
+        c.groupBy("__blk")
+        .cogroup(q.groupBy("__blk"))
+        .applyInPandas(lambda _key, a, b: score_block(a, b), _CAND_COLS)
+    )
+    return _topk(cands, k).orderBy("query_id", "rank")
 
 
 def _signatures(mat: np.ndarray, planes: np.ndarray) -> np.ndarray:
@@ -188,6 +289,35 @@ def _signatures(mat: np.ndarray, planes: np.ndarray) -> np.ndarray:
     bits = (mat @ planes) > 0                              # (n, nbits)
     weights = (1 << np.arange(planes.shape[1], dtype=np.int64))
     return bits.astype(np.int64) @ weights
+
+
+def _with_sig(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    planes: np.ndarray,
+    keep_vec: bool,
+) -> DataFrame:
+    """(id, sig[, vector]) rows: the random-hyperplane sign signature of
+    each normalized vector, one mapInArrow pass."""
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            sig = _signatures(_normalize(_vec_matrix(batch.column(1))),
+                              planes)
+            cols = [pa.array(_ids(batch.column(0)), pa.int64()),
+                    pa.array(sig, pa.int64())]
+            if keep_vec:
+                cols.append(batch.column(1))
+            yield pa.RecordBatch.from_arrays(
+                cols, names=[id_col, "sig", vec_col][:len(cols)])
+
+    schema = f"{id_col} bigint, sig bigint"
+    if keep_vec:
+        schema += f", {vec_col} {_vec_type(df, vec_col)}"
+    return _vectors(df, id_col, vec_col).mapInArrow(fn, schema)
 
 
 def lsh_topk(
@@ -217,39 +347,21 @@ def lsh_topk(
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((dim, nbits))
 
-    def with_sig(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            mat = _normalize(_vec_matrix(batch.column(1)))
-            sig = _signatures(mat, planes)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.int64()), pa.array(sig, pa.int64()),
-                 batch.column(1)],
-                names=[id_col, "bucket", vec_col],
-            )
-
-    vec_t = next(
-        f.dataType.simpleString() for f in corpus.schema.fields
-        if f.name == vec_col
-    )
-    sig_schema = f"{id_col} bigint, bucket bigint, {vec_col} {vec_t}"
-    corpus_b = corpus.select(id_col, vec_col).mapInArrow(with_sig, sig_schema)
-    q_b = queries.select(id_col, vec_col).mapInArrow(with_sig, sig_schema)
+    corpus_b = _with_sig(corpus, id_col, vec_col, planes, keep_vec=True)
+    q_b = _with_sig(queries, id_col, vec_col, planes, keep_vec=True)
 
     # probe rows: own bucket + all 1-bit flips (multiprobe), JVM-side
     probes = q_b.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("__qv"),
         F.explode(F.expr(
-            f"array_union(array(bucket), transform(sequence(0, {nbits - 1}), "
-            f"b -> bucket ^ shiftleft(cast(1 as bigint), b)))"
-        )).alias("bucket"),
+            f"array_union(array(sig), transform(sequence(0, {nbits - 1}), "
+            f"b -> sig ^ shiftleft(cast(1 as bigint), b)))"
+        )).alias("sig"),
     )
     if broadcast_queries:
         probes = F.broadcast(probes)
-    cand = corpus_b.join(probes, "bucket").select(
+    cand = corpus_b.join(probes, "sig").select(
         "query_id", F.col(id_col).alias("neighbor_id"), vec_col, "__qv"
     )
     if exclude_self:
@@ -261,35 +373,39 @@ def lsh_topk(
     return _score_and_topk(cand, k)
 
 
-def _score_and_topk(cand: DataFrame, k: int) -> DataFrame:
-    """Shared exact re-rank + per-query top-k over candidate rows shaped
-    (query_id, neighbor_id, <corpus vec>, __qv) — the verification tail of
-    every candidate-generating ANN path (LSH, IVF)."""
+def _pair_permille(a: pa.Array, b: pa.Array) -> np.ndarray:
+    """floor(1000 * cosine) of the row-aligned vector pairs (a[i], b[i])."""
+    va = _normalize(_vec_matrix(a))
+    vb = _normalize(_vec_matrix(b))
+    return np.floor(np.einsum("ij,ij->i", va, vb) * 1000.0).astype(np.int64)
 
-    def rerank(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+
+def _score_pairs(pairs: DataFrame, score_col: str) -> DataFrame:
+    """(id, id, vec, vec) pair rows -> (id, id, ``score_col``) permille
+    rows: the exact pair-cosine pass of every verify step."""
+    names = pairs.columns[:2] + [score_col]
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            qids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            nids = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
-            mat = _normalize(_vec_matrix(batch.column(2)))
-            qm = _normalize(_vec_matrix(batch.column(3)))
-            scores = np.einsum("ij,ij->i", mat, qm)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(qids, pa.int64()), pa.array(nids, pa.int64()),
-                 pa.array(np.floor(scores * 1000.0).astype(np.int64),
+                [pa.array(_ids(batch.column(0)), pa.int64()),
+                 pa.array(_ids(batch.column(1)), pa.int64()),
+                 pa.array(_pair_permille(batch.column(2), batch.column(3)),
                           pa.int64())],
-                names=["query_id", "neighbor_id", "score_permille"],
+                names=names,
             )
 
-    scored = cand.mapInArrow(
-        rerank, "query_id bigint, neighbor_id bigint, score_permille bigint"
-    )
-    return (
-        scored.groupBy("query_id")
-        .applyInPandas(_topk_merge(k), _TOPK_SCHEMA)
-        .orderBy("query_id", "rank")
-    )
+    return pairs.mapInArrow(fn, ", ".join(f"{n} bigint" for n in names))
+
+
+def _score_and_topk(cand: DataFrame, k: int) -> DataFrame:
+    """Exact re-rank + per-query top-k over candidate rows shaped
+    (query_id, neighbor_id, <corpus vec>, __qv) — the verification tail of
+    every candidate-generating ANN path (LSH, IVF, refined PQ)."""
+    scored = _score_pairs(cand, "score_permille")
+    return _topk(scored, k).orderBy("query_id", "rank")
 
 
 def random_ivf_centroids(
@@ -303,20 +419,6 @@ def random_ivf_centroids(
     return _normalize(rng.standard_normal((n_cells, dim)))
 
 
-def _quantizer_key(id_col: str, seed: int, hashing: str) -> F.Column:
-    """Deterministic 64-bit sample/init key of (id, seed). ``md5`` keys
-    (top 60 md5 bits) are reproducible in any ANSI engine — the
-    oracle-checkable mode; ``xxhash64`` is the fast JVM default."""
-    if hashing == "xxhash64":
-        return F.xxhash64(F.col(id_col), F.lit(seed))
-    if hashing == "md5":
-        return F.expr(
-            f"cast(conv(substring(md5(concat(cast({id_col} as string), "
-            f"'#', '{seed}')), 1, 15), 16, 10) as bigint)"
-        )
-    raise ValueError(f"hashing must be 'xxhash64' or 'md5': {hashing!r}")
-
-
 def fit_ivf_centroids(
     corpus: DataFrame,
     id_col: str,
@@ -325,7 +427,6 @@ def fit_ivf_centroids(
     max_sample: int = 65_536,
     iters: int = 10,
     seed: int = 311,
-    sample_mod: int | None = None,
 ) -> np.ndarray:
     """Train the IVF coarse quantizer on a BOUNDED deterministic sample:
     the ``max_sample`` corpus rows with the smallest xxhash64(id, seed) —
@@ -336,26 +437,15 @@ def fit_ivf_centroids(
     ``pmod(hash, mod) == 0`` collect scaled with the corpus and OOMed the
     driver at target scale). Then spherical k-means on the driver —
     like any ML fit the model is small (n_cells × dim floats); assignment
-    and search stay fully distributed.
-
-    ``sample_mod`` (legacy knob) additionally pre-thins by
-    pmod(xxhash64(id), mod) == 0 before the cap. For a fully distributed
-    fit whose per-iteration driver traffic is O(n_cells × dim) — no row
-    collect at all — see ``fit_ivf_centroids_distributed``.
+    and search stay fully distributed. For a fully distributed fit whose
+    per-iteration driver traffic is O(n_cells × dim) — no row collect at
+    all — see ``fit_ivf_centroids_distributed``.
     """
-    key = _quantizer_key(id_col, seed, "xxhash64")
-    samp = corpus.select(F.col(id_col), F.col(vec_col))
-    if sample_mod and sample_mod > 1:
-        samp = samp.filter(
-            F.pmod(F.xxhash64(id_col), F.lit(sample_mod)) == 0
-        )
-    rows = samp.orderBy(key, F.col(id_col)).limit(max_sample).collect()
-    if len(rows) < n_cells and sample_mod and sample_mod > 1:
-        # thinning starved the sample; retake without it (still capped)
-        rows = (
-            corpus.select(F.col(id_col), F.col(vec_col))
-            .orderBy(key, F.col(id_col)).limit(max_sample).collect()
-        )
+    key = _sample_key(id_col, "xxhash64", seed)
+    rows = (
+        _vectors(corpus, id_col, vec_col)
+        .orderBy(key, F.col(id_col)).limit(max_sample).collect()
+    )
     mat = _normalize(np.array([r[1] for r in rows], dtype=np.float64))
     cents = mat[:n_cells].copy()
     for _ in range(iters):
@@ -366,6 +456,22 @@ def fit_ivf_centroids(
                 cents[c] = members.mean(axis=0)
         cents = _normalize(cents)
     return cents
+
+
+def _group_sums(
+    assign: np.ndarray, vals: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One Lloyd's assignment's sufficient statistics as flat (group, pos,
+    val) rows: pos 0 carries a group's member count, pos 1.. the
+    per-dimension sum of its members' ``vals`` rows."""
+    groups = np.unique(assign)
+    width = vals.shape[1] + 1
+    rows = [np.concatenate(([float(np.count_nonzero(assign == g))],
+                            vals[assign == g].sum(axis=0)))
+            for g in groups]
+    return (np.repeat(groups, width).astype(np.int64),
+            np.tile(np.arange(width, dtype=np.int64), len(groups)),
+            np.concatenate(rows))
 
 
 def _lloyd_partials(
@@ -388,7 +494,6 @@ def _lloyd_partials(
     oracle-checkable mode.
     """
     cents = np.asarray(cents, dtype=np.float64)
-    n_cells, dim = cents.shape
     scale = float(1 << grid_bits) if grid_bits else None
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -396,28 +501,18 @@ def _lloyd_partials(
             if batch.num_rows == 0:
                 continue
             mat = _normalize(_vec_matrix(batch.column(0)))
-            assign = np.argmax(mat @ cents.T, axis=1)
-            vals = np.floor(mat * scale) if scale else mat
-            cells, poss, out = [], [], []
-            for c in np.unique(assign):
-                members = vals[assign == c]
-                row = np.concatenate(
-                    ([float(len(members))], members.sum(axis=0))
-                )
-                cells.append(np.full(dim + 1, c, dtype=np.int64))
-                poss.append(np.arange(dim + 1, dtype=np.int64))
-                out.append(row)
+            cell, pos, val = _group_sums(
+                np.argmax(mat @ cents.T, axis=1),
+                np.floor(mat * scale) if scale else mat,
+            )
             yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(cells), pa.int64()),
-                    pa.array(np.concatenate(poss), pa.int64()),
-                    pa.array(np.concatenate(out), pa.float64()),
-                ],
+                [pa.array(cell, pa.int64()), pa.array(pos, pa.int64()),
+                 pa.array(val, pa.float64())],
                 names=["cell", "pos", "val"],
             )
 
     return (
-        corpus.select(vec_col)
+        corpus.select(vec_col).where(F.col(vec_col).isNotNull())
         .mapInArrow(fn, "cell bigint, pos bigint, val double")
         .groupBy("cell", "pos")
         .agg(F.sum("val").alias("val"))
@@ -450,9 +545,9 @@ def fit_ivf_centroids_distributed(
     floor(Σ floor(u_j·2^b) / count), centroid = normalize(g / 2^b);
     cells with no members keep their previous centroid.
     """
-    key = _quantizer_key(id_col, seed, hashing)
+    key = _sample_key(id_col, hashing, seed)
     init_rows = (
-        corpus.select(F.col(id_col), F.col(vec_col))
+        _vectors(corpus, id_col, vec_col)
         .orderBy(key, F.col(id_col))
         .limit(n_cells)
         .collect()
@@ -463,9 +558,7 @@ def fit_ivf_centroids_distributed(
     n_cells = len(cents)
     dim = cents.shape[1]
     for _ in range(iters):
-        stats = _lloyd_partials(
-            corpus.select(vec_col), vec_col, cents, grid_bits
-        ).collect()
+        stats = _lloyd_partials(corpus, vec_col, cents, grid_bits).collect()
         counts = np.zeros(n_cells)
         sums = np.zeros((n_cells, dim))
         for r in stats:
@@ -517,12 +610,11 @@ def ivf_topk(
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             mat = _normalize(_vec_matrix(batch.column(1)))
             cell = np.argmax(mat @ cents.T, axis=1).astype(np.int64)
             yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.int64()), pa.array(cell, pa.int64()),
-                 batch.column(1)],
+                [pa.array(_ids(batch.column(0)), pa.int64()),
+                 pa.array(cell, pa.int64()), batch.column(1)],
                 names=[id_col, "cell", vec_col],
             )
 
@@ -530,7 +622,7 @@ def ivf_topk(
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
+            ids = _ids(batch.column(0))
             mat = _normalize(_vec_matrix(batch.column(1)))
             dots = mat @ cents.T                      # (n, n_cells)
             # top-nprobe cells per query; stable order = ties to lower cell
@@ -544,15 +636,13 @@ def ivf_topk(
                 names=["query_id", "cell", "__qv"],
             )
 
-    vec_t = next(
-        f.dataType.simpleString() for f in corpus.schema.fields
-        if f.name == vec_col
+    corpus_c = _vectors(corpus, id_col, vec_col).mapInArrow(
+        corpus_cells,
+        f"{id_col} bigint, cell bigint, {vec_col} {_vec_type(corpus, vec_col)}",
     )
-    corpus_c = corpus.select(id_col, vec_col).mapInArrow(
-        corpus_cells, f"{id_col} bigint, cell bigint, {vec_col} {vec_t}"
-    )
-    probes = queries.select(id_col, vec_col).mapInArrow(
-        query_probes, f"query_id bigint, cell bigint, __qv {vec_t}"
+    probes = _vectors(queries, id_col, vec_col).mapInArrow(
+        query_probes,
+        f"query_id bigint, cell bigint, __qv {_vec_type(queries, vec_col)}",
     )
     if broadcast_queries:
         probes = F.broadcast(probes)
@@ -604,136 +694,30 @@ def embedding_neardup_pairs(
     ``pyspark.sql.Observation`` as ``observation`` to count dropped
     buckets/ids instead of losing them silently.
     """
+    from .dedup import hamming_blocked_pairs
+
     dim = _infer_dim(corpus, vec_col, dim)
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((dim, nbits))
 
-    def with_sig(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            mat = _normalize(_vec_matrix(batch.column(1)))
-            sig = _signatures(mat, planes)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ids, pa.int64()), pa.array(sig, pa.int64())],
-                names=[id_col, "sig"],
-            )
-
-    from .dedup import hamming_blocked_pairs
-
-    sigs = corpus.select(id_col, vec_col).mapInArrow(
-        with_sig, f"{id_col} bigint, sig bigint"
-    )
+    sigs = _with_sig(corpus, id_col, vec_col, planes, keep_vec=False)
     cand = hamming_blocked_pairs(
         sigs, id_col, "sig", max_hamming, max_bucket, sig_bits=nbits,
         observation=observation,
     )
 
-    vecs = corpus.select(F.col(id_col), F.col(vec_col))
+    vecs = _vectors(corpus, id_col, vec_col)
     a = vecs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
     b = vecs.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
     joined = (
         cand.select("id_a", "id_b").join(a, "id_a").join(b, "id_b")
         .select("id_a", "id_b", "__va", "__vb")
     )
-
-    def verify(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            ia = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            ib = batch.column(1).to_numpy(zero_copy_only=False).astype(np.int64)
-            va = _normalize(_vec_matrix(batch.column(2)))
-            vb = _normalize(_vec_matrix(batch.column(3)))
-            pm = np.floor(
-                np.einsum("ij,ij->i", va, vb) * 1000.0
-            ).astype(np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(ia, pa.int64()), pa.array(ib, pa.int64()),
-                 pa.array(pm, pa.int64())],
-                names=["id_a", "id_b", "cosine_permille"],
-            )
-
-    scored = joined.mapInArrow(
-        verify, "id_a bigint, id_b bigint, cosine_permille bigint"
-    )
+    scored = _score_pairs(joined, "cosine_permille")
     return scored.filter(F.col("cosine_permille") >= threshold_permille)
 
 
-def blocked_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 10,
-    n_blocks: int | None = None,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Distributed exact brute-force top-k for LARGE query sets.
-
-    ``brute_force_topk`` broadcasts the query matrix (the right plan while
-    queries are broadcast-sized: zero corpus shuffle). When the query set
-    approaches corpus scale that cliff matters, so this variant shuffles
-    instead: corpus rows hash to ``n_blocks`` blocks, query rows are
-    replicated to every block JVM-side (explode over block ids — the small
-    side moves, once per block), and each cogroup block runs one matmul and
-    keeps block-local top-k under the final ordering. The merge input is
-    output-bounded: n_blocks × n_queries × k candidate rows, never n × q.
-    Results are identical to brute_force_topk (same scoring, same
-    tie-break).
-    """
-    if n_blocks is None:
-        n_blocks = max(corpus.sparkSession.sparkContext.defaultParallelism, 1)
-    local_k = k + (1 if exclude_self else 0)
-
-    c = corpus.select(F.col(id_col), F.col(vec_col)).withColumn(
-        "__blk", F.pmod(F.xxhash64(id_col), F.lit(n_blocks)).cast("int")
-    )
-    q = queries.select(F.col(id_col), F.col(vec_col)).withColumn(
-        "__blk", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
-    )
-
-    def score_block(cpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(cpdf) == 0 or len(qpdf) == 0:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "score_permille": []}
-            ).astype({"query_id": np.int64, "neighbor_id": np.int64,
-                      "score_permille": np.int64})
-        ids = cpdf[id_col].to_numpy(dtype=np.int64)
-        mat = _normalize(np.array(cpdf[vec_col].tolist(), dtype=np.float64))
-        q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-        qm = _normalize(np.array(qpdf[vec_col].tolist(), dtype=np.float64))
-        pm = np.floor((mat @ qm.T) * 1000.0).astype(np.int64)
-        take = min(local_k, len(ids))
-        out_q, out_n, out_s = [], [], []
-        for qi in range(len(q_ids)):
-            order = np.lexsort((ids, -pm[:, qi]))[:take]
-            out_q.append(np.full(take, q_ids[qi], dtype=np.int64))
-            out_n.append(ids[order])
-            out_s.append(pm[order, qi])
-        return pd.DataFrame({
-            "query_id": np.concatenate(out_q),
-            "neighbor_id": np.concatenate(out_n),
-            "score_permille": np.concatenate(out_s),
-        })
-
-    cands = (
-        c.groupBy("__blk")
-        .cogroup(q.groupBy("__blk"))
-        .applyInPandas(lambda _key, a, b: score_block(a, b), _CAND_SCHEMA)
-    )
-    if exclude_self:
-        cands = cands.filter(F.col("query_id") != F.col("neighbor_id"))
-    return (
-        cands.groupBy("query_id")
-        .applyInPandas(_topk_merge(k), _TOPK_SCHEMA)
-        .orderBy("query_id", "rank")
-    )
-
-
 # -------------------------------------------------- product quantization
-
 
 
 def _seq_dots(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -745,6 +729,11 @@ def _seq_dots(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     for j in range(a.shape[1]):
         out += a[:, j, None] * b[None, :, j]
     return out
+
+
+def _coarse_cells(mat: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Nearest coarse cell of each normalized row (ties -> lower cell)."""
+    return np.argmax(_seq_dots(mat, cents), axis=1)
 
 
 def _adc_lut(q_mat: np.ndarray, cb: np.ndarray) -> np.ndarray:
@@ -760,6 +749,74 @@ def _adc_lut(q_mat: np.ndarray, cb: np.ndarray) -> np.ndarray:
     for j in range(d):
         lut += qs[:, :, None, j] * cb[None, :, :, j]
     return lut
+
+
+def _pq_codes(mat: np.ndarray, cb: np.ndarray) -> np.ndarray:
+    """PQ encode: (n, m*d) rows -> (n, m) codes, the L2-nearest codeword
+    of each subvector (ties -> lower code: argmin is first)."""
+    m, _, d = cb.shape
+    subs = mat.reshape(len(mat), m, d)
+    codes = np.empty((len(mat), m), dtype=np.int64)
+    for s in range(m):
+        dist = ((subs[:, s, :, None] - cb[s].T[None]) ** 2).sum(axis=1)
+        codes[:, s] = np.argmin(dist, axis=1)
+    return codes
+
+
+def _adc_candidates(
+    ids: np.ndarray,
+    codes: np.ndarray,
+    lut: np.ndarray,
+    bias: np.ndarray | None,
+    q_ids: np.ndarray,
+    take: int,
+    exclude_self: bool,
+) -> pa.RecordBatch:
+    """The ADC scorer: score[i, j] = bias[i, j] + sum_s lut[j, s,
+    codes[i, s]] of corpus rows ``ids`` against queries ``q_ids`` (``bias``
+    broadcasts to (rows, queries); residual ADC adds q.c_cell), then the
+    local cut."""
+    scores = np.zeros((len(ids), len(q_ids)))
+    if bias is not None:
+        scores += bias
+    for s in range(lut.shape[1]):
+        scores += lut[:, s, codes[:, s]].T
+    pm = np.floor(scores * 1000.0).astype(np.int64)
+    return _local_topk(q_ids, ids, pm, take, exclude_self)
+
+
+def _shortlist_k(k: int, refine: bool, refine_k: int | None) -> int:
+    return (refine_k or max(4 * k, 32)) if refine else k
+
+
+def _refine(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    shortlist: DataFrame,
+    q_ids: np.ndarray,
+    q_vecs: np.ndarray,
+    k: int,
+) -> DataFrame:
+    """Exact re-rank of an ADC shortlist: one more corpus scan, broadcast
+    hash joins with the shortlist and the query vectors (the corpus never
+    shuffles), then the shared exact-cosine tail."""
+    qdf = corpus.sparkSession.createDataFrame(
+        list(zip(q_ids.tolist(), q_vecs.tolist())),
+        T.StructType([
+            T.StructField("query_id", T.LongType(), False),
+            T.StructField("__qv", T.ArrayType(T.DoubleType()), False),
+        ]),
+    )
+    cand = (
+        _vectors(corpus, id_col, vec_col)
+        .withColumnRenamed(id_col, "neighbor_id")
+        .join(F.broadcast(shortlist.select("query_id", "neighbor_id")),
+              "neighbor_id")
+        .join(F.broadcast(qdf), "query_id")
+        .select("query_id", "neighbor_id", vec_col, "__qv")
+    )
+    return _score_and_topk(cand, k)
 
 
 def fit_pq_codebooks(
@@ -793,20 +850,16 @@ def fit_pq_codebooks(
     whole fit bit-replayable in SQL (the oracle mode; subspace means are
     sums of floor(u * 2^bits), exact and order-independent).
     """
-    key = _quantizer_key(id_col, seed, hashing)
-    init_rows = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .orderBy(key, F.col(id_col))
-        .limit(n_codes)
-        .collect()
-    )
+    key = _sample_key(id_col, hashing, seed)
+    vectors = _vectors(corpus, id_col, vec_col)
+    init_rows = vectors.orderBy(key, F.col(id_col)).limit(n_codes).collect()
     if not init_rows:
         raise ValueError("cannot fit PQ codebooks on an empty corpus")
     vecs = _normalize(np.array([r[1] for r in init_rows], dtype=np.float64))
     coarse = (np.asarray(centroids, dtype=np.float64)
               if centroids is not None else None)
     if coarse is not None:
-        vecs = vecs - coarse[np.argmax(_seq_dots(vecs, coarse), axis=1)]
+        vecs = vecs - coarse[_coarse_cells(vecs, coarse)]
     n_codes = len(vecs)
     dim = vecs.shape[1]
     if dim % m:
@@ -825,40 +878,25 @@ def fit_pq_codebooks(
             for batch in batches:
                 if batch.num_rows == 0:
                     continue
-                mat = _normalize(_vec_matrix(batch.column(0)))
+                mat = _normalize(_vec_matrix(batch.column(1)))
                 if coarse is not None:
-                    mat = mat - coarse[
-                        np.argmax(_seq_dots(mat, coarse), axis=1)]
+                    mat = mat - coarse[_coarse_cells(mat, coarse)]
+                codes = _pq_codes(mat, cb_cur)
                 subs = mat.reshape(len(mat), m, d)
                 vals = np.floor(subs * scale) if scale else subs
-                ss, cc, pp, vv = [], [], [], []
-                for s in range(m):
-                    # L2 assignment, ties -> lower code (argmin is first)
-                    dist = (
-                        (subs[:, s, :, None] - cb_cur[s].T[None]) ** 2
-                    ).sum(axis=1)
-                    assign = np.argmin(dist, axis=1)
-                    for c in np.unique(assign):
-                        members = vals[assign == c, s, :]
-                        row = np.concatenate(
-                            ([float(len(members))], members.sum(axis=0))
-                        )
-                        ss.append(np.full(d + 1, s, dtype=np.int64))
-                        cc.append(np.full(d + 1, c, dtype=np.int64))
-                        pp.append(np.arange(d + 1, dtype=np.int64))
-                        vv.append(row)
+                parts = [_group_sums(codes[:, s], vals[:, s, :])
+                         for s in range(m)]
+                code, pos, val = (np.concatenate(c) for c in zip(*parts))
+                sub = np.repeat(np.arange(m, dtype=np.int64),
+                                [len(p[0]) for p in parts])
                 yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(ss), pa.int64()),
-                        pa.array(np.concatenate(cc), pa.int64()),
-                        pa.array(np.concatenate(pp), pa.int64()),
-                        pa.array(np.concatenate(vv), pa.float64()),
-                    ],
+                    [pa.array(sub, pa.int64()), pa.array(code, pa.int64()),
+                     pa.array(pos, pa.int64()), pa.array(val, pa.float64())],
                     names=["s", "code", "pos", "val"],
                 )
 
         stats = (
-            corpus.select(vec_col)
+            vectors
             .mapInArrow(fn, "s bigint, code bigint, pos bigint, val double")
             .groupBy("s", "code", "pos")
             .agg(F.sum("val").alias("val"))
@@ -912,17 +950,12 @@ def pq_encode(
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             mat = _normalize(_vec_matrix(batch.column(1)))
             cell = None
             if coarse is not None:
-                cell = np.argmax(_seq_dots(mat, coarse), axis=1)
+                cell = _coarse_cells(mat, coarse)
                 mat = mat - coarse[cell]
-            subs = mat.reshape(len(mat), m, d)
-            codes = np.empty((len(mat), m), dtype=np.uint8)
-            for s in range(m):
-                dist = ((subs[:, s, :, None] - cb[s].T[None]) ** 2).sum(axis=1)
-                codes[:, s] = np.argmin(dist, axis=1)
+            codes = _pq_codes(mat, cb).astype(np.uint8)
             # build the BinaryArray from raw buffers (no per-row Python
             # bytes objects): uniform m-byte rows, offsets are arithmetic
             offsets = (np.arange(len(mat) + 1, dtype=np.int32) * m)
@@ -931,7 +964,7 @@ def pq_encode(
                 [None, pa.py_buffer(offsets.tobytes()),
                  pa.py_buffer(codes.tobytes(order="C"))],
             )
-            arrays = [pa.array(ids, pa.int64()), codes_arr]
+            arrays = [pa.array(_ids(batch.column(0)), pa.int64()), codes_arr]
             names = [id_col, "codes"]
             if cell is not None:
                 arrays.append(pa.array(cell.astype(np.int64), pa.int64()))
@@ -941,7 +974,7 @@ def pq_encode(
     out_schema = f"{id_col} bigint, codes binary"
     if coarse is not None:
         out_schema += ", cell bigint"
-    return corpus.select(id_col, vec_col).mapInArrow(fn, out_schema)
+    return _vectors(corpus, id_col, vec_col).mapInArrow(fn, out_schema)
 
 
 def pq_topk(
@@ -983,101 +1016,30 @@ def pq_topk(
     query leaves the scan, so the shuffle is O(n_queries * refine_k *
     partitions).
     """
+    q_ids, q_vecs = _collect_queries(
+        queries, id_col, vec_col, max_queries, "pq_topk")
     if codebooks is None:
         codebooks = fit_pq_codebooks(
             corpus, id_col, vec_col, m=m, n_codes=n_codes, iters=iters,
             seed=seed, grid_bits=grid_bits, hashing=hashing,
         )
     cb = np.asarray(codebooks, dtype=np.float64)
-    m, n_codes, d = cb.shape
-
-    q_rows = queries.select(id_col, vec_col).limit(max_queries + 1).collect()
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"pq_topk collects the query set to build LUTs; got more than "
-            f"max_queries={max_queries} rows — use blocked_topk for "
-            "corpus-scale query sets or raise the budget explicitly"
-        )
-    if not q_rows:
-        raise ValueError("empty query set")
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = _normalize(np.array([r[1] for r in q_rows], dtype=np.float64))
-    # LUT[q, s, c] = q_sub(s) . cb[s][c]
-    lut = _adc_lut(q_mat, cb)
-    nq = len(q_ids)
-    shortlist_k = k if not refine else (refine_k or max(4 * k, 32))
+    lut = _adc_lut(_normalize(q_vecs), cb)
+    take = _shortlist_k(k, refine, refine_k)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            mat = _normalize(_vec_matrix(batch.column(1)))
-            subs = mat.reshape(len(mat), m, d)
-            codes = np.empty((len(mat), m), dtype=np.int64)
-            for s in range(m):
-                dist = ((subs[:, s, :, None] - cb[s].T[None]) ** 2).sum(axis=1)
-                codes[:, s] = np.argmin(dist, axis=1)
-            # ADC: scores[b, q] = sum_s LUT[q, s, codes[b, s]]
-            scores = np.zeros((len(mat), nq))
-            for s in range(m):
-                scores += lut[:, s, codes[:, s]].T
-            pm = np.floor(scores * 1000.0).astype(np.int64)
-            out_q, out_n, out_s = [], [], []
-            for qi in range(nq):
-                col = pm[:, qi]
-                nids = ids
-                if exclude_self:
-                    keep = nids != q_ids[qi]
-                    col, nids = col[keep], nids[keep]
-                if not len(col):
-                    continue
-                take = min(shortlist_k, len(col))
-                # local cut under the FINAL ordering (score desc, id asc):
-                # an argpartition cut breaks score TIES arbitrarily and can
-                # drop the tied candidate the global merge would keep
-                order = np.lexsort((nids, -col))[:take]
-                out_q.append(np.full(len(order), q_ids[qi], dtype=np.int64))
-                out_n.append(nids[order])
-                out_s.append(col[order])
-            if not out_q:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(out_q), pa.int64()),
-                 pa.array(np.concatenate(out_n), pa.int64()),
-                 pa.array(np.concatenate(out_s), pa.int64())],
-                names=["query_id", "neighbor_id", "score_permille"],
-            )
+            codes = _pq_codes(_normalize(_vec_matrix(batch.column(1))), cb)
+            yield _adc_candidates(_ids(batch.column(0)), codes, lut, None,
+                                  q_ids, take, exclude_self)
 
-    scored = corpus.select(id_col, vec_col).mapInArrow(
-        fn, "query_id bigint, neighbor_id bigint, score_permille bigint"
-    )
-    adc_topk = (
-        scored.groupBy("query_id")
-        .applyInPandas(_topk_merge(shortlist_k), _TOPK_SCHEMA)
-    )
+    shortlist = _topk(
+        _vectors(corpus, id_col, vec_col).mapInArrow(fn, _CAND_COLS), take)
     if not refine:
-        return adc_topk.filter(F.col("rank") <= k).orderBy("query_id", "rank")
-
-    # exact re-rank of the broadcast shortlist: one more corpus scan, a
-    # broadcast hash join (the corpus never shuffles), then the shared
-    # exact-cosine tail
-    spark = corpus.sparkSession
-    qdf = spark.createDataFrame(
-        [(int(i), [float(x) for x in r[1]]) for i, r in zip(q_ids, q_rows)],
-        T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("__qv", T.ArrayType(T.DoubleType()), False),
-        ]),
-    )
-    cand = (
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))
-        .join(F.broadcast(adc_topk.select("query_id", "neighbor_id")),
-              "neighbor_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select("query_id", "neighbor_id", vec_col, "__qv")
-    )
-    return _score_and_topk(cand, k)
+        return shortlist.orderBy("query_id", "rank")
+    return _refine(corpus, id_col, vec_col, shortlist, q_ids, q_vecs, k)
 
 
 def ivf_pq_topk(
@@ -1117,9 +1079,11 @@ def ivf_pq_topk(
     data-adapted form. ``grid_bits`` + md5 hashing makes both fits
     SQL-replayable (the oracle mode).
     """
-    dim = _infer_dim(queries, vec_col, dim=None)
+    q_ids, q_vecs = _collect_queries(
+        queries, id_col, vec_col, max_queries, "ivf_pq_topk")
+    q_mat = _normalize(q_vecs)
     if centroids is None:
-        centroids = random_ivf_centroids(dim, n_cells, seed)
+        centroids = random_ivf_centroids(q_mat.shape[1], n_cells, seed)
     cents = np.asarray(centroids, dtype=np.float64)
     nprobe = min(nprobe, len(cents))
     if codebooks is None:
@@ -1129,18 +1093,6 @@ def ivf_pq_topk(
             centroids=(cents if residual else None),
         )
     cb = np.asarray(codebooks, dtype=np.float64)
-    m, n_codes, d = cb.shape
-
-    q_rows = queries.select(id_col, vec_col).limit(max_queries + 1).collect()
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"ivf_pq_topk collects the query set to build LUTs; got more "
-            f"than max_queries={max_queries} rows"
-        )
-    if not q_rows:
-        raise ValueError("empty query set")
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = _normalize(np.array([r[1] for r in q_rows], dtype=np.float64))
     lut = _adc_lut(q_mat, cb)
     # probe cells per query: top-nprobe by dot, ties -> lower cell; the
     # dots also serve as the residual-ADC bias, so they use the
@@ -1148,95 +1100,44 @@ def ivf_pq_topk(
     # SQL oracle)
     qdots = _seq_dots(q_mat, cents)
     probe_cells = np.argsort(-qdots, axis=1, kind="stable")[:, :nprobe]
-    # cell -> list of query indices probing it
-    cell_queries: dict[int, list[int]] = {}
-    for qi in range(len(q_ids)):
-        for c in probe_cells[qi]:
-            cell_queries.setdefault(int(c), []).append(qi)
-    shortlist_k = k if not refine else (refine_k or max(4 * k, 32))
+    # cell -> indices of the queries probing it
+    cell_queries = {
+        int(c): np.flatnonzero((probe_cells == c).any(axis=1))
+        for c in np.unique(probe_cells)
+    }
     probe_arr = np.fromiter(cell_queries.keys(), dtype=np.int64)
+    take = _shortlist_k(k, refine, refine_k)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
             mat = _normalize(_vec_matrix(batch.column(1)))
-            cell = np.argmax(_seq_dots(mat, cents), axis=1)
+            cell = _coarse_cells(mat, cents)
             # only members of probed cells can become candidates: skip
             # encoding the rest (the whole point of the inverted lists)
             sel = np.flatnonzero(np.isin(cell, probe_arr))
             if not len(sel):
                 continue
-            ids, cell = ids[sel], cell[sel]
-            enc = (mat[sel] - cents[cell]) if residual else mat[sel]
-            subs = enc.reshape(len(sel), m, d)
-            codes = np.empty((len(sel), m), dtype=np.int64)
-            for s in range(m):
-                dist = ((subs[:, s, :, None] - cb[s].T[None]) ** 2).sum(axis=1)
-                codes[:, s] = np.argmin(dist, axis=1)
-            out_q, out_n, out_s = [], [], []
+            ids, cell = _ids(batch.column(0))[sel], cell[sel]
+            codes = _pq_codes(
+                (mat[sel] - cents[cell]) if residual else mat[sel], cb)
             for c, qis in cell_queries.items():
                 members = np.flatnonzero(cell == c)
                 if not len(members):
                     continue
-                mcodes = codes[members]
-                mids = ids[members]
-                for qi in qis:
-                    # residual ADC: q.x ~ q.c_cell + q.r_hat — the bias is
-                    # constant per (query, cell)
-                    sc = np.full(len(members),
-                                 qdots[qi, c] if residual else 0.0)
-                    for s in range(m):
-                        sc += lut[qi, s, mcodes[:, s]]
-                    pm = np.floor(sc * 1000.0).astype(np.int64)
-                    nids = mids
-                    if exclude_self:
-                        keep = nids != q_ids[qi]
-                        pm, nids = pm[keep], nids[keep]
-                    if not len(pm):
-                        continue
-                    take = min(shortlist_k, len(pm))
-                    # final-ordering local cut (see pq_topk): score ties
-                    # must break by id BEFORE the cut, not after
-                    order = np.lexsort((nids, -pm))[:take]
-                    out_q.append(np.full(len(order), q_ids[qi], np.int64))
-                    out_n.append(nids[order])
-                    out_s.append(pm[order])
-            if not out_q:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(out_q), pa.int64()),
-                 pa.array(np.concatenate(out_n), pa.int64()),
-                 pa.array(np.concatenate(out_s), pa.int64())],
-                names=["query_id", "neighbor_id", "score_permille"],
-            )
+                # residual ADC: q.x ~ q.c_cell + q.r_hat — the bias is
+                # constant per (query, cell)
+                bias = qdots[qis, c][None, :] if residual else None
+                yield _adc_candidates(ids[members], codes[members],
+                                      lut[qis], bias, q_ids[qis], take,
+                                      exclude_self)
 
-    scored = corpus.select(id_col, vec_col).mapInArrow(
-        fn, "query_id bigint, neighbor_id bigint, score_permille bigint"
-    )
-    adc_topk = (
-        scored.groupBy("query_id")
-        .applyInPandas(_topk_merge(shortlist_k), _TOPK_SCHEMA)
-    )
+    shortlist = _topk(
+        _vectors(corpus, id_col, vec_col).mapInArrow(fn, _CAND_COLS), take)
     if not refine:
-        return adc_topk.filter(F.col("rank") <= k).orderBy("query_id", "rank")
-    spark = corpus.sparkSession
-    qdf = spark.createDataFrame(
-        [(int(i), [float(x) for x in r[1]]) for i, r in zip(q_ids, q_rows)],
-        T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("__qv", T.ArrayType(T.DoubleType()), False),
-        ]),
-    )
-    cand = (
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))
-        .join(F.broadcast(adc_topk.select("query_id", "neighbor_id")),
-              "neighbor_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select("query_id", "neighbor_id", vec_col, "__qv")
-    )
-    return _score_and_topk(cand, k)
+        return shortlist.orderBy("query_id", "rank")
+    return _refine(corpus, id_col, vec_col, shortlist, q_ids, q_vecs, k)
 
 
 def pq_topk_from_codes(
@@ -1270,38 +1171,24 @@ def pq_topk_from_codes(
     cb = np.asarray(codebooks, dtype=np.float64)
     m, n_codes, d = cb.shape
 
-    q_rows = (
-        queries.select(id_col, query_vec_col)
-        .limit(max_queries + 1).collect()
-    )
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"pq_topk_from_codes collects the query set; got more than "
-            f"max_queries={max_queries} rows"
-        )
-    if not q_rows:
-        raise ValueError("empty query set")
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = _normalize(np.array([r[1] for r in q_rows], dtype=np.float64))
+    q_ids, q_vecs = _collect_queries(
+        queries, id_col, query_vec_col, max_queries, "pq_topk_from_codes")
+    q_mat = _normalize(q_vecs)
     if q_mat.shape[1] != m * d:
         raise ValueError(
             f"query dim {q_mat.shape[1]} != m*d = {m * d} of the codebooks"
         )
     lut = _adc_lut(q_mat, cb)
-    nq = len(q_ids)
     coarse = (np.asarray(centroids, dtype=np.float64)
               if centroids is not None else None)
     qbias = _seq_dots(q_mat, coarse) if coarse is not None else None
     refine = corpus is not None
-    shortlist_k = k if not refine else (refine_k or max(4 * k, 32))
+    take = _shortlist_k(k, refine, refine_k)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            ids = batch.column(0).to_numpy(zero_copy_only=False).astype(np.int64)
-            cells = (batch.column(2).to_numpy(zero_copy_only=False)
-                     .astype(np.int64) if qbias is not None else None)
             carr = batch.column(1)
             if isinstance(carr, pa.ChunkedArray):
                 carr = carr.combine_chunks()
@@ -1315,60 +1202,16 @@ def pq_topk_from_codes(
                     f"codes column rows must be exactly m={m} bytes"
                 )
             data = np.frombuffer(carr.buffers()[2], dtype=np.uint8)
-            flat = data[offs[0]: offs[-1]]
-            codes = flat.reshape(len(ids), m).astype(np.int64)
-            scores = (qbias[:, cells].T.copy()
-                      if qbias is not None else np.zeros((len(ids), nq)))
-            for s in range(m):
-                scores += lut[:, s, codes[:, s]].T
-            pm = np.floor(scores * 1000.0).astype(np.int64)
-            out_q, out_n, out_s = [], [], []
-            for qi in range(nq):
-                col, nids = pm[:, qi], ids
-                if exclude_self:
-                    keep = nids != q_ids[qi]
-                    col, nids = col[keep], nids[keep]
-                if not len(col):
-                    continue
-                take = min(shortlist_k, len(col))
-                # final-ordering local cut (see pq_topk): ties break by id
-                order = np.lexsort((nids, -col))[:take]
-                out_q.append(np.full(len(order), q_ids[qi], np.int64))
-                out_n.append(nids[order])
-                out_s.append(col[order])
-            if not out_q:
-                continue
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(out_q), pa.int64()),
-                 pa.array(np.concatenate(out_n), pa.int64()),
-                 pa.array(np.concatenate(out_s), pa.int64())],
-                names=["query_id", "neighbor_id", "score_permille"],
-            )
+            codes = data[offs[0]: offs[-1]].reshape(len(carr), m)
+            bias = (qbias[:, _ids(batch.column(2))].T
+                    if qbias is not None else None)
+            yield _adc_candidates(_ids(batch.column(0)), codes.astype(np.int64),
+                                  lut, bias, q_ids, take, exclude_self)
 
-    proj_cols = [id_col, codes_col] + (
-        [cell_col] if coarse is not None else [])
-    scored = codes_df.select(*proj_cols).mapInArrow(
-        fn, "query_id bigint, neighbor_id bigint, score_permille bigint"
-    )
-    adc_topk = (
-        scored.groupBy("query_id")
-        .applyInPandas(_topk_merge(shortlist_k), _TOPK_SCHEMA)
-    )
+    proj = codes_df.select(
+        id_col, codes_col, *([cell_col] if coarse is not None else [])
+    ).where(F.col(codes_col).isNotNull())
+    shortlist = _topk(proj.mapInArrow(fn, _CAND_COLS), take)
     if not refine:
-        return adc_topk.filter(F.col("rank") <= k).orderBy("query_id", "rank")
-    spark = codes_df.sparkSession
-    qdf = spark.createDataFrame(
-        [(int(i), [float(x) for x in r[1]]) for i, r in zip(q_ids, q_rows)],
-        T.StructType([
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("__qv", T.ArrayType(T.DoubleType()), False),
-        ]),
-    )
-    cand = (
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))
-        .join(F.broadcast(adc_topk.select("query_id", "neighbor_id")),
-              "neighbor_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select("query_id", "neighbor_id", vec_col, "__qv")
-    )
-    return _score_and_topk(cand, k)
+        return shortlist.orderBy("query_id", "rank")
+    return _refine(corpus, id_col, vec_col, shortlist, q_ids, q_vecs, k)

@@ -1,6 +1,11 @@
 """Local replica of the driver's correctness gate: run every queries() entry
 at sf0.01 next to its oracle_sql() in DuckDB and compare row count, column
-names, and order-insensitive values."""
+names, and order-insensitive values.
+
+usage: python scripts/check_entry.py [SF_DIR] [-k SUBSTR]
+
+``-k SUBSTR`` runs only the entries whose name contains SUBSTR (e.g.
+``-k embedding`` for the ANN and embedding near-dup rows)."""
 
 from __future__ import annotations
 
@@ -13,6 +18,11 @@ import duckdb  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
 from hyperloglog_spark.engine.session import get_spark  # noqa: E402
 
+SUBSTR = ""
+if "-k" in sys.argv:
+    _i = sys.argv.index("-k")
+    SUBSTR = sys.argv[_i + 1]
+    del sys.argv[_i:_i + 2]
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
@@ -46,6 +56,8 @@ def main() -> int:
     failures = 0
     oracles = entrymod.oracle_sql()
     for name, fn in entrymod.queries().items():
+        if SUBSTR not in name:
+            continue
         df = fn(spark, SF_DIR)
         spark_rows = df.collect()
         cols = df.columns

@@ -541,8 +541,7 @@ def test_ivf_topk_recall_and_fitted_quantizer(spark):
     rnd = {(r["query_id"], r["rank"]): r["neighbor_id"] for r in ivf_r}
     rnd_recall = sum(bf[kk] == rnd.get(kk) for kk in bf) / len(bf)
 
-    cents = fit_ivf_centroids(df, "vec_id", "embedding", n_cells=8,
-                              sample_mod=2)
+    cents = fit_ivf_centroids(df, "vec_id", "embedding", n_cells=8)
     fit = {(r["query_id"], r["rank"]): r["neighbor_id"]
            for r in ivf_topk(df, q, "vec_id", "embedding", k=1,
                              centroids=cents, nprobe=3).collect()}
@@ -1425,6 +1424,117 @@ def test_pq_stored_residual_index_matches_full_probe_ivfadc(spark):
                        codebooks=cb, nprobe=8, refine=False,
                        residual=True).collect()
     assert sorted(map(tuple, stored)) == sorted(map(tuple, live))
+
+
+# ----------------------------------------------- the shared ANN top-k tail
+
+
+def _ann_ops():
+    """Every ANN operator as ``(corpus, queries, k, exclude_self) -> df``;
+    lsh/ivf probe enough buckets to find every neighbor on the tiny test
+    corpora, pq re-ranks a shortlist that covers the whole corpus."""
+    from hyperloglog_spark.pipeline import (
+        blocked_topk, fit_pq_codebooks, ivf_pq_topk, ivf_topk, pq_encode,
+        pq_topk, pq_topk_from_codes,
+    )
+
+    def from_codes(c, q, k, ex):
+        cb = fit_pq_codebooks(c, "vec_id", "embedding", m=2, n_codes=4)
+        return pq_topk_from_codes(pq_encode(c, "vec_id", "embedding", cb),
+                                  q, "vec_id", cb, k=k, corpus=c,
+                                  vec_col="embedding", refine_k=64,
+                                  exclude_self=ex)
+
+    args = ("vec_id", "embedding")
+    return {
+        "brute_force_topk": lambda c, q, k, ex: brute_force_topk(
+            c, q, *args, k=k, exclude_self=ex),
+        "blocked_topk": lambda c, q, k, ex: blocked_topk(
+            c, q, *args, k=k, n_blocks=3, exclude_self=ex),
+        "lsh_topk": lambda c, q, k, ex: lsh_topk(
+            c, q, *args, k=k, nbits=1, exclude_self=ex),
+        "ivf_topk": lambda c, q, k, ex: ivf_topk(
+            c, q, *args, k=k, n_cells=4, nprobe=4, exclude_self=ex),
+        "pq_topk": lambda c, q, k, ex: pq_topk(
+            c, q, *args, k=k, m=2, n_codes=4, refine_k=64, exclude_self=ex),
+        "ivf_pq_topk": lambda c, q, k, ex: ivf_pq_topk(
+            c, q, *args, k=k, n_cells=4, nprobe=4, m=2, n_codes=4,
+            refine_k=64, exclude_self=ex),
+        "pq_topk_from_codes": from_codes,
+    }
+
+
+_VEC_SCHEMA = "vec_id bigint, embedding array<double>"
+
+
+@pytest.mark.parametrize("op", list(_ann_ops()) + ["embedding_neardup_pairs"])
+def test_ann_null_vectors_take_no_part(spark, op):
+    """A NULL vector, on the corpus or on the query side, is dropped like
+    a NULL under COUNT(DISTINCT): every operator answers exactly as over
+    the corpus without that row (the NULL row comes first, where it used
+    to set the batch's vector width)."""
+    from hyperloglog_spark.pipeline import embedding_neardup_pairs
+
+    rng = np.random.default_rng(23)
+    base = rng.standard_normal((30, 8))
+    vecs = np.vstack([base, base[:10] + rng.standard_normal((10, 8)) * 0.01])
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    clean = spark.createDataFrame(rows, _VEC_SCHEMA)
+    dirty = spark.createDataFrame([(1000, None)] + rows, _VEC_SCHEMA)
+
+    if op == "embedding_neardup_pairs":
+        def run(c):
+            return embedding_neardup_pairs(c, "vec_id", "embedding",
+                                           nbits=16, max_hamming=3)
+    else:
+        def run(c):
+            q = c.filter((F.col("vec_id") < 10) | (F.col("vec_id") == 1000))
+            return _ann_ops()[op](c, q, 3, True)
+    want = sorted(map(tuple, run(clean).collect()))
+    assert want                                          # non-vacuous
+    assert sorted(map(tuple, run(dirty).collect())) == want
+
+
+@pytest.mark.parametrize("exclude_self", [True, False])
+@pytest.mark.parametrize("op", list(_ann_ops()))
+def test_ann_topk_ties_rank_lower_ids_first(spark, op, exclude_self):
+    """Five neighbors tie on permille and k=3 cuts inside the tie group:
+    every operator ranks the lowest ids first, self excluded or first.
+    The query set derives from the corpus DataFrame (a self-join shape)."""
+    tied = [9, 4, 7, 2, 5]
+    rows = [(0, [1.0, 0.0, 0.0, 0.0])]
+    rows += [(i, [1.0, 0.2, 0.0, 0.0]) for i in tied]
+    rows += [(i, v) for i, v in zip(
+        (1, 3, 6, 8), ([0.0, 0.0, 1.0, 0.0], [0.0, 0.0, 0.0, 1.0],
+                       [0.0, 1.0, 1.0, 0.0], [-1.0, 0.0, 0.3, 0.0]))]
+    corpus = spark.createDataFrame(rows, _VEC_SCHEMA).repartition(4)
+    got = _ann_ops()[op](corpus, corpus.filter(F.col("vec_id") == 0), 3,
+                         exclude_self).collect()
+    want = [2, 4, 5] if exclude_self else [0, 2, 4]
+    assert [(r["rank"], r["neighbor_id"]) for r in got] == \
+        list(enumerate(want, 1))
+    assert {r["score_permille"] for r in got if r["neighbor_id"] != 0} \
+        == {980}
+
+
+@pytest.mark.parametrize("op", ["brute_force_topk", "blocked_topk",
+                                "ivf_topk", "pq_topk"])
+def test_ann_exclude_self_before_the_cut(spark, op):
+    """k=1 over 4 partitions, every query's best match is itself: each
+    gets its best NON-self neighbor (the exact numpy answer)."""
+    rng = np.random.default_rng(29)
+    vecs = rng.standard_normal((40, 8))
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        _VEC_SCHEMA).repartition(4)
+    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+    pm = np.floor(unit @ unit.T * 1000.0)
+    np.fill_diagonal(pm, -np.inf)
+    want = [(q, 1, int(np.lexsort((np.arange(40), -pm[q]))[0]))
+            for q in range(40)]
+    got = _ann_ops()[op](corpus, corpus, 1, True).collect()
+    assert [(r["query_id"], r["rank"], r["neighbor_id"]) for r in got] \
+        == want
 
 
 # ------------------------------------------- numpy image codecs (round 4)

@@ -282,6 +282,34 @@ def test_lsh_topk_broadcast_join_no_sortmerge(spark, sf01_dir):
     assert_max_exchanges(q, 3)
 
 
+def _ann_tail_cases():
+    from hyperloglog_spark.pipeline import (
+        brute_force_topk, ivf_topk, lsh_topk, pq_topk,
+    )
+
+    args = ("vec_id", "embedding")
+    yield "brute_force_topk", lambda e, q: brute_force_topk(e, q, *args, k=5)
+    yield "lsh_topk", lambda e, q: lsh_topk(e, q, *args, k=5)
+    yield "ivf_topk", lambda e, q: ivf_topk(e, q, *args, k=5)
+    yield "pq_topk_refined", lambda e, q: pq_topk(
+        e, q, *args, k=5, m=4, n_codes=8, refine=True)
+
+
+@pytest.mark.parametrize(
+    "build", [pytest.param(b, id=label) for label, b in _ann_tail_cases()]
+)
+def test_ann_topk_merge_is_sql(spark, sf01_dir, build):
+    """The per-query top-k merge of every ANN operator is a ``row_number``
+    cut Spark plans as a ``WindowGroupLimit``: no grouped pandas stage."""
+    spark.catalog.clearCache()
+    emb = spark.read.parquet(f"{sf01_dir}/embeddings.parquet")
+    q = build(emb, emb.filter(F.col("vec_id") < 10))
+    q.collect()
+    names = [n for n, _ in python_operators(q)]
+    assert names and "FlatMapGroupsInPandas" not in names, names
+    assert "WindowGroupLimit" in plan_string(q)
+
+
 def test_embedding_neardup_bounded_shuffles(spark, sf01_dir):
     from hyperloglog_spark.pipeline import embedding_neardup_pairs
 
