@@ -1344,8 +1344,9 @@ def q_ordering_invariant_transcripts(spark, sf_dir):
     exact operations that would expose an ordering/key bug), then
     ``transcripts.ordering_invariant_violations`` full-outer-joins it
     back against the untransformed view on the composite key. Output:
-    (n_turns, n_violations) with n_violations REQUIRED to be 0 — the
-    oracle recomputes n_turns exactly and asserts the zero."""
+    (n_turns, n_violations), the two counts cross-joined in one lazy
+    DataFrame, with n_violations REQUIRED to be 0 — the oracle
+    recomputes n_turns exactly and asserts the zero."""
     from hyperloglog_spark import transcripts as tq
 
     src = _transcripts_view(spark, sf_dir)
@@ -1354,9 +1355,8 @@ def q_ordering_invariant_transcripts(spark, sf_dir):
         .sortWithinPartitions("conv_id", "turn_idx")
     )
     violations = tq.ordering_invariant_violations(roundtrip, src)
-    return spark.createDataFrame(
-        [(src.count(), violations.count())],
-        "n_turns bigint, n_violations bigint",
+    return src.agg(F.count(F.lit(1)).alias("n_turns")).crossJoin(
+        violations.agg(F.count(F.lit(1)).alias("n_violations"))
     )
 
 

@@ -29,6 +29,16 @@ def codegen_count(df: DataFrame, pattern: str) -> int:
     return len(re.findall(pattern, plan_string(df, "codegen")))
 
 
+def final_plan(df: DataFrame) -> str:
+    """Tree string of ``df``'s executed plan; after an action, the final
+    adaptive plan alone (``plan_string`` prints the initial plan too). An
+    operator inside a whole-stage-codegen subtree reads ``*(n) Name``."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan.treeString()
+
+
 #: node names of the operators that run Python workers
 PYTHON_OPERATORS = (
     "MapInArrow", "FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython",

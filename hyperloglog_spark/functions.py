@@ -431,27 +431,36 @@ def _jvm_multi_register_rows(
     kernel, then ``groupBy(tag, idx).max(sigma)`` map-side-combines each
     partition before the shuffle. No data row and no Arrow batch leaves
     the JVM — the multi-column analogue of ``_jvm_register_rows``, with
-    the registers of the single-column path by construction."""
+    the registers of the single-column path by construction.
+
+    ``posexplode(array(__v0, ...))`` emits ``(__col, __packed)``: the
+    position is the column tag. A plain ``Filter`` then drops the NULL
+    registers, so scan, hash, Generate, Filter and the partial aggregate
+    share one whole-stage-codegen stage (a ``filter`` lambda would run
+    interpreted, once per row). A row NULL in every column keeps its
+    ``__col = 0`` entry with a NULL tag, so its group survives with
+    n_c = 0 for every column."""
     # hash in a plain (codegen'd) Project first, not inside the Generate
+    regs = [F.col(f"__v{i}") for i in range(len(cols))]
     packed = df.select(
         *[F.col(g) for g in group_cols],
         *[_hll_packed_register_expr(c, p).alias(f"__v{i}")
           for i, c in enumerate(cols)],
     )
-    arr = F.array(*[
-        F.struct(F.lit(i).alias("__col"), F.col(f"__v{i}").alias("__packed"))
-        for i in range(len(cols))
-    ])
-    # explode_outer: a row with every column NULL still emits one entry
-    # (NULL tag) so its group survives with n_c = 0 for every column
     exploded = packed.select(
-        *group_cols,
-        F.explode_outer(
-            F.filter(arr, lambda e: e["__packed"].isNotNull())
-        ).alias("__e"),
+        *group_cols, *regs,
+        F.posexplode(F.array(*regs)).alias("__col", "__packed"),
+    ).filter(
+        F.col("__packed").isNotNull()
+        | (F.coalesce(*regs).isNull() & (F.col("__col") == 0))
     )
     return _max_registers(
-        exploded.select(*group_cols, "__e.__col", "__e.__packed"),
+        exploded.select(
+            *group_cols,
+            F.when(F.col("__packed").isNotNull(), F.col("__col"))
+            .alias("__col"),
+            "__packed",
+        ),
         [*group_cols, "__col"],
     )
 
@@ -470,14 +479,21 @@ def approx_distinct_multi(
     drops that column's update only, and a group NULL in every column is
     kept with n_c = 0.
 
-    Each row explodes into one register entry per non-null column and
-    Catalyst's map-side combine reduces them before the shuffle, so no data
-    row crosses the Arrow boundary; estimates are bit-identical to running
-    ``approx_distinct`` per column. ``engine`` selects nothing (see
-    ``approx_distinct``)."""
+    Each row ``posexplode``s into one register entry per column, tagged by
+    its position; a plain ``Filter`` drops the NULL ones (a row NULL in
+    every column keeps one NULL-tag entry, so its group survives), all in
+    the scan stage's whole-stage codegen. Catalyst's map-side combine
+    reduces the entries before the shuffle, so no data row crosses the
+    Arrow boundary; estimates are bit-identical to running
+    ``approx_distinct`` per column. A column may appear once in ``cols``.
+    ``engine`` selects nothing (see ``approx_distinct``)."""
     hll._validate_p(p)
     if not cols:
         raise ValueError("need at least one column")
+    repeated = sorted({c for c in cols if cols.count(c) > 1})
+    if repeated:
+        raise ValueError(f"repeated column(s) {repeated}: each n_<col> "
+                         "is one output field")
     _check_engine(engine)
     group_by = _as_list(group_by)
     return _jvm_finalize(

@@ -48,7 +48,9 @@ def main() -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
         )
-    spark = get_spark(app_name="check_entry")
+    # no console progress bar: its carriage returns overwrite the OK/FAIL rows
+    spark = get_spark(app_name="check_entry",
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
 
     e = entrymod.entry(spark)
     print(f"entry(): {e.count()} rows, schema {e.schema.simpleString()}")

@@ -9,9 +9,11 @@ files, as the benchmark runs them), then for each seed runs
 ``python3 perfbench/run.py --workload W --seed S --seconds N`` once from
 that copy and once from this working tree, alternating which side runs
 first. Each pair prints one JSON line; the last line is the summary: per
-end-to-end metric of ``BENCHMARK.json``, each side's median and quartiles
-and the pairs the change won (ties count for neither side). Reads the
-result line perfbench prints; changes nothing under ``perfbench/``.
+end-to-end metric of ``BENCHMARK.json``, and per timed operation (the
+per-label medians perfbench prints, e.g. ``approx_distinct_multi.jvm``),
+each side's median and quartiles and the pairs the change won (ties count
+for neither side). Reads the lines perfbench prints; changes nothing under
+``perfbench/``.
 """
 
 from __future__ import annotations
@@ -19,11 +21,14 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# perfbench's per-operation line: "[perfbench]   <label>: n=<n> median <s> s"
+OP_LINE = re.compile(r"^\[perfbench\]\s+(\S+): n=\d+ median ([\d.]+) s$")
 
 
 def export(rev: str, path: str) -> str:
@@ -37,12 +42,17 @@ def export(rev: str, path: str) -> str:
 
 
 def run(root: str, workload: str, seed: int, seconds: float) -> dict:
+    """One perfbench run: its result line, plus ``"ops"``, the median
+    seconds of each timed operation."""
     out = subprocess.run(
         ["python3", "perfbench/run.py", "--workload", workload,
          "--seed", str(seed), "--seconds", str(seconds)],
         cwd=root, capture_output=True, text=True, timeout=1800, check=True,
     )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+    lines = out.stdout.strip().splitlines()
+    res = json.loads(lines[-1])
+    res["ops"] = {m[1]: float(m[2]) for m in map(OP_LINE.match, lines) if m}
+    return res
 
 
 def quartiles(xs: list[float]) -> list[float]:
@@ -50,21 +60,33 @@ def quartiles(xs: list[float]) -> list[float]:
     return [round(q1, 4), round(q2, 4), round(q3, 4)]
 
 
+def compare(par: list[float], chg: list[float], sign: int) -> dict:
+    q_par = quartiles(par)
+    return {
+        "parent_q1_med_q3": q_par,
+        "change_q1_med_q3": quartiles(chg),
+        "parent_iqr": round(q_par[2] - q_par[0], 4),
+        "change_wins": sum(sign * (c - p) > 0 for p, c in zip(par, chg)),
+        "pairs": len(par),
+    }
+
+
 def summary(pairs: list[dict], metrics: list[dict]) -> dict:
     out = {}
     for m in metrics:
         name, sign = m["name"], 1 if m["better"] == "higher" else -1
-        par = [p["parent"][name] for p in pairs]
-        chg = [p["change"][name] for p in pairs]
-        q_par = quartiles(par)
-        out[name] = {
-            "parent_q1_med_q3": q_par,
-            "change_q1_med_q3": quartiles(chg),
-            "parent_iqr": round(q_par[2] - q_par[0], 4),
-            "change_wins": sum(sign * (c - p) > 0 for p, c in zip(par, chg)),
-            "pairs": len(pairs),
-        }
+        out[name] = compare([p["parent"][name] for p in pairs],
+                            [p["change"][name] for p in pairs], sign)
     return out
+
+
+def op_summary(pairs: list[dict]) -> dict:
+    """Per timed operation both sides ran in every pair (lower is better)."""
+    labels = set.intersection(*(set(p[s]["ops"]) for p in pairs
+                                for s in ("parent", "change")))
+    return {label: compare([p["parent"]["ops"][label] for p in pairs],
+                           [p["change"]["ops"][label] for p in pairs], -1)
+            for label in sorted(labels)}
 
 
 def main() -> int:
@@ -91,13 +113,15 @@ def main() -> int:
             res = run(sides[side], args.workload, seed, args.seconds)
             pair[side] = {k: v["value"] for k, v in res["metrics"].items()}
             pair[side]["correct"] = res["correct"]
+            pair[side]["ops"] = res["ops"]
         pairs.append(pair)
         print(json.dumps(pair), flush=True)
     print(json.dumps({"workload": args.workload, "parent": args.parent,
                       "seeds": args.seeds, "seconds": args.seconds,
                       "all_correct": all(p[s]["correct"] for p in pairs
                                          for s in ("parent", "change")),
-                      "metrics": summary(pairs, bench["end_to_end"])}))
+                      "metrics": summary(pairs, bench["end_to_end"]),
+                      "ops": op_summary(pairs)}))
     return 0
 
 

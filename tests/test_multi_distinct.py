@@ -186,6 +186,14 @@ class TestMultiDistinctJvmEngine:
         with pytest.raises(ValueError, match="at least one column"):
             approx_distinct_multi(events, [], engine=engine)
 
+    @pytest.mark.parametrize("engine", ["arrow", "jvm"])
+    def test_repeated_column_rejected_before_dispatch(self, events, engine):
+        # caught on the driver: two n_user_id fields fail in the executor
+        with pytest.raises(ValueError, match=r"repeated column.*'user_id'"):
+            approx_distinct_multi(
+                events, ["user_id", "event_type", "user_id"], engine=engine
+            ).collect()
+
     def test_unknown_engine_rejected(self, events):
         with pytest.raises(ValueError, match="engine must be"):
             approx_distinct_multi(events, ["user_id"], engine="jvmm")

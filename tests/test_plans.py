@@ -10,12 +10,18 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from hyperloglog_spark import approx_distinct, approx_quantiles, cms_topk
+from hyperloglog_spark import (
+    approx_distinct,
+    approx_distinct_multi,
+    approx_quantiles,
+    cms_topk,
+)
 from hyperloglog_spark.engine.plans import (
     assert_max_exchanges,
     assert_pruned_scan,
     codegen_count,
     exchange_inputs,
+    final_plan,
     n_exchanges,
     plan_string,
     pushed_filters,
@@ -56,7 +62,7 @@ def test_hll_grouped_single_shuffle(events):
 
 
 def _count_distinct_cases():
-    from hyperloglog_spark import approx_distinct_multi, hll_sketch_agg
+    from hyperloglog_spark import hll_sketch_agg
 
     for label, group_by in (("global", []), ("grouped", ["event_type"])):
         yield f"approx_distinct.{label}", lambda ev, g=group_by: \
@@ -84,7 +90,7 @@ def test_count_distinct_is_one_python_stage_over_registers(events, build):
 
 
 def _hll_cases():
-    from hyperloglog_spark import approx_distinct_multi, hll_sketch_agg
+    from hyperloglog_spark import hll_sketch_agg
 
     # (label, query builder, number of hashed columns); user_id is a long
     # and event_type a string, each one XXH64 call in generated code (a
@@ -129,6 +135,27 @@ def test_hll_kernel_hashes_each_column_once(spark, sf01_dir, build, n_hashed):
     q = build(spark.read.parquet(f"{sf01_dir}/events.parquet"))
     q.collect()                     # the final AQE plan holds the codegen
     assert codegen_count(q, r"XXH64\.hash") == n_hashed
+
+
+@pytest.mark.parametrize("group_by", [[], ["event_type"]],
+                         ids=["global", "grouped"])
+def test_multi_distinct_registers_stay_in_codegen(spark, sf01_dir, group_by):
+    """``approx_distinct_multi`` tags each column's register by its
+    ``posexplode`` position and drops NULL registers with a plain Filter:
+    a ``filter`` lambda is a ``CodegenFallback``, interpreted once per
+    row. One scan, XXH64 once per column, and the Generate inside the
+    scan stage's whole-stage-codegen subtree."""
+    spark.catalog.clearCache()
+    ev = spark.read.parquet(f"{sf01_dir}/events.parquet")
+    q = approx_distinct_multi(ev, ["user_id", "event_id"], group_by=group_by)
+    assert n_exchanges(q) == 2
+    assert exchange_inputs(q) == ["HashAggregate"] * 2
+    q.collect()                     # the final AQE plan holds the codegen
+    plan = final_plan(q)
+    assert plan.count("FileScan") == 1
+    assert "lambdafunction" not in plan.lower()
+    assert re.search(r"\*\(\d+\) Generate posexplode", plan), plan
+    assert codegen_count(q, r"XXH64\.hash") == 2
 
 
 def test_hll_filter_pushdown_reaches_scan(events):
