@@ -69,8 +69,8 @@ def _nodes(df: DataFrame):
 def python_operators(df: DataFrame) -> list[tuple[str, str]]:
     """The Python operators of ``df``'s executed plan, top-down, each as
     ``(node name, its input plan as a tree string)``: how many Python
-    stages a query runs, and over which rows (e.g. a ``__idx`` aggregate
-    in the input means only register rows reach Python)."""
+    stages a query runs, and over which rows (e.g. a ``collect_set``
+    aggregate in the input means only register sets reach Python)."""
     return [
         (node.nodeName(), "\n".join(k.treeString() for k in kids))
         for node, kids in _nodes(df)

@@ -10,12 +10,15 @@ Usage:
 
 Every ``hashing="spark"`` count-distinct (``approx_distinct``,
 ``approx_distinct_multi``, ``hll_sketch_agg``) takes one path at any group
-count: Catalyst reduces the HLL registers (``groupBy(keys, idx).max(σ)``,
-map-side combined, so never more register rows than data rows leave a
-partition), then one sorted ``mapInArrow`` pass (``_jvm_finalize``)
-estimates or serializes each group from its register rows. ``HllAggregator``
-is the BinaryType mergeable aggregator behind ``hll_merged_sketch``,
-checkpointed builds, streaming and ``hashing="parity"``.
+count, ``_register_sets``: a codegen'd Project packs each row's HLL
+register (``idx << 7 | σ``), ``groupBy(keys).agg(collect_set(...),
+count(1))`` gathers each group's distinct registers in one shuffle (the
+partial aggregate dedups them per partition, so never more entries than
+data rows leave a partition), and one ``mapInArrow`` in the same stage
+estimates or serializes every group of a batch in one numpy pass.
+``HllAggregator`` is the BinaryType mergeable aggregator behind
+``hll_merged_sketch``, checkpointed builds, streaming and
+``hashing="parity"``.
 
 The scalar UDFs over stored sketch cells (``hll_estimate_udf``,
 ``hll_merge_pair_udf``, ``hll_fold_udf``, ``hll_jaccard_udf``) are each one
@@ -25,10 +28,13 @@ NULL side of a merge is the empty sketch.
 
 from __future__ import annotations
 
-from typing import Any
+from functools import reduce
+from operator import and_
+from typing import Any, Iterator
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -36,8 +42,8 @@ from pyspark.sql import types as T
 from .engine.aggregate import (
     SKETCH_COL,
     SketchAggregator,
+    _group_field,
     collect_merged,
-    reduce_sorted_groups,
     sketch_agg,
 )
 from .engine.cells import UNION, cell_udf
@@ -93,8 +99,7 @@ class HllAggregator(SketchAggregator):
     def prepare_columns(self, df: DataFrame, cols: list[str]):
         if self.hashing == "spark":
             # packed registers, not 64-bit hashes: half the Arrow IPC bytes
-            h = F.xxhash64(*[F.col(c) for c in cols])
-            return [_hll_register_expr(h, self.p)]
+            return [_composite_register(cols, self.p)]
         if len(cols) != 1:
             raise ValueError("parity hashing supports a single column")
         return [F.col(cols[0])]
@@ -147,7 +152,8 @@ def _hll_register_expr(h: Column, p: int) -> Column:
     The smear doubles the tree six times and is cheap only while Catalyst's
     subexpression elimination shares the subtrees; CSE does not look inside
     a conditional branch. So never wrap this in ``when``/``CASE`` or build
-    it inside a Generate: mask NULLs as ``when(c IS NOT NULL, 0) | kernel``
+    it inside a Generate or an aggregate's input: compute it in a plain
+    Project and mask NULLs as ``when(c IS NOT NULL, 0) | kernel``
     (``_hll_packed_register_expr``); ``|`` propagates the NULL."""
     x = F.shiftleft(h, p)
     for s in (1, 2, 4, 8, 16, 32):
@@ -157,77 +163,97 @@ def _hll_register_expr(h: Column, p: int) -> Column:
     return F.shiftleft(idx, 7).bitwiseOR(sigma).cast("int")
 
 
+def _composite_register(cols: list[str], p: int) -> Column:
+    """Packed register of the one hash ``xxhash64(cols...)``."""
+    return _hll_register_expr(F.xxhash64(*[F.col(c) for c in cols]), p)
+
+
 def _drop_null_rows(df: DataFrame, cols: list[str]) -> DataFrame:
     # COUNT(DISTINCT a, b, ...) semantics: skip rows where any key is NULL
-    cond = None
-    for c in cols:
-        this = F.col(c).isNotNull()
-        cond = this if cond is None else (cond & this)
-    return df.filter(cond)
+    return df.filter(reduce(and_, [F.col(c).isNotNull() for c in cols]))
 
 
-def _jvm_register_rows(
-    df: DataFrame, cols: list[str], p: int, group_cols: list[str]
-) -> DataFrame:
-    """JVM-side HLL register reduction: idx/σ via codegen bit ops, then
-    ``groupBy(keys, idx).max(σ)`` — Catalyst's map-side partial aggregation
-    collapses each partition to its observed (group, idx) pairs before the
-    shuffle, so the network moves register rows, never data rows, and never
-    more of them than the partition has data rows. The one-column case of
-    ``_jvm_multi_register_rows``, without its ``__col`` tag."""
-    packed = _hll_register_expr(F.xxhash64(*[F.col(c) for c in cols]), p)
-    return _max_registers(
-        df.select(*[F.col(c) for c in group_cols], packed.alias("__packed")),
-        group_cols,
-    )
-
-
-def _max_registers(packed_rows: DataFrame, keys: list[str]) -> DataFrame:
-    """``groupBy(keys, idx).max(σ)`` over a ``__packed`` register column."""
-    packed = F.col("__packed")
-    return packed_rows.groupBy(
-        *keys, F.shiftrightunsigned(packed, 7).alias("__idx")
-    ).agg(F.max(packed.bitwiseAND(F.lit(127))).alias("__rank"))
-
-
-def _jvm_finalize(
-    reg_rows: DataFrame,
+def _register_sets(
+    df: DataFrame,
+    registers: list[Column],
     group_cols: list[str],
     p: int,
     tail_fields: list[T.StructField],
     sketch: bool = False,
 ) -> DataFrame:
-    """The one finalize of every ``hashing="spark"`` count-distinct. Per
-    group, the i-th tail field comes from the ``(__idx, __rank)`` rows with
-    ``__col`` = i (every row when ``reg_rows`` has no ``__col``); they are
-    unique per idx, since they come out of ``groupBy(..., __idx)``. It is
-    computed from the pairs with no m-byte register array: the estimate
-    from the rank histogram, or with ``sketch`` the serialized sketch
-    (sparse or dense, as ``hll._serialize_dense`` picks). A NULL tag (a row
-    NULL in every column) keeps its group alive and sets no register."""
-    m = 1 << p
-    tag_col = ["__col"] if "__col" in reg_rows.columns else []
+    """The one path of every ``hashing="spark"`` count-distinct: tail field
+    i of a group comes from the packed registers ``registers[i]`` (NULL =
+    no update) of its rows. A codegen'd Project packs them (XXH64 once per
+    column) for ``groupBy(keys).agg(collect_set(__v0), ..., count(1))``,
+    whose partial aggregate dedups each partition's registers before the
+    one Exchange. ``collect_set`` skips NULLs, so a group NULL in every
+    column keeps an empty set (n_c = 0); the finalize, directly above the
+    final aggregate, drops the count-0 row of a global aggregate over
+    empty input."""
+    n_keys, n_sets = len(group_cols), len(registers)
+    sets = df.select(
+        *[F.col(g) for g in group_cols],
+        *[r.alias(f"__v{i}") for i, r in enumerate(registers)],
+    ).groupBy(*group_cols).agg(
+        *[F.collect_set(f"__v{i}").alias(f"__s{i}") for i in range(n_sets)],
+        F.count(F.lit(1)).alias("__n"),
+    )
+    names = [*group_cols, *(f.name for f in tail_fields)]
 
-    def emit(idx: np.ndarray, rank: np.ndarray):
-        if sketch:
-            order = np.argsort(idx)
-            return hll._serialize(p, idx[order], rank[order])
-        counts = np.bincount(rank, minlength=1)
-        counts[0] = m - len(rank)  # the unset registers
-        return hll.estimate_histogram(counts, p)
+    def finalize(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            batch = batch.filter(pc.greater(batch.column(n_keys + n_sets), 0))
+            if batch.num_rows:
+                yield pa.RecordBatch.from_arrays(batch.columns[:n_keys] + [
+                    _finalize_sets(batch.column(n_keys + i), p, sketch)
+                    for i in range(n_sets)], names=names)
 
-    def reduce(group: pa.Table) -> tuple:
-        real = group.select(["__idx", "__rank", *tag_col]).drop_null()
-        idx, rank = real["__idx"].to_numpy(), real["__rank"].to_numpy()
-        if not tag_col:
-            return (emit(idx, rank),)
-        tag = real["__col"].to_numpy()
-        return tuple(
-            emit(idx[tag == i], rank[tag == i])
-            for i in range(len(tail_fields))
+    return sets.mapInArrow(finalize, T.StructType(
+        [_group_field(sets, g) for g in group_cols] + tail_fields))
+
+
+def _finalize_sets(sets: pa.ListArray, p: int, sketch: bool) -> pa.Array:
+    """Estimate (or, with ``sketch``, serialize) each row's set of packed
+    ``idx << 7 | σ`` registers. One sort of ``(row << 23) | packed`` puts
+    each (row, idx) run's max σ last; a ``(rows, 66)`` rank histogram then
+    feeds one vectorized HLL++ pass, or each row's (idx, σ) run one
+    ``hll._serialize``."""
+    n = len(sets)
+    row = np.repeat(np.arange(n, dtype=np.int64), np.diff(sets.offsets))
+    packed = sets.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
+    key = np.sort((row << 23) | packed)
+    last = np.ones(len(key), bool)  # last of its (row, idx) run
+    last[:-1] = (key[1:] >> 7) != (key[:-1] >> 7)
+    key = key[last]
+    row, idx, sigma = key >> 23, (key >> 7) & 0xFFFF, key & 127
+    if sketch:
+        cuts = np.searchsorted(row, np.arange(n + 1)).tolist()
+        return pa.array(
+            [hll._serialize(p, idx[s:e], sigma[s:e])
+             for s, e in zip(cuts, cuts[1:])],
+            pa.binary(),
         )
+    hist = np.bincount(row * hll.RANKS + sigma, minlength=n * hll.RANKS)
+    hist = hist.reshape(n, hll.RANKS)
+    hist[:, 0] = (1 << p) - np.bincount(row, minlength=n)  # unset registers
+    return pa.array(hll.estimate_histograms(hist, p).astype(np.int64))
 
-    return reduce_sorted_groups(reg_rows, group_cols, tail_fields, reduce)
+
+def _value_cols(cols: str | list[str]) -> list[str]:
+    cols = _as_list(cols)
+    if not cols:
+        raise ValueError("need at least one column")
+    return cols
+
+
+def _check_output_names(group_by: list[str], tail: list[str]) -> None:
+    """Each output column is one Arrow field of the finalize: a repeated
+    name must fail here, not in the executor."""
+    names = [*group_by, *tail]
+    clash = sorted({n for n in names if names.count(n) > 1})
+    if clash:
+        raise ValueError(f"output field(s) {clash} repeat: group and "
+                         "result columns need distinct names")
 
 
 def _check_engine(engine: str | None) -> None:
@@ -254,10 +280,9 @@ def approx_distinct(
     NULL are excluded. On empty input the result has zero rows (not a 0-count
     row) — the grouped-aggregation convention.
 
-    hashing="spark" (default): the registers reduce in whole-stage codegen
-        (``groupBy(keys, idx).max(σ)`` with map-side combine), and one
-        sorted ``mapInArrow`` pass estimates each group from its register
-        rows — at any group count, no data row reaches Python.
+    hashing="spark" (default): per-group register sets, one shuffle and
+        one vectorized finalize (``_register_sets``) — at any group count,
+        no data row reaches Python.
     hashing="parity": the reference's hash functions, computed in numpy
         by the two-phase ``sketch_agg(HllAggregator(p, "parity"))``.
 
@@ -265,14 +290,15 @@ def approx_distinct(
     other value raises) and run the same path as omitting it."""
     hll._validate_p(p)
     _check_engine(engine)
-    cols, group_by = _as_list(cols), _as_list(group_by)
+    cols, group_by = _value_cols(cols), _as_list(group_by)
+    _check_output_names(group_by, [alias])
     clean = _drop_null_rows(df, cols)
     if hashing != "spark":
         agg = HllAggregator(p=p, hashing=hashing)
         out = sketch_agg(clean, cols, agg, group_by)
         return out.withColumnRenamed("approx_distinct", alias)
-    return _jvm_finalize(
-        _jvm_register_rows(clean, cols, p, group_by), group_by, p,
+    return _register_sets(
+        clean, [_composite_register(cols, p)], group_by, p,
         [T.StructField(alias, T.LongType(), False)],
     )
 
@@ -286,17 +312,18 @@ def hll_sketch_agg(
 ) -> DataFrame:
     """Like approx_distinct but returns the merged sketch (BinaryType) per
     group — composable: store it, merge it later, estimate at the driver.
-    Under hashing="spark" the sketch bytes are serialized from the
-    codegen-reduced register rows (the ``approx_distinct`` path); they
-    equal the bytes of ``sketch_agg(HllAggregator(p), finalize=False)``."""
+    Under hashing="spark" the sketch bytes are serialized from each
+    group's register set (the ``approx_distinct`` path); they equal the
+    bytes of ``sketch_agg(HllAggregator(p), finalize=False)``."""
     hll._validate_p(p)
-    cols, group_by = _as_list(cols), _as_list(group_by)
+    cols, group_by = _value_cols(cols), _as_list(group_by)
+    _check_output_names(group_by, [SKETCH_COL])
     clean = _drop_null_rows(df, cols)
     if hashing != "spark":
         agg = HllAggregator(p=p, hashing=hashing)
         return sketch_agg(clean, cols, agg, group_by, finalize=False)
-    return _jvm_finalize(
-        _jvm_register_rows(clean, cols, p, group_by), group_by, p,
+    return _register_sets(
+        clean, [_composite_register(cols, p)], group_by, p,
         [T.StructField(SKETCH_COL, T.BinaryType(), False)], sketch=True,
     )
 
@@ -311,7 +338,7 @@ def hll_merged_sketch(
     """Distributed partial build + CLUSTER-side tree-merge (one row to the
     driver); ``fan_in`` caps partials per merge task — lower it for
     byte-heavy custom precisions."""
-    cols = _as_list(cols)
+    cols = _value_cols(cols)
     agg = HllAggregator(p=p, hashing=hashing)
     return collect_merged(_drop_null_rows(df, cols), cols, agg, fan_in=fan_in)
 
@@ -422,49 +449,6 @@ def _hll_packed_register_expr(col: Column | str, p: int) -> Column:
     )
 
 
-def _jvm_multi_register_rows(
-    df: DataFrame, cols: list[str], p: int, group_cols: list[str]
-) -> DataFrame:
-    """One-scan per-column register reduction fully JVM-side: every row
-    emits one (column-tag, packed-register) entry per NON-NULL column
-    (the per-column COUNT(DISTINCT) null rule) through the one packed
-    kernel, then ``groupBy(tag, idx).max(sigma)`` map-side-combines each
-    partition before the shuffle. No data row and no Arrow batch leaves
-    the JVM — the multi-column analogue of ``_jvm_register_rows``, with
-    the registers of the single-column path by construction.
-
-    ``posexplode(array(__v0, ...))`` emits ``(__col, __packed)``: the
-    position is the column tag. A plain ``Filter`` then drops the NULL
-    registers, so scan, hash, Generate, Filter and the partial aggregate
-    share one whole-stage-codegen stage (a ``filter`` lambda would run
-    interpreted, once per row). A row NULL in every column keeps its
-    ``__col = 0`` entry with a NULL tag, so its group survives with
-    n_c = 0 for every column."""
-    # hash in a plain (codegen'd) Project first, not inside the Generate
-    regs = [F.col(f"__v{i}") for i in range(len(cols))]
-    packed = df.select(
-        *[F.col(g) for g in group_cols],
-        *[_hll_packed_register_expr(c, p).alias(f"__v{i}")
-          for i, c in enumerate(cols)],
-    )
-    exploded = packed.select(
-        *group_cols, *regs,
-        F.posexplode(F.array(*regs)).alias("__col", "__packed"),
-    ).filter(
-        F.col("__packed").isNotNull()
-        | (F.coalesce(*regs).isNull() & (F.col("__col") == 0))
-    )
-    return _max_registers(
-        exploded.select(
-            *group_cols,
-            F.when(F.col("__packed").isNotNull(), F.col("__col"))
-            .alias("__col"),
-            "__packed",
-        ),
-        [*group_cols, "__col"],
-    )
-
-
 def approx_distinct_multi(
     df: DataFrame,
     cols: list[str],
@@ -479,26 +463,24 @@ def approx_distinct_multi(
     drops that column's update only, and a group NULL in every column is
     kept with n_c = 0.
 
-    Each row ``posexplode``s into one register entry per column, tagged by
-    its position; a plain ``Filter`` drops the NULL ones (a row NULL in
-    every column keeps one NULL-tag entry, so its group survives), all in
-    the scan stage's whole-stage codegen. Catalyst's map-side combine
-    reduces the entries before the shuffle, so no data row crosses the
-    Arrow boundary; estimates are bit-identical to running
-    ``approx_distinct`` per column. A column may appear once in ``cols``.
-    ``engine`` selects nothing (see ``approx_distinct``)."""
+    Each column's packed register (NULL for a NULL value) feeds its own
+    ``collect_set`` of one aggregate (``_register_sets``); estimates are
+    bit-identical to running ``approx_distinct`` per column. A column may
+    appear once in ``cols``. ``engine`` selects nothing (see
+    ``approx_distinct``)."""
     hll._validate_p(p)
-    if not cols:
-        raise ValueError("need at least one column")
+    cols = _value_cols(cols)
     repeated = sorted({c for c in cols if cols.count(c) > 1})
     if repeated:
         raise ValueError(f"repeated column(s) {repeated}: each n_<col> "
                          "is one output field")
     _check_engine(engine)
     group_by = _as_list(group_by)
-    return _jvm_finalize(
-        _jvm_multi_register_rows(df, cols, p, group_by), group_by, p,
-        [T.StructField(f"n_{c}", T.LongType(), False) for c in cols],
+    tail = [T.StructField(f"n_{c}", T.LongType(), False) for c in cols]
+    _check_output_names(group_by, [f.name for f in tail])
+    return _register_sets(
+        df, [_hll_packed_register_expr(c, p) for c in cols], group_by, p,
+        tail,
     )
 
 

@@ -13,6 +13,7 @@ as realized by the reference:
 
 from __future__ import annotations
 
+import bisect
 import functools
 from importlib import resources
 
@@ -59,24 +60,27 @@ def _tables() -> dict[int, tuple[np.ndarray, np.ndarray]]:
         }
 
 
-def correct_bias(raw_estimate: float, p: int) -> float:
-    """Subtract the interpolated empirical bias; clamp at 0.
+def correct_bias(raw_estimate: np.ndarray, p: int) -> np.ndarray:
+    """Subtract the interpolated empirical bias from each raw estimate of
+    a 1-D array; clamp at 0.
 
     Binary-search + linear interpolation with end clamping, matching
-    /root/reference/HyperLogLog/BiasCorrection.cs:42-93.
-    """
+    the reference's BiasCorrection.cs:42-93: an exact table point takes
+    its bias, a raw estimate before the first or past the last point the
+    end bias, any other the interpolation between its two neighbours."""
     raw_tbl, bias_tbl = _tables()[p]
-    idx = int(np.searchsorted(raw_tbl, raw_estimate, side="left"))
-    if idx < len(raw_tbl) and raw_tbl[idx] == raw_estimate:
-        bias = float(bias_tbl[idx])
-    elif idx >= len(raw_tbl):
-        bias = float(bias_tbl[-1])
-    elif idx <= 0:
-        bias = float(bias_tbl[0])
-    else:
-        lo, hi = float(raw_tbl[idx - 1]), float(raw_tbl[idx])
-        frac = (raw_estimate - lo) / (hi - lo)
-        bias = float(bias_tbl[idx - 1]) + frac * (
-            float(bias_tbl[idx]) - float(bias_tbl[idx - 1])
-        )
-    return max(raw_estimate - bias, 0.0)
+    raw = np.asarray(raw_estimate, dtype=np.float64)
+    n = len(raw_tbl)
+    # a fresh search per estimate: the p = 5, 6 tables are not monotone,
+    # and a batched searchsorted narrows each key's bounds from the last's
+    keys = raw_tbl.tolist()
+    idx = np.array([bisect.bisect_left(keys, x) for x in raw.tolist()],
+                   np.int64)
+    at = np.minimum(idx, n - 1)
+    lo, hi = np.maximum(at, 1) - 1, np.maximum(at, 1)
+    interp = bias_tbl[lo] + (raw - raw_tbl[lo]) / (
+        raw_tbl[hi] - raw_tbl[lo]) * (bias_tbl[hi] - bias_tbl[lo])
+    # before the first point, past the last, or on a point: that bias
+    fixed = (idx == 0) | (idx == n) | (raw_tbl[at] == raw)
+    bias = np.where(fixed, bias_tbl[at], interp)
+    return np.maximum(raw - bias, 0.0)

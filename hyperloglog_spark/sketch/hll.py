@@ -41,6 +41,8 @@ MODE_DENSE = 1
 
 DEFAULT_P = 14
 
+RANKS = 66  # register ranks 0..65: σ = 1 + clz64(h << p) <= 65
+
 # grouped register build: below this many total registers (n_groups × m)
 # use the O(n) dense max-scatter; above it, the sort path whose memory is
 # bounded by distinct (group, register) pairs. 2^26 B = one 64 MB page.
@@ -325,24 +327,33 @@ def estimate_registers(regs: np.ndarray, p: int) -> int:
 
 def estimate_histogram(counts: np.ndarray, p: int) -> int:
     """The HLL++ estimate from the register-rank histogram alone
-    (``counts[r]`` = number of registers holding rank r; Heule et al. 2013,
-    Ertl 2017): no m-byte register array is needed."""
+    (``counts[r]`` = number of registers holding rank r): the one-row case
+    of ``estimate_histograms``."""
+    row = np.zeros((1, max(RANKS, len(counts))), np.int64)
+    row[0, :len(counts)] = counts
+    return int(estimate_histograms(row, p)[0])
+
+
+def estimate_histograms(counts: np.ndarray, p: int) -> np.ndarray:
+    """The HLL++ estimates of many rank histograms in one vectorized pass
+    (``counts[g, r]`` = number of registers of row g holding rank r; Heule
+    et al. 2013, Ertl 2017): no m-byte register array is needed. Rounded
+    half-to-even like ``round``, as float64 (no int64 overflow); the
+    linear-counting log is Python's ``math.log`` per row."""
     m = 1 << p
-    v = float(counts[0])
-    # zInverse = sum(2^-reg) computed per distinct register value (exact in
-    # float64: each term is counts[r] * 2^-r, r <= 65)
-    r_vals = np.arange(len(counts), dtype=np.float64)
-    zinv = float(np.sum(counts * np.exp2(-r_vals)))
+    v = counts[:, 0].astype(np.float64)
+    # zInverse = sum(2^-reg) computed per distinct register value: each
+    # term counts[r] * 2^-r is exact in float64, and so is the sum while
+    # every rank stays below ~40
+    r_vals = np.arange(counts.shape[1], dtype=np.float64)
+    zinv = (counts * np.exp2(-r_vals)).sum(axis=1)
     e = bias.alpha_m(m) * m * m / zinv
-    if e <= 5.0 * m:
-        e = bias.correct_bias(e, p)
-    if v > 0:
-        h = m * math.log(m / v)
-    else:
-        h = e
-    if h <= bias.THRESHOLD[p]:
-        return round(h)
-    return round(e)
+    small = e <= 5.0 * m
+    e[small] = bias.correct_bias(e[small], p)
+    h = e.copy()
+    lc = v > 0
+    h[lc] = [m * math.log(m / x) for x in v[lc].tolist()]
+    return np.rint(np.where(h <= bias.THRESHOLD[p], h, e))
 
 
 def error_bound(p: int) -> float:

@@ -2,13 +2,17 @@
 in tests to cross-validate the vectorized kernel.
 
 Transliterates the estimator pipeline of /root/reference/HyperLogLog/Utils.cs:
-252-285 (sequential summation order preserved) and the Count14 register-update
-semantics of /root/reference/HyperLogLog/HyperLogLog.cs:945-991.
+252-285 (sequential summation order preserved), its bias correction (the
+reference's BiasCorrection.cs:42-93, one scalar binary search per
+estimate) and the Count14 register-update semantics of the reference's
+HyperLogLog.cs:945-991.
 """
 
 from __future__ import annotations
 
 import math
+
+import numpy as np
 
 from hyperloglog_spark.sketch import bias
 
@@ -35,6 +39,24 @@ def build_registers_scalar(hashes, p: int) -> list[int]:
     return look
 
 
+def correct_bias_scalar(raw_estimate: float, p: int) -> float:
+    raw_tbl, bias_tbl = bias._tables()[p]
+    idx = int(np.searchsorted(raw_tbl, raw_estimate, side="left"))
+    if idx < len(raw_tbl) and raw_tbl[idx] == raw_estimate:
+        b = float(bias_tbl[idx])
+    elif idx >= len(raw_tbl):
+        b = float(bias_tbl[-1])
+    elif idx <= 0:
+        b = float(bias_tbl[0])
+    else:
+        lo, hi = float(raw_tbl[idx - 1]), float(raw_tbl[idx])
+        frac = (raw_estimate - lo) / (hi - lo)
+        b = float(bias_tbl[idx - 1]) + frac * (
+            float(bias_tbl[idx]) - float(bias_tbl[idx - 1])
+        )
+    return max(raw_estimate - b, 0.0)
+
+
 def estimate_scalar(look, p: int) -> int:
     m = 1 << p
     alpha = bias.alpha_m(m)
@@ -47,7 +69,7 @@ def estimate_scalar(look, p: int) -> int:
             v += 1
     e = alpha * m * m / z_inverse
     if e <= 5.0 * m:
-        e = bias.correct_bias(e, p)
+        e = correct_bias_scalar(e, p)
     h = m * math.log(m / v) if v > 0 else e
     if h <= threshold:
         return round(h)

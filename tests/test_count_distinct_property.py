@@ -1,9 +1,13 @@
 """Property tests (hypothesis) for the one count-distinct path: over small
 generated frames — NULL, NaN and ±0.0 keys and values, all-NULL groups and
-columns, empty partitions, p in {4, 16} — the codegen register reduction
-plus the sorted register-row finalize answers exactly what the two-phase
-``sketch_agg(HllAggregator(p))`` reference answers; and the rank-histogram
-estimate the finalize computes from register pairs equals
+columns, empty partitions, p in {4, 16} — the per-group register sets
+(``collect_set`` over the codegen'd packed registers) and their one
+vectorized finalize answer exactly what the two-phase
+``sketch_agg(HllAggregator(p))`` reference answers. The batched HLL++
+estimator the finalize runs over ``(groups, 66)`` rank histograms equals,
+row by row, its one-row case ``estimate_histogram`` and a scalar form with
+Python's ``math.log``, ``round`` and one binary search per bias lookup;
+and the rank histogram of the register pairs equals
 ``estimate_registers`` over the dense registers."""
 
 from __future__ import annotations
@@ -23,6 +27,8 @@ from hyperloglog_spark import (
 from hyperloglog_spark.engine.aggregate import sketch_agg
 from hyperloglog_spark.functions import HllAggregator
 from hyperloglog_spark.sketch import bias, hll
+
+from .oracle_hll import correct_bias_scalar
 
 SPECIAL = [None, float("nan"), 0.0, -0.0, 1.5, -2.0]
 
@@ -135,3 +141,71 @@ def test_all_null_column_and_group(spark, p):
     got = _by_key(approx_distinct_multi(df, ["a", "b"], ["k"], p=p), ["k"])
     assert got == {(None,): (0, 0), ("1.5",): (1, 0)}
     assert hll_sketch_agg(df, "b", p=p).count() == 0
+
+
+def _estimate_python(counts: np.ndarray, p: int) -> int:
+    """The scalar HLL++ estimate of one rank histogram: the batched
+    estimator's summation, then Python's ``math.log`` and ``round`` and
+    the scalar bias lookup."""
+    m = 1 << p
+    v = float(counts[0])
+    r_vals = np.arange(len(counts), dtype=np.float64)
+    zinv = float(np.sum(counts * np.exp2(-r_vals)))
+    e = bias.alpha_m(m) * m * m / zinv
+    if e <= 5.0 * m:
+        e = correct_bias_scalar(e, p)
+    h = m * math.log(m / v) if v > 0 else e
+    return round(h) if h <= bias.THRESHOLD[p] else round(e)
+
+
+@st.composite
+def rank_histograms(draw, p: int) -> np.ndarray:
+    """One (66,) rank histogram of m registers: none unset (v = 0), unset
+    counts whose linear-counting estimate straddles ``THRESHOLD[p]``, any,
+    or ranks shifted high enough that the raw estimate passes 5m."""
+    m = 1 << p
+    kind = draw(st.sampled_from(["v0", "lc_threshold", "any", "high"]))
+    if kind == "v0":
+        v = 0
+    elif kind == "lc_threshold":
+        v = int(round(m * math.exp(-bias.THRESHOLD[p] / m)))
+        v = min(m, max(1, v + draw(st.integers(-2, 2))))
+    else:
+        v = draw(st.integers(0, m))
+    shift = draw(st.integers(0, 60 if kind == "high" else 4))
+    rng = np.random.default_rng(draw(st.integers(0, 2 ** 32 - 1)))
+    ranks = np.minimum(shift + rng.geometric(0.5, m - v), hll.RANKS - 1)
+    counts = np.bincount(ranks, minlength=hll.RANKS)
+    counts[0] = v
+    return counts
+
+
+@settings(max_examples=300, deadline=None)
+@given(data=st.data())
+def test_batched_estimator_equals_one_row(data):
+    p = data.draw(st.integers(4, 16), label="p")
+    counts = np.stack(data.draw(
+        st.lists(rank_histograms(p), min_size=1, max_size=6), label="rows"))
+    got = hll.estimate_histograms(counts, p)
+    for row, est in zip(counts, got.tolist()):
+        assert int(est) == hll.estimate_histogram(row, p) \
+            == _estimate_python(row, p), row.tolist()
+
+
+@settings(max_examples=100, deadline=None)
+@given(data=st.data())
+def test_batched_bias_correction_equals_scalar(data):
+    """Every table point, the midpoints, both ends and beyond, in any
+    order: the p = 5, 6 tables are not monotone, so a batched search that
+    reuses bounds across keys would answer differently."""
+    p = data.draw(st.integers(4, 16), label="p")
+    raw_tbl = bias._tables()[p][0]
+    m = 1 << p
+    xs = np.concatenate([
+        raw_tbl, (raw_tbl[1:] + raw_tbl[:-1]) / 2,
+        [0.0, raw_tbl[0] - 1, raw_tbl[-1] + 1, 5.0 * m],
+        data.draw(st.lists(st.floats(0, 6.0 * m), max_size=20)),
+    ])
+    xs = xs[data.draw(st.permutations(range(len(xs))))]
+    assert bias.correct_bias(xs, p).tolist() == \
+        [correct_bias_scalar(x, p) for x in xs.tolist()]

@@ -68,23 +68,23 @@ def test_register_path_scales_past_the_old_grouped_row_budget(spark):
     """20,000 groups at p=16: #groups x 2^p is 1.3e9 register rows, about
     20x the 2^26-row budget that used to push such queries off this path.
     The map-side combine never emits more rows than it reads, so the
-    shuffled register rows stay below the 40,000 input rows; estimates and
-    sketch bytes equal the two-phase reference."""
+    shuffled register-set rows stay below the 40,000 input rows; estimates
+    and sketch bytes equal the two-phase reference."""
     n_rows, p = 40_000, 16
     df = spark.range(n_rows).select(
         (F.col("id") % 20_000).alias("g"), F.col("id").alias("v"))
     est = approx_distinct(df, "v", group_by="g", p=p)
     [(name, below)] = python_operators(est)
     assert name == "MapInArrow"
-    assert re.search(r"HashAggregate\(.*__idx", below)
+    assert re.match(r"ObjectHashAggregate\(.*collect_set", below)
     assert _rows(est) == _rows(_reference(df, "v", p, ["g"]))
     assert len(_rows(est)) == 20_000
     sk = hll_sketch_agg(df, "v", group_by="g", p=p)
     assert _rows(sk) == _rows(_reference(df, "v", p, ["g"], finalize=False))
-    # rows out of the map-side partial and the final register aggregate
+    # rows out of the map-side partial and the final register-set aggregate
     agg_rows = [node.metrics().get("numOutputRows").get().value()
                 for node, _ in _nodes(est)
-                if node.nodeName() == "HashAggregate"]
+                if node.nodeName() == "ObjectHashAggregate"]
     assert len(agg_rows) == 2 and max(agg_rows) <= n_rows
 
 

@@ -87,10 +87,12 @@ class TestMultiDistinct:
         q = approx_distinct_multi(fresh, ["user_id", "event_type"])
         plan = q._jdf.queryExecution().executedPlan().toString()
         assert plan.count("FileScan") == 1      # ONE pass over the data
-        # the register aggregate's shuffle + the finalize's repartition,
-        # each fed by an aggregate: data rows shuffle zero times
-        assert n_exchanges(q) == 2
-        assert exchange_inputs(q) == ["HashAggregate"] * 2
+        # the register-set aggregate's one shuffle, fed by its partial
+        # collect_set: data rows shuffle zero times, the finalize none
+        assert n_exchanges(q) == 1
+        assert exchange_inputs(q) == ["ObjectHashAggregate"]
+        assert re.search(r"ObjectHashAggregate\([^\n]*partial_collect_set",
+                         plan), plan
         assert_pruned_scan(q, {"user_id", "event_type"})
 
     def test_all_null_column_counts_zero(self, spark):
@@ -139,11 +141,13 @@ class TestMultiDistinctJvmEngine:
         q = approx_distinct_multi(fresh, ["user_id", "event_type"])
         plan = q._jdf.queryExecution().executedPlan().toString()
         assert plan.count("FileScan") == 1
-        # the per-row reduction is JVM hash aggregation; the one Python
-        # stage (the per-group register finalize) sits above that
-        # aggregate, so no data row reaches Python
+        # the per-row reduction is the JVM collect_set aggregate; the one
+        # Python stage (the register-set finalize) sits directly above its
+        # final aggregate, so no data row reaches Python
         [(_, below)] = python_operators(q)
-        assert re.search(r"HashAggregate\(.*__idx", below)
+        assert re.match(r"ObjectHashAggregate\(keys=\[\], "
+                        r"functions=\[collect_set", below), below
+        assert not re.search(r"\b(Sort|Generate)\b", plan), plan
         assert_pruned_scan(q, {"user_id", "event_type"})
 
     def test_all_null_groups_match_arrow(self, spark):
@@ -193,6 +197,35 @@ class TestMultiDistinctJvmEngine:
             approx_distinct_multi(
                 events, ["user_id", "event_type", "user_id"], engine=engine
             ).collect()
+
+    @pytest.mark.parametrize("build", [approx_distinct, hll_sketch_agg],
+                             ids=["approx_distinct", "hll_sketch_agg"])
+    def test_empty_cols_rejected_for_single_result(self, events, build):
+        with pytest.raises(ValueError, match="at least one column"):
+            build(events, [])
+
+    @pytest.mark.parametrize("build,clash", [
+        pytest.param(lambda ev: approx_distinct(
+            ev, "user_id", group_by="event_type", alias="event_type"),
+            "event_type", id="alias_is_group"),
+        pytest.param(lambda ev: approx_distinct_multi(
+            ev.withColumnRenamed("event_type", "n_user_id"), ["user_id"],
+            group_by="n_user_id"), "n_user_id", id="multi_n_col_is_group"),
+        pytest.param(lambda ev: hll_sketch_agg(
+            ev.withColumnRenamed("event_type", "sketch"), "user_id",
+            group_by="sketch"), "sketch", id="sketch_is_group"),
+        pytest.param(lambda ev: approx_distinct(
+            ev, "user_id", group_by=["event_type", "event_type"]),
+            "event_type", id="repeated_group"),
+    ])
+    def test_output_name_clash_rejected_before_dispatch(
+        self, events, build, clash
+    ):
+        # caught on the driver: two Arrow fields of one name fail in the
+        # executor
+        with pytest.raises(ValueError,
+                           match=rf"output field\(s\) \['{clash}'\]"):
+            build(events).collect()
 
     def test_unknown_engine_rejected(self, events):
         with pytest.raises(ValueError, match="engine must be"):

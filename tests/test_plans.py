@@ -53,12 +53,30 @@ def test_hll_scan_prunes_to_sketched_column(events):
 def test_hll_grouped_single_shuffle(events):
     q = approx_distinct(events, "user_id", group_by="event_type")
     assert_pruned_scan(q, {"user_id", "event_type"})
-    # two Exchanges by design, counted before execution: the register
-    # aggregate's (above its map-side partial) and the finalize's
-    # repartition by group (above the final aggregate). Both move register
-    # rows: raw rows shuffle zero times.
-    assert n_exchanges(q) == 2
-    assert exchange_inputs(q) == ["HashAggregate"] * 2
+    # one Exchange, counted before execution: the register-set aggregate's,
+    # above its map-side partial. It moves deduplicated registers: raw rows
+    # shuffle zero times, and the finalize needs no second shuffle.
+    assert n_exchanges(q) == 1
+    assert exchange_inputs(q) == ["ObjectHashAggregate"]
+
+
+def _assert_register_set_plan(q) -> str:
+    """The one count-distinct shape: a single Exchange fed by the partial
+    ``collect_set`` aggregate, and the single Python operator, a
+    ``MapInArrow``, directly above the final ``collect_set`` aggregate in
+    the same stage: no Sort and no Generate. Returns the final plan."""
+    assert n_exchanges(q) == 1
+    assert exchange_inputs(q) == ["ObjectHashAggregate"]
+    q.collect()                     # the final AQE plan
+    [(name, below)] = python_operators(q)
+    assert name == "MapInArrow"
+    assert re.match(r"ObjectHashAggregate\(keys=\[[^\]]*\], "
+                    r"functions=\[collect_set", below), below
+    plan = final_plan(q)
+    assert re.search(r"Exchange [^\n]*\n\s*\+- ObjectHashAggregate\("
+                     r"[^\n]*partial_collect_set", plan), plan
+    assert not re.search(r"\b(Sort|Generate)\b", plan), plan
+    return plan
 
 
 def _count_distinct_cases():
@@ -78,15 +96,9 @@ def _count_distinct_cases():
 )
 def test_count_distinct_is_one_python_stage_over_registers(events, build):
     """Every ``hashing="spark"`` count-distinct, at any group count, runs
-    one Python operator: the sorted finalize, fed by the ``__idx``
-    register aggregate. Data rows never reach Python or the shuffle."""
-    q = build(events)
-    assert n_exchanges(q) == 2
-    assert exchange_inputs(q) == ["HashAggregate"] * 2
-    q.collect()
-    [(name, below)] = python_operators(q)
-    assert name == "MapInArrow"
-    assert re.search(r"HashAggregate\(.*__idx", below), below
+    one Python operator: the finalize, fed by the register-set aggregate.
+    Data rows never reach Python or the shuffle."""
+    _assert_register_set_plan(build(events))
 
 
 def _hll_cases():
@@ -140,21 +152,20 @@ def test_hll_kernel_hashes_each_column_once(spark, sf01_dir, build, n_hashed):
 @pytest.mark.parametrize("group_by", [[], ["event_type"]],
                          ids=["global", "grouped"])
 def test_multi_distinct_registers_stay_in_codegen(spark, sf01_dir, group_by):
-    """``approx_distinct_multi`` tags each column's register by its
-    ``posexplode`` position and drops NULL registers with a plain Filter:
-    a ``filter`` lambda is a ``CodegenFallback``, interpreted once per
-    row. One scan, XXH64 once per column, and the Generate inside the
-    scan stage's whole-stage-codegen subtree."""
+    """``approx_distinct_multi`` packs one register per column in the scan
+    stage's whole-stage-codegen Project and feeds each to its own
+    ``collect_set``: no Generate, and no lambda (a higher-order function
+    is a ``CodegenFallback``, interpreted once per row). One scan, XXH64
+    once per column."""
     spark.catalog.clearCache()
     ev = spark.read.parquet(f"{sf01_dir}/events.parquet")
     q = approx_distinct_multi(ev, ["user_id", "event_id"], group_by=group_by)
-    assert n_exchanges(q) == 2
-    assert exchange_inputs(q) == ["HashAggregate"] * 2
-    q.collect()                     # the final AQE plan holds the codegen
-    plan = final_plan(q)
+    assert_pruned_scan(q, {"user_id", "event_id", *group_by})
+    plan = _assert_register_set_plan(q)
     assert plan.count("FileScan") == 1
     assert "lambdafunction" not in plan.lower()
-    assert re.search(r"\*\(\d+\) Generate posexplode", plan), plan
+    assert re.search(r"\*\(\d+\) Project \[.* AS __v0#\d+, .* AS __v1#",
+                     plan), plan
     assert codegen_count(q, r"XXH64\.hash") == 2
 
 
