@@ -31,11 +31,27 @@ Hashing runs JVM-side by default (``F.xxhash64``, whole-stage codegen; only
 8-byte hashes cross the Arrow boundary, not strings). ``hashing="parity"``
 instead ships raw values to Python and applies the reference's FNV-1a 64 /
 Murmur-finalizer for bit-parity with the reference sketches.
+
+Every build enters through ONE front door, ``sketch_input``, which owns
+the input rules of every path (``sketch_agg``, ``sketch_partials``,
+``premerged_sketch``, ``collect_merged``, the checkpointed build and
+streaming):
+
+- lists: value and group columns are each a name or a list of names;
+- driver checks: an empty value list, or an output name that repeats
+  (group columns plus ``sketch``/``rows`` or the finalize fields, and any
+  alias an entry point renames to, see ``rename_output``), raises
+  ``ValueError`` before anything runs;
+- NULL rule: a row adds nothing when a value column is NULL, or when the
+  aggregator's weight (or delta) column is — COUNT(DISTINCT)'s rule for
+  the values, SQL ``SUM``'s for the weights.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable, Iterator
+from operator import and_
 from typing import Any
 
 import numpy as np
@@ -51,6 +67,11 @@ SKETCH_COL = "sketch"
 class SketchAggregator:
     """Adapter every sketch kind implements to ride the two-phase pipeline.
 
+    Input rows arrive through ``sketch_input``: a row whose value column
+    or ``weight_col`` is NULL never reaches ``prepare_columns``' output.
+
+    weight_col:    raw column of per-row weights (or deltas); None: each
+                   row counts once
     build:         (cols list[pa.Array], bounds list[int]) -> list[bytes]
                    one sketch per group: ``cols`` are the prepared value
                    columns ordered by group, group i is rows
@@ -62,6 +83,7 @@ class SketchAggregator:
     """
 
     name: str = "sketch"
+    weight_col: str | None = None
 
     def prepare_columns(self, df: DataFrame, cols: list[str]) -> list[Column]:
         """Spark-side (JVM) preparation of the value columns."""
@@ -133,27 +155,99 @@ def _group_col(df: DataFrame, name: str) -> Column:
     return c
 
 
+def _as_list(cols: str | list[str] | None) -> list[str]:
+    return [cols] if isinstance(cols, str) else list(cols or [])
+
+
+def _value_cols(cols: str | list[str]) -> list[str]:
+    cols = _as_list(cols)
+    if not cols:
+        raise ValueError("need at least one column")
+    return cols
+
+
+def _check_output_names(group_cols: list[str], tail: list[str]) -> None:
+    """Each output column is one Arrow field of the finalize: a repeated
+    name must fail here, not in the executor."""
+    names = [*group_cols, *tail]
+    clash = sorted({n for n in names if names.count(n) > 1})
+    if clash:
+        raise ValueError(f"output field(s) {clash} repeat: group and "
+                         "result columns need distinct names")
+
+
+def _drop_null_rows(df: DataFrame, cols: list[str]) -> DataFrame:
+    # COUNT(DISTINCT a, b, ...) semantics: skip rows where any key is NULL
+    return df.filter(
+        functools.reduce(and_, [F.col(c).isNotNull() for c in cols]))
+
+
+def counted_rows(df: DataFrame, value_cols: list[str],
+                 weight_col: str | None) -> DataFrame:
+    """The rows that count under the NULL rule: no value column and no
+    ``weight_col`` (weight or delta) is NULL. ``sketch_input`` applies it,
+    and so do the heavy-hitter paths that build their own rows."""
+    weights = [] if weight_col is None else [weight_col]
+    return _drop_null_rows(df, value_cols + weights)
+
+
+def sketch_input(
+    df: DataFrame,
+    value_cols: str | list[str],
+    agg: SketchAggregator,
+    group_cols: str | list[str] | None,
+    tail: list[str],
+) -> tuple[DataFrame, list[str]]:
+    """The front door of every sketch build: ``(projection, group
+    columns)``, the projection holding the group keys (``-0.0`` folded,
+    see ``_group_col``) then ``agg``'s prepared values ``__v0..``, over
+    the rows that count. ``tail`` names the output columns that follow
+    the keys. Applies the three input rules of the module docstring."""
+    value_cols, group_cols = _value_cols(value_cols), _as_list(group_cols)
+    _check_output_names(group_cols, tail)
+    rows = counted_rows(df, value_cols, agg.weight_col)
+    prepared = agg.prepare_columns(rows, value_cols)
+    return rows.select(
+        *[_group_col(df, c) for c in group_cols],
+        *[c.alias(f"__v{i}") for i, c in enumerate(prepared)],
+    ), group_cols
+
+
+def rename_output(out: DataFrame, name: str, alias: str) -> DataFrame:
+    """``out`` with its column ``name`` renamed to ``alias``, which must
+    not repeat another output name."""
+    _check_output_names([c for c in out.columns if c != name], [alias])
+    return out.withColumnRenamed(name, alias)
+
+
 def sketch_partials(
     df: DataFrame,
-    value_cols: list[str],
+    value_cols: str | list[str],
     agg: SketchAggregator,
-    group_cols: list[str] | None = None,
+    group_cols: str | list[str] | None = None,
     with_rows: bool = False,
 ) -> DataFrame:
     """Phase 1: one sketch row per (partition, group).
 
     with_rows=True adds a ``rows`` LongType column counting the input rows
     each partial consumed (lineage/metrics come free from the same scan)."""
-    group_cols = list(group_cols or [])
-    prepared = agg.prepare_columns(df, value_cols)
-    value_names = [f"__v{i}" for i in range(len(prepared))]
-    proj = df.select(
-        *[_group_col(df, c) for c in group_cols],
-        *[c.alias(n) for c, n in zip(prepared, value_names)],
-    )
+    tail = [SKETCH_COL, "rows"] if with_rows else [SKETCH_COL]
+    proj, group_cols = sketch_input(df, value_cols, agg, group_cols, tail)
+    return _partials(df, proj, group_cols, agg, SKETCH_COL, with_rows)
 
+
+def _partials(
+    df: DataFrame,
+    proj: DataFrame,
+    group_cols: list[str],
+    agg: SketchAggregator,
+    sketch_name: str,
+    with_rows: bool,
+) -> DataFrame:
+    """``sketch_partials`` over ``sketch_input``'s projection ``proj`` of
+    ``df``, the partial in column ``sketch_name``."""
     out_fields = [_group_field(df, c) for c in group_cols] + [
-        T.StructField(SKETCH_COL, T.BinaryType(), False)
+        T.StructField(sketch_name, T.BinaryType(), False)
     ]
     if with_rows:
         out_fields.append(T.StructField("rows", T.LongType(), False))
@@ -210,9 +304,9 @@ def sketch_partials(
 
 def sketch_agg(
     df: DataFrame,
-    value_cols: list[str],
+    value_cols: str | list[str],
     agg: SketchAggregator,
-    group_cols: list[str] | None = None,
+    group_cols: str | list[str] | None = None,
     finalize: bool = True,
 ) -> DataFrame:
     """Full two-phase aggregation. Returns group_cols + finalized fields
@@ -221,17 +315,22 @@ def sketch_agg(
     Phase 2 (``reduce_sorted_groups``) merges each group's partials in a
     single ``merge_many`` call — the same multiset in one call as a
     per-group merge, so the bytes do not depend on the batching."""
-    group_cols = list(group_cols or [])
-    partials = sketch_partials(df, value_cols, agg, group_cols)
     if finalize:
         tail_fields = list(agg.finalize_fields)
     else:
         tail_fields = [T.StructField(SKETCH_COL, T.BinaryType(), False)]
     names = [f.name for f in tail_fields]
+    proj, group_cols = sketch_input(df, value_cols, agg, group_cols, names)
+    # the partial column is internal: it takes ``sketch`` unless a group
+    # key has that name
+    part = SKETCH_COL
+    while part in group_cols:
+        part = "_" + part
+    partials = _partials(df, proj, group_cols, agg, part, False)
     merge_many, fin = agg.merge_many, agg.finalize
 
     def reduce(group: pa.Table) -> tuple:
-        merged = merge_many(group.column(SKETCH_COL).to_pylist())
+        merged = merge_many(group.column(part).to_pylist())
         if not finalize:
             return (merged,)
         vals = fin(merged)
@@ -368,7 +467,7 @@ def tree_merge_rows(
 
 def premerged_sketch(
     df: DataFrame,
-    value_cols: list[str],
+    value_cols: str | list[str],
     agg: SketchAggregator,
     fan_in: int = 32,
 ) -> DataFrame:
@@ -385,7 +484,7 @@ def premerged_sketch(
 
 def collect_merged(
     df: DataFrame,
-    value_cols: list[str],
+    value_cols: str | list[str],
     agg: SketchAggregator,
     fan_in: int = 32,
 ) -> bytes:

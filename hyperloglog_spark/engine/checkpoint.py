@@ -10,8 +10,12 @@ stable across runs, clusters, and parallelism levels. The flow:
     for each batch of `files_per_batch` pending files:
         one distributed pass: per-file partial sketches + row counts
         (sketch_partials grouped on input_file_name — a single scan)
-        merge partials per file, append one lineage row per file:
+        merge partials per file, append one lineage row per scanned file:
             (run_id, file, rows, sketch bytes, estimate, wall_s, ts)
+        — ``rows`` counts the rows that pass the NULL rule of
+        ``engine.aggregate``; a file none of whose rows pass (empty, or
+        every value NULL) commits rows=0 with a NULL sketch and estimate,
+        so a resume never scans it again
     final estimate = merge of every lineage sketch (register-max monoid
     makes re-merging committed partials exact, not approximate-on-approximate)
 
@@ -75,7 +79,7 @@ _LINEAGE_SCHEMA = pa.schema([
 @dataclass
 class SketchJobResult:
     estimate: int
-    rows: int
+    rows: int               # rows that count (the NULL rule's survivors)
     files_total: int
     files_resumed: int      # skipped because lineage already covered them
     files_processed: int    # processed by THIS invocation
@@ -136,9 +140,6 @@ def resumable_sketch_build(
     ``max_batches`` caps the batches processed in this invocation (used by
     tests to simulate preemption; a killed run behaves identically).
     """
-    if isinstance(value_cols, str):
-        value_cols = [value_cols]
-
     df_all = spark.read.parquet(input_path)
     files = sorted(df_all.inputFiles())
     if not files:
@@ -179,23 +180,20 @@ def resumable_sketch_build(
             # full-path identity (normalized URI), never basename: partition
             # directories share part-file names
             nf = _norm_path(f)
-            key = nf if nf in per_file else None
-            if key is None:
-                continue  # empty file: nothing to sketch, re-listed next run
-            sk = agg.merge_many(per_file[key])
-            est = agg.finalize(sk)
-            est_val = int(next(iter(est.values())))
+            sk = est_val = None  # no row of the file counts
+            if nf in per_file:
+                sk = agg.merge_many(per_file[nf])
+                est_val = int(next(iter(agg.finalize(sk).values())))
             out_rows.append({
                 "run_id": run_id,
                 "file": f,
-                "rows": per_file_rows[key],
+                "rows": per_file_rows.get(nf, 0),
                 "sketch": sk,
                 "estimate": est_val,
                 "wall_s": wall / len(chunk),
                 "committed_at": now,
             })
-        if out_rows:
-            _commit_lineage(ckpt_dir, out_rows)
+        _commit_lineage(ckpt_dir, out_rows)
         batches += 1
         processed += len(out_rows)
 
@@ -207,9 +205,10 @@ def resumable_sketch_build(
             final.column("rows").to_pylist(),
         ) if f in set(files)
     ]
-    if not have:
-        raise ValueError("no lineage rows after build")
-    merged = agg.merge_many([s for _, s, _ in have])
+    sketches = [s for _, s, _ in have if s is not None]
+    if not sketches:
+        raise ValueError("no input rows")
+    merged = agg.merge_many(sketches)
     est = agg.finalize(merged)
     return SketchJobResult(
         estimate=int(next(iter(est.values()))),

@@ -45,12 +45,14 @@ from pyspark.sql import types as T
 from .engine.aggregate import (
     SKETCH_COL,
     SketchAggregator,
+    _as_list,
     _canon,
+    counted_rows,
     reduce_sorted_groups,
     sketch_agg,
 )
 from .engine.cells import hash_probe_udf
-from .functions import _as_list, _drop_null_rows, _to_numpy_u64
+from .functions import _to_numpy_u64
 from .sketch import cms, countsketch
 
 __all__ = [
@@ -165,10 +167,8 @@ def cms_agg(
 ) -> DataFrame:
     """Per-group CMS sketches as a BinaryType column. ``weight_col`` makes
     each row add its weight instead of 1 (approximate SUM-by-key)."""
-    cols = [cols] if isinstance(cols, str) else list(cols)
-    group_by = _as_list(group_by)
     agg = CmsAggregator(d, log2_w, hashing, weight_col=weight_col)
-    return sketch_agg(_drop_null_rows(df, cols), cols, agg, group_by, finalize=False)
+    return sketch_agg(df, cols, agg, group_by, finalize=False)
 
 
 def cms_point_query_udf(sketch: bytes):
@@ -205,7 +205,7 @@ def cms_topk(
     if candidates_per_partition is None:
         candidates_per_partition = max(4 * k, 64)
     cap = max(8 * candidates_per_partition, 256)
-    src = _drop_null_rows(df, [col])
+    src = counted_rows(df, [col], weight_col)
     col_field = next(f for f in src.schema.fields if f.name == col)
 
     weighted = weight_col is not None
@@ -333,7 +333,7 @@ def cms_topk_verified(
         )
     wcol = (_int_weight_expr(weight_col) if weight_col
             else F.lit(1).cast("long"))
-    src = _drop_null_rows(df, [col])
+    src = counted_rows(df, [col], weight_col)
     return (
         src.filter(F.col(col).isin(cand_vals))
         .groupBy(col)
@@ -366,10 +366,10 @@ def cms_topk_shards(
     plain SQL: per-(shard, value) counts, a ``row_number`` cut that Spark
     plans as a ``WindowGroupLimit`` below the shuffle, and a sorted
     ``collect_list``. No Python stage ever holds a shard's data rows."""
-    shard_by = [shard_by] if isinstance(shard_by, str) else list(shard_by)
-    src = _drop_null_rows(df, [col])
     agg = CmsAggregator(d, log2_w, weight_col=weight_col)
-    sketches = sketch_agg(src, [col], agg, shard_by, finalize=False)
+    sketches = sketch_agg(df, col, agg, shard_by, finalize=False)
+    shard_by = _as_list(shard_by)
+    src = counted_rows(df, [col], weight_col)
     w = (_int_weight_expr(weight_col) if weight_col is not None
          else F.lit(1).cast("long"))
     rank = Window.partitionBy(*shard_by).orderBy(F.desc("__n"), F.asc("__v"))
@@ -532,11 +532,8 @@ def countsketch_agg(
     hashing: str = "xxhash64",
 ) -> DataFrame:
     """Per-group count sketches as a BinaryType column."""
-    cols = [cols] if isinstance(cols, str) else list(cols)
-    group_by = _as_list(group_by)
     agg = CountSketchAggregator(d, log2_w, hashing)
-    return sketch_agg(_drop_null_rows(df, cols), cols, agg, group_by,
-                      finalize=False)
+    return sketch_agg(df, cols, agg, group_by, finalize=False)
 
 
 def countsketch_f2(
@@ -553,10 +550,8 @@ def countsketch_f2(
     Exact whenever the median row has no colliding pair of distinct values
     (value space far below w); unbiased with rel. error O(1/sqrt(w))
     otherwise."""
-    cols = [cols] if isinstance(cols, str) else list(cols)
-    group_by = _as_list(group_by)
     agg = CountSketchAggregator(d, log2_w, hashing)
-    return sketch_agg(_drop_null_rows(df, cols), cols, agg, group_by)
+    return sketch_agg(df, cols, agg, group_by)
 
 
 def cs_point_query_udf(sketch: bytes):

@@ -28,8 +28,6 @@ NULL side of a merge is the empty sketch.
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import and_
 from typing import Any, Iterator
 
 import numpy as np
@@ -42,8 +40,13 @@ from pyspark.sql import types as T
 from .engine.aggregate import (
     SKETCH_COL,
     SketchAggregator,
+    _as_list,
+    _check_output_names,
+    _drop_null_rows,
     _group_field,
+    _value_cols,
     collect_merged,
+    rename_output,
     sketch_agg,
 )
 from .engine.cells import UNION, cell_udf
@@ -168,11 +171,6 @@ def _composite_register(cols: list[str], p: int) -> Column:
     return _hll_register_expr(F.xxhash64(*[F.col(c) for c in cols]), p)
 
 
-def _drop_null_rows(df: DataFrame, cols: list[str]) -> DataFrame:
-    # COUNT(DISTINCT a, b, ...) semantics: skip rows where any key is NULL
-    return df.filter(reduce(and_, [F.col(c).isNotNull() for c in cols]))
-
-
 def _register_sets(
     df: DataFrame,
     registers: list[Column],
@@ -239,30 +237,9 @@ def _finalize_sets(sets: pa.ListArray, p: int, sketch: bool) -> pa.Array:
     return pa.array(hll.estimate_histograms(hist, p).astype(np.int64))
 
 
-def _value_cols(cols: str | list[str]) -> list[str]:
-    cols = _as_list(cols)
-    if not cols:
-        raise ValueError("need at least one column")
-    return cols
-
-
-def _check_output_names(group_by: list[str], tail: list[str]) -> None:
-    """Each output column is one Arrow field of the finalize: a repeated
-    name must fail here, not in the executor."""
-    names = [*group_by, *tail]
-    clash = sorted({n for n in names if names.count(n) > 1})
-    if clash:
-        raise ValueError(f"output field(s) {clash} repeat: group and "
-                         "result columns need distinct names")
-
-
 def _check_engine(engine: str | None) -> None:
     if engine not in (None, "arrow", "jvm"):
         raise ValueError(f"engine must be 'arrow' or 'jvm': {engine!r}")
-
-
-def _as_list(cols: str | list[str] | None) -> list[str]:
-    return [cols] if isinstance(cols, str) else list(cols or [])
 
 
 def approx_distinct(
@@ -290,16 +267,14 @@ def approx_distinct(
     other value raises) and run the same path as omitting it."""
     hll._validate_p(p)
     _check_engine(engine)
+    if hashing != "spark":
+        out = sketch_agg(df, cols, HllAggregator(p, hashing), group_by)
+        return rename_output(out, "approx_distinct", alias)
     cols, group_by = _value_cols(cols), _as_list(group_by)
     _check_output_names(group_by, [alias])
-    clean = _drop_null_rows(df, cols)
-    if hashing != "spark":
-        agg = HllAggregator(p=p, hashing=hashing)
-        out = sketch_agg(clean, cols, agg, group_by)
-        return out.withColumnRenamed("approx_distinct", alias)
     return _register_sets(
-        clean, [_composite_register(cols, p)], group_by, p,
-        [T.StructField(alias, T.LongType(), False)],
+        _drop_null_rows(df, cols), [_composite_register(cols, p)], group_by,
+        p, [T.StructField(alias, T.LongType(), False)],
     )
 
 
@@ -316,15 +291,14 @@ def hll_sketch_agg(
     group's register set (the ``approx_distinct`` path); they equal the
     bytes of ``sketch_agg(HllAggregator(p), finalize=False)``."""
     hll._validate_p(p)
+    if hashing != "spark":
+        return sketch_agg(df, cols, HllAggregator(p, hashing), group_by,
+                          finalize=False)
     cols, group_by = _value_cols(cols), _as_list(group_by)
     _check_output_names(group_by, [SKETCH_COL])
-    clean = _drop_null_rows(df, cols)
-    if hashing != "spark":
-        agg = HllAggregator(p=p, hashing=hashing)
-        return sketch_agg(clean, cols, agg, group_by, finalize=False)
     return _register_sets(
-        clean, [_composite_register(cols, p)], group_by, p,
-        [T.StructField(SKETCH_COL, T.BinaryType(), False)], sketch=True,
+        _drop_null_rows(df, cols), [_composite_register(cols, p)], group_by,
+        p, [T.StructField(SKETCH_COL, T.BinaryType(), False)], sketch=True,
     )
 
 
@@ -338,9 +312,7 @@ def hll_merged_sketch(
     """Distributed partial build + CLUSTER-side tree-merge (one row to the
     driver); ``fan_in`` caps partials per merge task — lower it for
     byte-heavy custom precisions."""
-    cols = _value_cols(cols)
-    agg = HllAggregator(p=p, hashing=hashing)
-    return collect_merged(_drop_null_rows(df, cols), cols, agg, fan_in=fan_in)
+    return collect_merged(df, cols, HllAggregator(p, hashing), fan_in=fan_in)
 
 
 @cell_udf(T.LongType())
@@ -587,8 +559,6 @@ def approx_distinct_packed(
     the distributed form of the reference's byte-buffer/Stream ingest
     (``AddAs*``; Streams arrive as Structured Streaming micro-batches of
     binary rows instead, see hyperloglog_spark.streaming)."""
-    group_by = _as_list(group_by)
     agg = PackedBinaryHllAggregator(value_type=value_type, p=p)
-    return sketch_agg(
-        df.filter(F.col(binary_col).isNotNull()), [binary_col], agg, group_by
-    ).withColumnRenamed("approx_distinct", alias)
+    return rename_output(sketch_agg(df, binary_col, agg, group_by),
+                         "approx_distinct", alias)

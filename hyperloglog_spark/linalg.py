@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .engine.aggregate import SketchAggregator, collect_merged, sketch_agg
-from .functions import _as_list
 from .sketch import fd
 
 __all__ = ["FdAggregator", "fd_build", "fd_agg", "fd_gram_long",
@@ -83,10 +82,7 @@ class FdAggregator(SketchAggregator):
 def fd_build(df: DataFrame, vec_col: str, ell: int = fd.DEFAULT_ELL,
              fan_in: int = 32) -> bytes:
     """Distributed FD build -> driver-held sketch bytes (<= 2*ell*d*8 + 22)."""
-    return collect_merged(
-        df.filter(F.col(vec_col).isNotNull()), [vec_col], FdAggregator(ell),
-        fan_in=fan_in,
-    )
+    return collect_merged(df, vec_col, FdAggregator(ell), fan_in=fan_in)
 
 
 def fd_agg(
@@ -96,11 +92,8 @@ def fd_agg(
     ell: int = fd.DEFAULT_ELL,
 ) -> DataFrame:
     """Per-group FD sketches as a BinaryType column."""
-    group_by = _as_list(group_by)
-    return sketch_agg(
-        df.filter(F.col(vec_col).isNotNull()), [vec_col],
-        FdAggregator(ell), group_by, finalize=False,
-    )
+    return sketch_agg(df, vec_col, FdAggregator(ell), group_by,
+                      finalize=False)
 
 
 def fd_gram_long(

@@ -20,10 +20,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .engine.aggregate import SketchAggregator, collect_merged, sketch_agg
+from .engine.aggregate import (
+    SketchAggregator,
+    _as_list,
+    collect_merged,
+    sketch_agg,
+)
 from .engine.cells import hash_probe_udf
 from .frequency import _hash_expr
-from .functions import _as_list, _drop_null_rows, _to_numpy_u64
+from .functions import _to_numpy_u64
 from .sketch import bloom, cbf
 
 __all__ = [
@@ -78,13 +83,11 @@ def bloom_build(
     """Distributed build -> cluster-side tree-merge -> driver-held filter
     bytes. A billion-key filter is ~1 GiB per partial: ``fan_in`` caps how
     many of those any merge task holds (lower it for very large m_bits)."""
-    cols = [cols] if isinstance(cols, str) else list(cols)
     if m_bits is None or k is None:
         if expected_items is None:
             raise ValueError("pass expected_items (or explicit m_bits and k)")
         m_bits, k = bloom.optimal_params(expected_items, fpp)
-    agg = BloomAggregator(m_bits, k)
-    return collect_merged(_drop_null_rows(df, cols), cols, agg, fan_in=fan_in)
+    return collect_merged(df, cols, BloomAggregator(m_bits, k), fan_in=fan_in)
 
 
 def bloom_agg(
@@ -95,10 +98,8 @@ def bloom_agg(
     k: int = bloom.DEFAULT_K,
 ) -> DataFrame:
     """Per-group Bloom sketches as a BinaryType column."""
-    cols = [cols] if isinstance(cols, str) else list(cols)
-    group_by = _as_list(group_by)
-    agg = BloomAggregator(m_bits, k)
-    return sketch_agg(_drop_null_rows(df, cols), cols, agg, group_by, finalize=False)
+    return sketch_agg(df, cols, BloomAggregator(m_bits, k), group_by,
+                      finalize=False)
 
 
 def _probe_hash(cols: list[str], hashing: str) -> Column:
@@ -119,9 +120,8 @@ def with_might_contain(
     8-byte hashes. The filter bytes ride along as a closure constant
     (broadcast-sized: m_bits/8 bytes). A key with a NULL column gives
     NULL."""
-    cols = [cols] if isinstance(cols, str) else list(cols)
     probe = hash_probe_udf(bloom.might_contain, sketch, T.BooleanType())
-    return df.withColumn(alias, probe(_probe_hash(cols, "xxhash64")))
+    return df.withColumn(alias, probe(_probe_hash(_as_list(cols), "xxhash64")))
 
 
 def bloom_filtered_join(
@@ -162,7 +162,7 @@ def bloom_filtered_join(
             "bloom_filtered_join is sound only for how in "
             f"('inner', 'left_semi'); got {how!r}"
         )
-    on = [on] if isinstance(on, str) else list(on)
+    on = _as_list(on)
     if expected_items is None and (m_bits is None or k is None):
         expected_items = max(small.count(), 1)
     flt = bloom_build(
@@ -180,7 +180,9 @@ def bloom_filtered_join(
 class CbfAggregator(SketchAggregator):
     """Counting Bloom filter (Fan et al. 2000): deletion-capable membership.
 
-    Rows carry a signed delta (+1 insert / -1 delete; any int64 weight).
+    Rows carry a signed delta (+1 insert / -1 delete; any int64 weight),
+    read from ``weight_col`` (the ``delta_col`` argument); a NULL delta
+    is no update.
     Partials are Z-valued counter vectors and the merge is vector addition —
     a commutative group, so a partition holding only the delete rows of a
     key merges correctly with the partition holding its inserts, in any
@@ -199,7 +201,7 @@ class CbfAggregator(SketchAggregator):
     ):
         cbf.empty(log2_m, k)  # validate eagerly
         self.log2_m, self.k = log2_m, k
-        self.delta_col, self.hashing = delta_col, hashing
+        self.weight_col, self.hashing = delta_col, hashing
         self.finalize_fields = [
             T.StructField("net_added", T.LongType(), False),
             T.StructField("fill_ratio", T.DoubleType(), False),
@@ -207,8 +209,8 @@ class CbfAggregator(SketchAggregator):
 
     def prepare_columns(self, df: DataFrame, cols: list[str]):
         delta = (
-            F.col(self.delta_col).cast("long")
-            if self.delta_col is not None
+            F.col(self.weight_col).cast("long")
+            if self.weight_col is not None
             else F.lit(1).cast("long")
         )
         return [_hash_expr(cols, self.hashing), delta]
@@ -238,9 +240,8 @@ def cbf_build(
 ) -> bytes:
     """Distributed counting-Bloom build -> driver-held filter bytes.
     ``delta_col`` (int, +insert/-delete) defaults to +1 per row."""
-    cols = [cols] if isinstance(cols, str) else list(cols)
     agg = CbfAggregator(log2_m, k, delta_col=delta_col, hashing=hashing)
-    return collect_merged(_drop_null_rows(df, cols), cols, agg, fan_in=fan_in)
+    return collect_merged(df, cols, agg, fan_in=fan_in)
 
 
 def cbf_agg(
@@ -253,11 +254,8 @@ def cbf_agg(
     hashing: str = "xxhash64",
 ) -> DataFrame:
     """Per-group counting-Bloom sketches as a BinaryType column."""
-    cols = [cols] if isinstance(cols, str) else list(cols)
-    group_by = _as_list(group_by)
     agg = CbfAggregator(log2_m, k, delta_col=delta_col, hashing=hashing)
-    return sketch_agg(_drop_null_rows(df, cols), cols, agg, group_by,
-                      finalize=False)
+    return sketch_agg(df, cols, agg, group_by, finalize=False)
 
 
 def with_cbf_might_contain(
@@ -271,9 +269,8 @@ def with_cbf_might_contain(
     negatives for keys with positive net insert count; raises if the merged
     filter has negative cells (deletes of never-inserted keys). A key with
     a NULL column gives NULL."""
-    cols = [cols] if isinstance(cols, str) else list(cols)
     sketch = bytes(sketch)
     cbf.validate(sketch)  # fail fast on the driver, not inside executors
 
     probe = hash_probe_udf(cbf.might_contain, sketch, T.BooleanType())
-    return df.withColumn(alias, probe(_probe_hash(cols, hashing)))
+    return df.withColumn(alias, probe(_probe_hash(_as_list(cols), hashing)))

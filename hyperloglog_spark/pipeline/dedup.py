@@ -31,6 +31,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..engine.aggregate import _as_list
+
 # MinHash permutation family: Dietzfelbinger multiply-shift,
 #   h_j(s) = ((a_j * s + b_j) mod 2^64) >> 3,   a_j odd
 # 2-approximately-universal on the kept top 61 bits (collision probability
@@ -71,8 +73,7 @@ def exact_dedup(
     fingerprint (xxhash64 ⊕ md5 of the concatenated values), not the
     payload; a collision needs a simultaneous 64-bit AND 128-bit clash.
     """
-    if isinstance(cols, str):
-        cols = [cols]
+    cols = _as_list(cols)
     keep_fn = {"min": F.min, "max": F.max}[keep]
     fp_a = F.xxhash64(*[F.col(c) for c in cols])
     fp_b = F.md5(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in cols]))

@@ -24,6 +24,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..engine.aggregate import _as_list
+
 
 def _sample_key(id_col: str, hashing: str, salt: int) -> F.Column:
     """64-bit sample key of (id, salt). "md5" keys (top 60 md5 bits) are
@@ -113,7 +115,7 @@ def stratified_sample(
     of all its rows), phase 2 the global per-group re-take-k window over
     that reduced set. Byte-identical to the one-phase window by the min-k
     merge law (ties impossible: 64-bit keys + id tiebreak)."""
-    group_by = [group_by] if isinstance(group_by, str) else list(group_by)
+    group_by = _as_list(group_by)
     key = _sample_key(id_col, hashing, salt)
     keyed = df.withColumn("sample_key", key)
     reduced = _local_group_bottomk(keyed, group_by, id_col, k_per_group)

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..engine.aggregate import _as_list
+
 __all__ = ["asof_join"]
 
 _TS = "__ts"
@@ -88,7 +90,7 @@ def asof_join(
         )
     if bucket_s is not None and bucket_s <= 0:
         raise ValueError(f"bucket_s must be positive: {bucket_s}")
-    by = [by] if isinstance(by, str) else list(by)
+    by = _as_list(by)
     right_on = right_on or left_on
     if right_cols is None:
         right_cols = [c for c in right.columns if c not in (*by, right_on)]

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .engine.aggregate import SketchAggregator, sketch_agg
-from .functions import _as_list, _drop_null_rows
 from .sketch import kll, tdigest
 
 __all__ = [
@@ -194,18 +193,8 @@ def approx_quantiles_weighted(
     n_copies — without re-exploding the duplicates. method='tdigest'
     (default) takes arbitrary positive weights; method='kll' requires
     integer weights (exact binary-decomposition placement)."""
-    group_by = _as_list(group_by)
-    if method == "tdigest":
-        agg: _QuantileAggregator = WeightedTDigestAggregator(
-            qs, weight_col=weight_col, **params
-        )
-    elif method == "kll":
-        agg = WeightedKllAggregator(qs, weight_col=weight_col, **params)
-    else:
-        raise ValueError(f"method must be 'kll' or 'tdigest', got {method!r}")
-    return sketch_agg(
-        _drop_null_rows(df, [col, weight_col]), [col], agg, group_by
-    )
+    agg = _method_agg(method, "weighted", qs, weight_col=weight_col, **params)
+    return sketch_agg(df, col, agg, group_by)
 
 
 class _TrimmedMeanMixin:
@@ -256,14 +245,8 @@ def approx_trimmed_mean(
     (k >= n) the result is EXACTLY the SQL fractional-overlap
     order-statistic rule; beyond, boundaries carry the backend's rank
     error."""
-    group_by = _as_list(group_by)
-    if method == "kll":
-        agg: _QuantileAggregator = KllTrimmedMeanAggregator(q0, q1, **params)
-    elif method == "tdigest":
-        agg = TDigestTrimmedMeanAggregator(q0, q1, **params)
-    else:
-        raise ValueError(f"method must be 'kll' or 'tdigest', got {method!r}")
-    return sketch_agg(_drop_null_rows(df, [col]), [col], agg, group_by)
+    agg = _method_agg(method, "trimmed_mean", q0, q1, **params)
+    return sketch_agg(df, col, agg, group_by)
 
 
 def _r_name(v: float) -> str:
@@ -333,22 +316,29 @@ def approx_rank(
     approx_quantiles. method='kll' (default, whp rank bound) or
     'tdigest' (centroid-midrank interpolation, typically tighter
     mid-distribution, no worst-case bound)."""
-    group_by = _as_list(group_by)
-    if method == "kll":
-        agg: _QuantileAggregator = KllRankAggregator(values, **params)
-    elif method == "tdigest":
-        agg = TDigestRankAggregator(values, **params)
-    else:
+    return sketch_agg(df, col, _method_agg(method, "rank", values, **params),
+                      group_by)
+
+
+#: the one ``method`` dispatch: aggregator class per backend and form
+_METHODS = {
+    "kll": {"quantiles": KllAggregator, "weighted": WeightedKllAggregator,
+            "trimmed_mean": KllTrimmedMeanAggregator,
+            "rank": KllRankAggregator},
+    "tdigest": {"quantiles": TDigestAggregator,
+                "weighted": WeightedTDigestAggregator,
+                "trimmed_mean": TDigestTrimmedMeanAggregator,
+                "rank": TDigestRankAggregator},
+}
+
+
+def _method_agg(method: str, form: str, *args,
+                **params) -> _QuantileAggregator:
+    """The ``form`` aggregator of backend ``method``, built from ``args``
+    and ``params``."""
+    if method not in _METHODS:
         raise ValueError(f"method must be 'kll' or 'tdigest', got {method!r}")
-    return sketch_agg(_drop_null_rows(df, [col]), [col], agg, group_by)
-
-
-def _make_agg(method: str, qs=None, **params) -> _QuantileAggregator:
-    if method == "kll":
-        return KllAggregator(qs, **params)
-    if method == "tdigest":
-        return TDigestAggregator(qs, **params)
-    raise ValueError(f"method must be 'kll' or 'tdigest', got {method!r}")
+    return _METHODS[method][form](*args, **params)
 
 
 def approx_quantiles(
@@ -367,9 +357,8 @@ def approx_quantiles(
     columns — the sketch's values at ranks q -/+ eps for the backend's whp
     rank-error bound eps (the reference TestValidity shape: the exact
     q-quantile lies in [lo, hi] with high probability)."""
-    group_by = _as_list(group_by)
-    agg = _make_agg(method, qs, **params)
-    return sketch_agg(_drop_null_rows(df, [col]), [col], agg, group_by)
+    return sketch_agg(df, col, _method_agg(method, "quantiles", qs, **params),
+                      group_by)
 
 
 def kll_agg(
@@ -378,10 +367,7 @@ def kll_agg(
     group_by: str | list[str] | None = None,
     k: int = kll.DEFAULT_K,
 ) -> DataFrame:
-    group_by = _as_list(group_by)
-    agg = KllAggregator(k=k)
-    return sketch_agg(_drop_null_rows(df, [col]), [col], agg, group_by,
-                      finalize=False)
+    return sketch_agg(df, col, KllAggregator(k=k), group_by, finalize=False)
 
 
 def tdigest_agg(
@@ -390,7 +376,5 @@ def tdigest_agg(
     group_by: str | list[str] | None = None,
     delta: int = tdigest.DEFAULT_DELTA,
 ) -> DataFrame:
-    group_by = _as_list(group_by)
-    agg = TDigestAggregator(delta=delta)
-    return sketch_agg(_drop_null_rows(df, [col]), [col], agg, group_by,
+    return sketch_agg(df, col, TDigestAggregator(delta=delta), group_by,
                       finalize=False)

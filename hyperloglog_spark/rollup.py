@@ -37,11 +37,13 @@ from pyspark.sql import types as T
 from .engine.aggregate import (
     SKETCH_COL,
     SketchAggregator,
+    _as_list,
     premerged_sketch,
+    rename_output,
     sketch_agg,
 )
 from .engine.cells import cell_udf
-from .functions import _as_list, hll_estimate_udf
+from .functions import hll_estimate_udf
 from .sketch import (
     bloom,
     cbf,
@@ -122,19 +124,16 @@ def merge_sketches(
     before merging — for stores whose shards were written at different
     precisions over time (see ``sketch.hll.fold``).
     """
-    group_cols = _as_list(group_by)
-    cells = df.filter(F.col(sketch_col).isNotNull())
     agg = _StoredCells(fold_to)
-    if not group_cols:
+    if group_by:
+        merged = sketch_agg(df, sketch_col, agg, group_by, finalize=False)
+    else:
         # global rollup: tree-reduce the per-partition partials on the
         # cluster — a single-group merge would funnel one partial per
         # input partition into ONE task, a cliff for byte-heavy stored
         # cells (Bloom/CBF) at 10^5+ partitions
-        merged = premerged_sketch(cells, [sketch_col], agg)
-    else:
-        merged = sketch_agg(cells, [sketch_col], agg, group_cols,
-                            finalize=False)
-    return merged.withColumnRenamed(SKETCH_COL, alias)
+        merged = premerged_sketch(df, sketch_col, agg)
+    return rename_output(merged, SKETCH_COL, alias)
 
 
 def hll_rollup(

@@ -34,7 +34,6 @@ from pyspark.sql import types as T
 
 from .engine.aggregate import SKETCH_COL, SketchAggregator, sketch_agg
 from .engine.cells import LEFT, UNION, cell_udf
-from .functions import _as_list, _drop_null_rows
 from .sketch import theta
 
 __all__ = [
@@ -105,12 +104,8 @@ def theta_sketch_agg(
 ) -> DataFrame:
     """Merged theta sketch (BinaryType ``sketch``) per group — store it,
     union it across shards, intersect it across slices later."""
-    cols = [cols] if isinstance(cols, str) else list(cols)
-    group_by = _as_list(group_by)
     agg = ThetaAggregator(k=k, hashing=hashing, salt=salt)
-    return sketch_agg(
-        _drop_null_rows(df, cols), cols, agg, group_by, finalize=False
-    )
+    return sketch_agg(df, cols, agg, group_by, finalize=False)
 
 
 def theta_distinct(
@@ -125,10 +120,8 @@ def theta_distinct(
     """Distinct-count estimate via the theta state (exact below k). Use
     ``approx_distinct`` (HLL) when only union/rollup matters — better
     accuracy per byte; use this when the sets will also be intersected."""
-    cols = [cols] if isinstance(cols, str) else list(cols)
-    group_by = _as_list(group_by)
     agg = ThetaAggregator(k=k, hashing=hashing, salt=salt, alias=alias)
-    return sketch_agg(_drop_null_rows(df, cols), cols, agg, group_by)
+    return sketch_agg(df, cols, agg, group_by)
 
 
 @cell_udf(T.LongType())

@@ -153,16 +153,3 @@ def fnv1a64_binary(blobs) -> np.ndarray:
     np.cumsum(lens, out=offsets[1:])
     return fnv1a64_bytes_batch(flat, offsets, unit="u1")
 
-
-def hash_any(values, kind: str) -> np.ndarray:
-    """Dispatch: 'int' → mix64, 'str' → fnv1a64_utf16le, 'bytes' → fnv1a64_binary,
-    'prehashed' → reinterpret as uint64."""
-    if kind == "int":
-        return mix64(values)
-    if kind == "str":
-        return fnv1a64_utf16le(values)
-    if kind == "bytes":
-        return fnv1a64_binary(values)
-    if kind == "prehashed":
-        return _as_u64(values)
-    raise ValueError(f"unknown hash kind: {kind}")

@@ -28,10 +28,6 @@ DEFAULT_DELTA = 100
 _HDR = struct.Struct("<HQddI")
 
 
-def _k1(q: np.ndarray, delta: int) -> np.ndarray:
-    return (delta / (2 * math.pi)) * np.arcsin(2 * q - 1)
-
-
 def _compress(
     means: np.ndarray, weights: np.ndarray, delta: int
 ) -> tuple[np.ndarray, np.ndarray]:

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..engine.aggregate import _as_list
+
 __all__ = ["session_window_stats"]
 
 
@@ -70,7 +72,7 @@ def session_window_stats(
     aggregation). The aggregation is a single exchange on the group keys;
     partial aggregation applies map-side as usual.
     """
-    key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
+    key_cols = _as_list(key_cols)
     src = df
     if watermark_delay is not None:
         src = src.withWatermark(ts_col, watermark_delay)

@@ -11,8 +11,10 @@ mergeable, and update-in-place. The reference's ``AddAs*(Stream)`` ingest
 
 Value preparation (hashing, casts) stays JVM-side exactly as in the batch
 path — the same ``SketchAggregator`` drives both (here each pandas chunk of
-a group is one ``build(cols, [0, n])`` run), so batch and streaming
-estimates are bit-identical on identical input (asserted in tests).
+a group is one ``build(cols, [0, n])`` run), and the same front door
+(``engine.aggregate.sketch_input``: column lists, name checks, the NULL
+rule, the ``-0.0`` key fold) feeds both, so batch and streaming estimates
+are bit-identical on identical input (asserted in tests).
 
 Scale notes: state per group is one sketch blob in the state store; the
 shuffle per micro-batch moves raw rows once to group them (unavoidable in
@@ -33,13 +35,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..engine.aggregate import SketchAggregator
-from ..functions import (
-    HllAggregator,
-    _as_list,
-    _drop_null_rows,
-    hll_sketch_agg,
+from ..engine.aggregate import (
+    SKETCH_COL,
+    SketchAggregator,
+    _group_field,
+    rename_output,
+    sketch_input,
 )
+from ..functions import HllAggregator, hll_sketch_agg
 
 
 def streaming_sketch_agg(
@@ -59,39 +62,24 @@ def streaming_sketch_agg(
     rollups / point queries (the update-mode sibling of
     ``sketch_shard_sink``).
     """
-    if isinstance(value_cols, str):
-        value_cols = [value_cols]
-    group_cols = [group_cols] if isinstance(group_cols, str) else list(group_cols)
+    fin_names = [f.name for f in agg.finalize_fields]
+    proj, group_cols = sketch_input(
+        df, value_cols, agg, group_cols,
+        fin_names + [SKETCH_COL] if emit_sketch else fin_names)
     if not group_cols:
         raise ValueError("streaming aggregation needs ≥1 group column "
                          "(use a literal for a global stream)")
+    value_names = proj.columns[len(group_cols):]
 
+    out_fields = [_group_field(df, c) for c in group_cols] + list(
+        agg.finalize_fields)
     if emit_sketch:
-        taken = set(group_cols) | {f.name for f in agg.finalize_fields}
-        if "sketch" in taken:
-            raise ValueError(
-                "emit_sketch=True appends a column named 'sketch', which "
-                f"collides with an existing output column in {sorted(taken)}"
-            )
-    prepared = agg.prepare_columns(df, value_cols)
-    value_names = [f"__v{i}" for i in range(len(prepared))]
-    proj = df.select(
-        *[F.col(c) for c in group_cols],
-        *[c.alias(n) for c, n in zip(prepared, value_names)],
-    )
-
-    group_fields = [
-        f for f in df.schema.fields if f.name in group_cols
-    ]
-    out_fields = group_fields + list(agg.finalize_fields)
-    if emit_sketch:
-        out_fields = out_fields + [T.StructField("sketch", T.BinaryType())]
+        out_fields = out_fields + [T.StructField(SKETCH_COL, T.BinaryType())]
     out_schema = T.StructType(out_fields)
-    state_schema = T.StructType([T.StructField("sketch", T.BinaryType())])
+    state_schema = T.StructType([T.StructField(SKETCH_COL, T.BinaryType())])
     build = agg.build
     merge_many = agg.merge_many
     finalize = agg.finalize
-    fin_names = [f.name for f in agg.finalize_fields]
 
     def update_fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -114,7 +102,7 @@ def streaming_sketch_agg(
         for n in fin_names:
             row[n] = [vals[n]]
         if emit_sketch:
-            row["sketch"] = [merged]
+            row[SKETCH_COL] = [merged]
         yield pd.DataFrame(row)
 
     return proj.groupBy(*group_cols).applyInPandasWithState(
@@ -131,11 +119,8 @@ def streaming_approx_distinct(
     alias: str = "approx_distinct",
 ) -> DataFrame:
     """Streaming HLL distinct per group (update mode, exact restarts)."""
-    key_cols = [cols] if isinstance(cols, str) else list(cols)
-    df = _drop_null_rows(df, key_cols)  # COUNT(DISTINCT ...) null semantics
-    return streaming_sketch_agg(
-        df, cols, HllAggregator(p=p), group_by
-    ).withColumnRenamed("approx_distinct", alias)
+    out = streaming_sketch_agg(df, cols, HllAggregator(p=p), group_by)
+    return rename_output(out, "approx_distinct", alias)
 
 
 def streaming_approx_quantiles(
@@ -154,12 +139,10 @@ def streaming_approx_quantiles(
     value-for-value, and beyond it the published rank-error bounds hold
     (micro-batch splits only change which compactions fire, not the
     guarantee)."""
-    from ..quantiles import _make_agg
+    from ..quantiles import _method_agg
 
-    agg = _make_agg(method, qs, **params)
-    return streaming_sketch_agg(
-        _drop_null_rows(df, [col]), [col], agg, group_by
-    )
+    agg = _method_agg(method, "quantiles", qs, **params)
+    return streaming_sketch_agg(df, col, agg, group_by)
 
 
 def streaming_approx_quantiles_weighted(
@@ -178,17 +161,10 @@ def streaming_approx_quantiles_weighted(
     KLL: integer weights, exact binary-decomposition placement) riding the
     generic skeleton; in the KLL no-compaction regime the streamed state
     is byte-identical to the batch build over the same rows."""
-    from ..quantiles import WeightedKllAggregator, WeightedTDigestAggregator
+    from ..quantiles import _method_agg
 
-    if method == "tdigest":
-        agg = WeightedTDigestAggregator(qs, weight_col=weight_col, **params)
-    elif method == "kll":
-        agg = WeightedKllAggregator(qs, weight_col=weight_col, **params)
-    else:
-        raise ValueError(f"method must be 'kll' or 'tdigest', got {method!r}")
-    return streaming_sketch_agg(
-        _drop_null_rows(df, [col, weight_col]), [col], agg, group_by
-    )
+    agg = _method_agg(method, "weighted", qs, weight_col=weight_col, **params)
+    return streaming_sketch_agg(df, col, agg, group_by)
 
 
 def streaming_cms_sketches(
@@ -210,9 +186,7 @@ def streaming_cms_sketches(
         d if d is not None else cms.DEFAULT_D,
         log2_w if log2_w is not None else cms.DEFAULT_LOG2_W,
     )
-    return streaming_sketch_agg(
-        _drop_null_rows(df, [col]), [col], agg, group_by, emit_sketch=True
-    )
+    return streaming_sketch_agg(df, col, agg, group_by, emit_sketch=True)
 
 
 def streaming_windowed_distinct(
@@ -278,12 +252,9 @@ def sketch_shard_sink(
     Returns the started StreamingQuery's writer — call
     ``.trigger(...).start()`` (or ``.trigger(availableNow=True)``) on it.
     """
-    key_cols = [cols] if isinstance(cols, str) else list(cols)
-    groups = _as_list(group_by)
-
     def write_batch(bdf, bid: int) -> None:
         if not bdf.isEmpty():
-            (hll_sketch_agg(bdf, key_cols, group_by=groups, p=p)
+            (hll_sketch_agg(bdf, cols, group_by=group_by, p=p)
              .withColumn("batch_id", F.lit(bid))
              .write.mode("append").parquet(path))
 

@@ -15,7 +15,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .frequency import cms_topk
-from .functions import _as_list, approx_distinct
+from .engine.aggregate import _as_list
+from .functions import approx_distinct
 from .membership import bloom_build, with_might_contain
 from .quantiles import approx_quantiles
 
@@ -145,9 +146,7 @@ def sessionize(
     by conversation length, which is exactly why the north rule keys
     sessions on conv_id and not on a global entity.
     """
-    partition_by = (
-        [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    )
+    partition_by = _as_list(partition_by)
     order_by = _as_list(order_by)
     # NTZ -> TIMESTAMP -> epoch seconds (session TZ pinned UTC by get_spark)
     epoch = F.col(ts_col).cast("timestamp").cast("double")
@@ -179,9 +178,7 @@ def session_stats(
     the groupBy on (key, session_idx) — partial aggregation runs map-side
     first, so the second exchange carries one row per session, not per
     event."""
-    partition_by = (
-        [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    )
+    partition_by = _as_list(partition_by)
     s = sessionize(df, partition_by, ts_col, gap_s, order_by=order_by)
     epoch = F.col(ts_col).cast("timestamp").cast("double")
     return (

@@ -170,3 +170,29 @@ def duck_exact_glob(pattern: str) -> int:
     return duckdb.sql(
         f"SELECT count(DISTINCT conv_id) FROM '{pattern}/*.parquet'"
     ).fetchone()[0]
+
+
+def test_file_with_no_counted_row_is_committed(spark, tmp_path):
+    """A file whose value column is all NULL adds nothing but still commits
+    its lineage row (rows=0, no sketch): a resume scans nothing again."""
+    import pyarrow as pa
+
+    root = str(tmp_path / "nulls")
+    os.makedirs(root)
+    pq.write_table(pa.table({"v": pa.array(["a", "b", "c"])}),
+                   f"{root}/part-0.parquet")
+    pq.write_table(pa.table({"v": pa.array([None, None], pa.string())}),
+                   f"{root}/part-1.parquet")
+    ck = str(tmp_path / "ck-nulls")
+    first = resumable_sketch_build(spark, root, "v", HllAggregator(), ck)
+    assert (first.files_processed, first.batches) == (2, 1)
+    assert (first.estimate, first.rows) == (3, 3)
+    lin = read_lineage(ck)
+    by_file = dict(zip([os.path.basename(f) for f in
+                        lin.column("file").to_pylist()],
+                       lin.column("rows").to_pylist()))
+    assert by_file == {"part-0.parquet": 3, "part-1.parquet": 0}
+    again = resumable_sketch_build(spark, root, "v", HllAggregator(), ck)
+    assert (again.files_resumed, again.files_processed, again.batches) == \
+        (2, 0, 0)
+    assert again.sketch == first.sketch

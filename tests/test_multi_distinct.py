@@ -1,9 +1,12 @@
 """approx_distinct_multi: N per-column distinct counts in ONE scan —
 estimates bit-identical to per-column approx_distinct, per-column null
-semantics, a single FileScan in the plan and no shuffle of data rows."""
+semantics, a single FileScan in the plan and no shuffle of data rows.
+Also the sketch input rules every entry point shares (empty column
+lists, repeated output names, NULL values and weights)."""
 
 from __future__ import annotations
 
+import functools
 import re
 
 import pytest
@@ -12,16 +15,32 @@ from pyspark.sql import functions as F
 from hyperloglog_spark import (
     approx_distinct,
     approx_distinct_multi,
+    approx_quantiles,
+    bloom_agg,
+    bloom_build,
+    cms_agg,
+    cms_topk,
+    countsketch_agg,
+    countsketch_f2,
+    hll_merged_sketch,
     hll_sketch_agg,
+    kll_agg,
+    theta_distinct,
+    theta_sketch_agg,
 )
-from hyperloglog_spark.engine.aggregate import sketch_agg
+from hyperloglog_spark.engine.aggregate import collect_merged, sketch_agg
+from hyperloglog_spark.engine.checkpoint import resumable_sketch_build
 from hyperloglog_spark.engine.plans import (
     assert_pruned_scan,
     exchange_inputs,
     n_exchanges,
     python_operators,
 )
+from hyperloglog_spark.frequency import cms_topk_shards
 from hyperloglog_spark.functions import HllAggregator
+from hyperloglog_spark.membership import cbf_agg, cbf_build
+from hyperloglog_spark.sketch import hll
+from hyperloglog_spark.streaming import streaming_sketch_agg
 
 
 def _reference(df, cols, p=14, group_by=()):
@@ -198,8 +217,15 @@ class TestMultiDistinctJvmEngine:
                 events, ["user_id", "event_type", "user_id"], engine=engine
             ).collect()
 
-    @pytest.mark.parametrize("build", [approx_distinct, hll_sketch_agg],
-                             ids=["approx_distinct", "hll_sketch_agg"])
+    @pytest.mark.parametrize("build", [
+        approx_distinct, hll_sketch_agg, cms_agg, countsketch_agg,
+        countsketch_f2, theta_sketch_agg, theta_distinct,
+        functools.partial(bloom_build, expected_items=100), bloom_agg,
+        cbf_build, cbf_agg,
+    ], ids=["approx_distinct", "hll_sketch_agg", "cms_agg",
+            "countsketch_agg", "countsketch_f2", "theta_sketch_agg",
+            "theta_distinct", "bloom_build", "bloom_agg", "cbf_build",
+            "cbf_agg"])
     def test_empty_cols_rejected_for_single_result(self, events, build):
         with pytest.raises(ValueError, match="at least one column"):
             build(events, [])
@@ -217,6 +243,25 @@ class TestMultiDistinctJvmEngine:
         pytest.param(lambda ev: approx_distinct(
             ev, "user_id", group_by=["event_type", "event_type"]),
             "event_type", id="repeated_group"),
+        pytest.param(lambda ev: kll_agg(
+            ev.withColumnRenamed("event_type", "sketch"), "value",
+            group_by="sketch"), "sketch", id="kll_sketch_is_group"),
+        pytest.param(lambda ev: cms_agg(
+            ev.withColumnRenamed("event_type", "sketch"), "user_id",
+            group_by="sketch"), "sketch", id="cms_sketch_is_group"),
+        pytest.param(lambda ev: theta_sketch_agg(
+            ev.withColumnRenamed("event_type", "sketch"), "user_id",
+            group_by="sketch"), "sketch", id="theta_sketch_is_group"),
+        pytest.param(lambda ev: bloom_agg(
+            ev, "user_id", group_by=["event_type", "event_type"]),
+            "event_type", id="bloom_repeated_group"),
+        pytest.param(lambda ev: approx_quantiles(
+            ev.withColumnRenamed("event_type", "q5"), "value", [0.5],
+            group_by="q5"), "q5", id="quantile_is_group"),
+        pytest.param(lambda ev: streaming_sketch_agg(
+            ev.withColumnRenamed("event_type", "sketch"), "user_id",
+            HllAggregator(), "sketch", emit_sketch=True),
+            "sketch", id="streaming_emitted_sketch_is_group"),
     ])
     def test_output_name_clash_rejected_before_dispatch(
         self, events, build, clash
@@ -227,11 +272,71 @@ class TestMultiDistinctJvmEngine:
                            match=rf"output field\(s\) \['{clash}'\]"):
             build(events).collect()
 
+    def test_finalized_output_may_group_by_sketch(self, events):
+        # the phase-1 partial column is internal: a finalized build
+        # grouped by a key named ``sketch`` has no ``sketch`` output
+        by_sketch = approx_quantiles(
+            events.withColumnRenamed("event_type", "sketch"), "value",
+            [0.5], group_by="sketch").orderBy("sketch").collect()
+        by_type = approx_quantiles(
+            events, "value", [0.5],
+            group_by="event_type").orderBy("event_type").collect()
+        assert [tuple(r) for r in by_sketch] == [tuple(r) for r in by_type]
+
     def test_unknown_engine_rejected(self, events):
         with pytest.raises(ValueError, match="engine must be"):
             approx_distinct_multi(events, ["user_id"], engine="jvmm")
         with pytest.raises(ValueError, match="engine must be"):
             approx_distinct(events, "user_id", engine="jvmm")
+
+
+class TestNullRule:
+    """A row adds nothing when a value column, or the weight (delta)
+    column, is NULL: every path equals its build over the frame without
+    those rows."""
+
+    @pytest.fixture(scope="class")
+    def frame(self, spark):
+        # 40 rows, 7 distinct non-NULL v; NULL v, w and d on other rows
+        rows = [(f"g{i % 2}",
+                 None if i % 5 == 4 else f"v{i % 7}",
+                 None if i % 6 == 1 else i % 3 + 1,
+                 None if i % 8 == 3 else (1 if i % 4 else -1))
+                for i in range(40)]
+        return spark.createDataFrame(rows, "g string, v string, w long, "
+                                     "d long")
+
+    @staticmethod
+    def _without_nulls(df, *cols):
+        return df.filter(F.col("v").isNotNull()).dropna(subset=list(cols))
+
+    def test_every_path_skips_null_rows(self, frame, tmp_path):
+        clean = self._without_nulls(frame)
+        frame.coalesce(2).write.parquet(str(tmp_path / "t"))
+        res = resumable_sketch_build(
+            frame.sparkSession, str(tmp_path / "t"), "v", HllAggregator(),
+            str(tmp_path / "ckpt"))
+        merged = collect_merged(frame, ["v"], HllAggregator())
+        want = collect_merged(clean, ["v"], HllAggregator())
+        assert merged == want == res.sketch
+        assert res.estimate == hll.estimate(merged) == 7
+        assert approx_distinct(frame, "v").first()[0] == 7
+        assert hll.estimate(hll_merged_sketch(frame, "v")) == 7
+
+        assert cbf_build(frame, "v", delta_col="d") == cbf_build(
+            self._without_nulls(frame, "d"), "v", delta_col="d")
+        weighted = self._without_nulls(frame, "w")
+        assert cms_agg(frame, "v", weight_col="w").first()[0] == cms_agg(
+            weighted, "v", weight_col="w").first()[0]
+
+    def test_heavy_hitters_skip_null_weights(self, frame):
+        weighted = self._without_nulls(frame, "w")
+        assert cms_topk(frame, "v", k=3, weight_col="w").collect() == \
+            cms_topk(weighted, "v", k=3, weight_col="w").collect()
+        assert cms_topk_shards(
+            frame, "v", "g", weight_col="w").orderBy("g").collect() == \
+            cms_topk_shards(
+                weighted, "v", "g", weight_col="w").orderBy("g").collect()
 
 
 class TestMultiEnvelopeBytes:

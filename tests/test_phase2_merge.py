@@ -494,11 +494,13 @@ def test_partials_equal_kernel_per_group(p1_data, p1_rows, name, make, cols,
                                          kernel):
     """One partition, one Arrow batch: each group's partial is the kind's
     kernel over that group's rows in input order, for 0, 1, 2 and 5 key
-    columns."""
+    columns. A row with a NULL value column adds nothing (the NULL rule
+    of ``sketch_input``), so a group of only such rows has no partial."""
     agg = make()
+    rows = [r for r in p1_rows if all(r[c] is not None for c in cols)]
     for group_cols in P1_KEYS:
         want = {key: (kernel(rs),)
-                for key, rs in _group_rows(p1_rows, group_cols).items()}
+                for key, rs in _group_rows(rows, group_cols).items()}
         got = _actual(sketch_partials(p1_data, cols, agg, group_cols),
                       group_cols)
         assert got == want, group_cols
